@@ -588,67 +588,6 @@ FROM s2 GROUP BY role, sess
 """
 
 
-def q_graph_group_session_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same session grouping as graph_group_session, but executed as a REAL
-    Structured Streaming job through the applyInPandasWithState keyed-state
-    final merge (streaming/stateful.py) — the north-star
-    'flatMapGroupsWithState-style' stage — with an availableNow trigger and
-    the idempotent sink; the returned DataFrame is the sink read back."""
-    import tempfile
-
-    from graph_stream_zoomer_spark.streaming.sink import IdempotentParquetSink
-    from graph_stream_zoomer_spark.streaming.stateful import stateful_session_summaries
-
-    cfg = _cfg(window=WindowConfig.session(600, "SECONDS"))
-    g = events_graph(load_events(spark, sf_dir), cfg)
-    op = (
-        GroupingBuilder()
-        .add_vertex_grouping_key(":label")
-        .add_vertex_aggregate_function(Count())
-        .set_window_config(cfg.window)
-        .set_config(cfg)
-        .build()
-    )
-    root = tempfile.mkdtemp(prefix="gsz_stateful_")
-    vdir = f"{root}/vertices"
-    # vertices are unique per turn (events_graph guarantees it); add a
-    # far-future sentinel so the final no-data batch's watermark closes
-    # every real session via the event-time timeout
-    v = g.vertices
-    sentinel = spark.range(1).select(
-        F.lit("__flush:0").alias("vertex_id"),
-        F.lit("2035-01-01 00:00:00").cast(v.schema["event_time"].dataType).alias("event_time"),
-        F.lit("__flush").alias("vertex_label"),
-        F.create_map().cast("map<string,string>").alias("vertex_properties"),
-    )
-    v.unionByName(sentinel).write.parquet(vdir)
-
-    stream = (
-        spark.readStream.schema(v.schema)
-        .parquet(vdir)
-        # parquet yields TIMESTAMP_NTZ; watermarks need TIMESTAMP (session
-        # tz is pinned UTC, so the cast is value-preserving)
-        .withColumn("event_time", F.col("event_time").cast("timestamp"))
-        .withWatermark("event_time", cfg.watermark_delay)
-    )
-    sv = stateful_session_summaries(op, stream)
-    sink = IdempotentParquetSink(f"{root}/out")
-    q = (
-        sv.writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", f"{root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = sink.read(spark)
-    return out.where(F.col("vertex_label") != "__flush").select(
-        F.col("vertex_label"),
-        F.unix_micros(F.col("window_start").cast("timestamp")).alias("session_start_us"),
-        F.col("count").cast("bigint").alias("cnt"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # training-data pipeline: dedup / similarity / text / multimodal
 # ---------------------------------------------------------------------------
@@ -3343,7 +3282,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "graph_group_full": q_graph_group_full,
         "graph_group_property_textlen": q_graph_group_property_textlen,
         "graph_group_sliding": q_graph_group_sliding,
-        "graph_group_session_stateful": q_graph_group_session_stateful,
+        "graph_group_session": q_graph_group_session,
         "graph_triples_join": q_graph_triples_join,
         "graph_pagerank": q_graph_pagerank,
         "graph_structure": q_graph_structure,
@@ -3376,10 +3315,9 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     them with the SAME rows/cols/hash check; all were driver-green in
     CORRECTNESS_r02/r03 artifacts when they occupied gate slots."""
     return {
-        # plan variants of graph_group_role_count (salted two-phase, Arrow
-        # extraction) — same rows, pinned by tests/test_grouping_goldens.py
+        # plan variant of graph_group_role_count (salted two-phase) — same
+        # rows, pinned by tests/test_grouping_goldens.py
         "graph_group_role_count_salted": _role_count_query({"salt_buckets": 8}),
-        "graph_group_role_count_arrow": _role_count_query({"use_arrow_extraction": True}),
         # beyond-reference aggregate kinds over the same grouping core as
         # graph_group_role_count/minmax (merge logic pinned in test_dataops)
         "graph_group_role_sets": q_graph_group_role_sets,
@@ -3388,9 +3326,6 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "graph_group_top_transitions": q_graph_group_top_transitions,
         # strict subset of graph_group_full (fewer grouping keys)
         "graph_group_window_users": q_graph_group_window_users,
-        # same oracle rows as graph_group_session_stateful (SQL
-        # session_window twin of the applyInPandasWithState path)
-        "graph_group_session": q_graph_group_session,
         # CEP machinery proven by cep_sequence_match; negation pinned in
         # tests/test_cep.py
         "cep_followed_by": q_cep_followed_by,
@@ -3487,7 +3422,7 @@ def oracle_sql() -> dict[str, str]:
         "graph_group_full": _FULL_SQL,
         "graph_group_property_textlen": _PROPERTY_SQL,
         "graph_group_sliding": _SLIDING_SQL,
-        "graph_group_session_stateful": _SESSION_SQL,
+        "graph_group_session": _SESSION_SQL,
         "graph_triples_join": _TRIPLES_JOIN_SQL,
         "graph_pagerank": _PAGERANK_SQL,
         "graph_structure": _GRAPH_STRUCTURE_SQL,
@@ -3515,12 +3450,10 @@ def extra_oracle_sql() -> dict[str, str]:
     """DuckDB oracles for extra_queries() — verified by scripts/local_verify.py."""
     return {
         "graph_group_role_count_salted": _ROLE_COUNT_SQL,
-        "graph_group_role_count_arrow": _ROLE_COUNT_SQL,
         "graph_group_role_sets": _ROLE_SETS_SQL,
         "graph_group_role_median": _ROLE_MEDIAN_SQL,
         "graph_group_top_transitions": _TOP_TRANSITIONS_SQL,
         "graph_group_window_users": _WINDOW_USERS_SQL,
-        "graph_group_session": _SESSION_SQL,
         "cep_followed_by": _CEP_FOLLOWED_BY_SQL,
         "tpch_shipping_priority": _TPCH_Q3_SQL,
         "tfidf_scores": _TFIDF_SQL,

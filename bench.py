@@ -94,7 +94,7 @@ def bench_queries(spark: SparkSession, sf_dir: str) -> tuple[dict, dict]:
 
     def flagship():
         cfg = StreamGraphConfig(window=WindowConfig.tumbling(600, "SECONDS"))
-        graph = transcript_graph(t, cfg, use_arrow=False)
+        graph = transcript_graph(t, cfg)
         op = (
             GroupingBuilder()
             .add_vertex_grouping_key(":label")

@@ -99,7 +99,4 @@ class StreamGraphConfig:
     salt_buckets: int = 0
     id_hash: str = "sha1"
     compat_super_edge_id: bool = False
-    shuffle_partitions: int | None = None
-    checkpoint_dir: str | None = None
-    use_arrow_extraction: bool = False  # route property extraction through pandas UDFs
     window: WindowConfig = field(default_factory=WindowConfig)

@@ -1,7 +1,5 @@
 """Scalar property / id helpers — the reference's UDF surface (P1-P6)
-re-expressed as native Catalyst expressions, plus optional Arrow-vectorized
-pandas-UDF equivalents (the A+B axis requirement: any Python touching data
-is Arrow-batched, never per-row).
+re-expressed as native Catalyst expressions.
 
 Reference parity (paths relative to
 ``/root/reference/src/main/java/edu/dbsleipzig/stream/grouping/``):
@@ -20,10 +18,8 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 
 
 def extract_property(props_col: Column | str, key: str) -> Column:
@@ -75,40 +71,3 @@ def canonical_props(props_col: Column | str) -> Column:
     """
     c = F.col(props_col) if isinstance(props_col, str) else props_col
     return F.sort_array(F.map_entries(c))
-
-
-def props_from_canonical(entries_col: Column | str) -> Column:
-    c = F.col(entries_col) if isinstance(entries_col, str) else entries_col
-    return F.map_from_entries(c)
-
-
-# ---------------------------------------------------------------------------
-# Arrow-vectorized equivalents (pandas UDFs). These exist to satisfy the
-# "all property extraction ... in vectorized pandas/Arrow UDFs" axis and as
-# the extension point for text-derived keys Catalyst can't express; they are
-# batch-vectorized (one pandas.Series per Arrow batch), never per-row Python.
-# Tests assert equality with the Catalyst fast path.
-# ---------------------------------------------------------------------------
-
-
-def make_extract_property_udf(key: str):
-    """Arrow-vectorized P1: map bag -> value for ``key``."""
-
-    @F.pandas_udf(StringType())
-    def _extract(bags: pd.Series) -> pd.Series:
-        return bags.map(lambda m: None if m is None else m.get(key))
-
-    return _extract
-
-
-def make_super_id_udf(algo: str = "sha1"):
-    """Arrow-vectorized P5 over a pre-concatenated key string."""
-    import hashlib
-
-    fn = getattr(hashlib, algo)
-
-    @F.pandas_udf(StringType())
-    def _hash(joined: pd.Series) -> pd.Series:
-        return joined.map(lambda s: fn(s.encode("utf-8")).hexdigest() if s is not None else None)
-
-    return _hash

@@ -10,7 +10,7 @@ partial+final hash aggregates (map-side combine before the shuffle).
 
 Each descriptor additionally exposes a *decomposed* partial/merge form used
 by the salted two-phase aggregation (skew defense — SURVEY.md §4; the
-reference has none) and by the streaming final-merge stage.
+reference has none), in batch and in Structured Streaming alike.
 
 Deliberate divergences from reference quirks (SURVEY.md §2.3):
   - MaxProperty: reference seeds the accumulator with Double.MIN_VALUE (the

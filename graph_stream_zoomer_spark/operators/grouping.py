@@ -1,11 +1,20 @@
 """Windowed graph-stream grouping — the reference's composite operator,
-re-planned Spark-first.
+re-planned Spark-first, and the one plan builder for batch and Structured
+Streaming.
 
 Reference parity: the 10 numbered stages of
 ``impl/algorithm/GraphStreamGrouping.java:99-144`` (each stage method there
 maps 1:1 to a method here so stage-level golden tests port directly —
 SURVEY.md §3 entry point 3), with the grouping-key bookkeeping of
 ``impl/algorithm/TableGroupingBase.java``.
+
+Batch and streaming share every stage: ``summaries`` builds the grouped
+vertex and edge tables (stages 1-4, 6-9) over batch or streaming
+DataFrames alike, ``execute`` folds them into super elements (stages 5 and
+10), and ``streaming/job.py`` commits them through an exactly-once sink.
+Over a watermarked stream each groupBy is an append-mode stateful
+aggregation keyed by the carried window, whose column keeps the event-time
+watermark.
 
 Spark-first divergences (semantics preserved, plan improved):
   - The window struct produced by ``F.window``/``F.session_window`` is
@@ -17,8 +26,7 @@ Spark-first divergences (semantics preserved, plan improved):
     Session windows still need the join (a row's session depends on other
     rows), implemented as key-equality + temporal containment.
   - Property extraction/fold are native Catalyst expressions (see
-    functions/properties.py) so every stage stays in WholeStageCodegen; the
-    optional Arrow path routes extraction through pandas UDFs.
+    functions/properties.py) so every stage stays in WholeStageCodegen.
   - Optional salted two-phase aggregation (``salt_buckets > 0``) defuses hot
     group keys; in batch Catalyst already does map-side partial aggregation,
     but the salted form is load-bearing for the streaming state store where
@@ -41,13 +49,13 @@ from ..functions.properties import (
     canonical_props,
     extract_property,
     fold_properties,
-    make_extract_property_udf,
     super_element_id,
 )
 from ..model import NO_LABEL, StreamGraph
 from .aggregation import AggregateFunction
 
 GROUP_LABEL_SYMBOL = ":label"  # TableGroupingBase.java:767
+WINDOW_TYPE = "struct<start:timestamp,end:timestamp>"
 
 
 def window_expr(w: WindowConfig, ts: str | Column) -> Column:
@@ -96,120 +104,47 @@ class GraphStreamGrouping:
         return f"_agg_in_{a.output_key}"
 
     # ------------------------------------------------------------------
-    # Stage 1 — deduplicateVertices (GraphStreamGrouping.java:146-158)
+    # Stages 1/2 — deduplicateVertices / deduplicateEdges
+    # (GraphStreamGrouping.java:146-173)
     # ------------------------------------------------------------------
-    def dedup_vertices(self, vertices: DataFrame) -> DataFrame:
-        """Windowed DISTINCT over (id, label, props); emits one row per
-        (vertex observation, window) with event_time = window rowtime.
-
-        Spark cannot GROUP BY MapType, so the property bag participates via
-        its canonical sorted-entries encoding.
-        """
+    def _windowed(self, df: DataFrame, cols: list[str]) -> DataFrame:
+        """Window assignment as a projection: the window struct plus
+        event_time = window rowtime (one row per window a sliding window
+        covers). A row's session depends on other rows, so for session
+        windows the window stays NULL and the raw event_time is kept;
+        ``_group`` assigns the session."""
         if self.window.kind == WindowKind.SESSION:
-            # Session semantics: exact-duplicate collapse only (see module
-            # docstring); window assignment happens inside group_vertices.
-            out = (
-                vertices.select(
-                    "vertex_id",
-                    "vertex_label",
-                    canonical_props("vertex_properties").alias("_props_c"),
-                    "event_time",
-                )
-                .dropDuplicates(["vertex_id", "vertex_label", "_props_c", "event_time"])
-            )
-            return out.select(
-                F.lit(None)
-                .cast("struct<start:timestamp,end:timestamp>")
-                .alias("window"),
-                "vertex_id",
-                "vertex_label",
-                F.map_from_entries("_props_c").alias("vertex_properties"),
-                "event_time",
-            )
-        w = window_expr(self.window, "event_time")
-        out = (
-            vertices.select(
-                w.alias("window"),
-                "vertex_id",
-                "vertex_label",
-                canonical_props("vertex_properties").alias("_props_c"),
-            )
-            .groupBy("window", "vertex_id", "vertex_label", "_props_c")
-            .agg(F.count(F.lit(1)).alias("_dup_count"))
+            return df.select(F.lit(None).cast(WINDOW_TYPE).alias("window"), *cols, "event_time")
+        windowed = df.select(window_expr(self.window, "event_time").alias("window"), *cols)
+        return windowed.withColumn("event_time", rowtime_expr())
+
+    @staticmethod
+    def _distinct(df: DataFrame, props_col: str) -> DataFrame:
+        """Windowed DISTINCT over the whole observation row (A6). Spark
+        cannot GROUP BY MapType, so the property bag takes part via its
+        canonical sorted-entries encoding."""
+        return (
+            df.withColumn(props_col, canonical_props(props_col))
+            .dropDuplicates()
+            .withColumn(props_col, F.map_from_entries(props_col))
         )
-        return out.select(
-            "window",
-            "vertex_id",
-            "vertex_label",
-            F.map_from_entries("_props_c").alias("vertex_properties"),
-            rowtime_expr().alias("event_time"),
-        )
+
+    def dedup_vertices(self, vertices: DataFrame) -> DataFrame:
+        """One row per (vertex observation, window); event_time is the
+        window rowtime (session windows: the raw event time)."""
+        windowed = self._windowed(vertices, ["vertex_id", "vertex_label", "vertex_properties"])
+        return self._distinct(windowed, "vertex_properties")
 
     def assign_window_vertices(self, vertices: DataFrame) -> DataFrame:
         """Dedup-free variant of stage 1 for producers that guarantee
         distinct observations (StreamGraph.elements_unique): window
-        assignment as a pure projection — no shuffle. Tumbling only (one
-        window per row in a projection)."""
+        assignment only — no shuffle. Tumbling only."""
         assert self.window.kind == WindowKind.TUMBLING
-        w = window_expr(self.window, "event_time")
-        return vertices.select(
-            w.alias("window"),
-            "vertex_id",
-            "vertex_label",
-            "vertex_properties",
-        ).withColumn("event_time", rowtime_expr())
+        return self._windowed(vertices, ["vertex_id", "vertex_label", "vertex_properties"])
 
-    # ------------------------------------------------------------------
-    # Stage 2 — deduplicateEdges (GraphStreamGrouping.java:160-173)
-    # ------------------------------------------------------------------
     def dedup_edges(self, edges: DataFrame) -> DataFrame:
-        if self.window.kind == WindowKind.SESSION:
-            out = (
-                edges.select(
-                    "edge_id",
-                    "edge_label",
-                    canonical_props("edge_properties").alias("_props_c"),
-                    "source_id",
-                    "target_id",
-                    "event_time",
-                )
-                .dropDuplicates(
-                    ["edge_id", "edge_label", "_props_c", "source_id", "target_id", "event_time"]
-                )
-            )
-            return out.select(
-                F.lit(None)
-                .cast("struct<start:timestamp,end:timestamp>")
-                .alias("window"),
-                "edge_id",
-                "edge_label",
-                F.map_from_entries("_props_c").alias("edge_properties"),
-                "source_id",
-                "target_id",
-                "event_time",
-            )
-        w = window_expr(self.window, "event_time")
-        out = (
-            edges.select(
-                w.alias("window"),
-                "edge_id",
-                "edge_label",
-                canonical_props("edge_properties").alias("_props_c"),
-                "source_id",
-                "target_id",
-            )
-            .groupBy("window", "edge_id", "edge_label", "_props_c", "source_id", "target_id")
-            .agg(F.count(F.lit(1)).alias("_dup_count"))
-        )
-        return out.select(
-            "window",
-            "edge_id",
-            "edge_label",
-            F.map_from_entries("_props_c").alias("edge_properties"),
-            "source_id",
-            "target_id",
-            rowtime_expr().alias("event_time"),
-        )
+        cols = ["edge_id", "edge_label", "edge_properties", "source_id", "target_id"]
+        return self._distinct(self._windowed(edges, cols), "edge_properties")
 
     # ------------------------------------------------------------------
     # Stage 3 — enhanceVerticesByPropertyColumns
@@ -217,26 +152,15 @@ class GraphStreamGrouping:
     # ------------------------------------------------------------------
     def _promote(self, df: DataFrame, props_col: str, keys: list[str], aggs, gk_name) -> DataFrame:
         cols = [F.col(c) for c in df.columns]
-        if self.config.use_arrow_extraction:
-            for i, k in enumerate(keys):
-                cols.append(make_extract_property_udf(k)(F.col(props_col)).alias(gk_name(i)))
-            for a in aggs:
-                if a.property_key is not None:
-                    cols.append(
-                        make_extract_property_udf(a.property_key)(F.col(props_col))
-                        .cast(a.input_type)
-                        .alias(self._agg_in(a))
-                    )
-        else:
-            for i, k in enumerate(keys):
-                cols.append(extract_property(props_col, k).alias(gk_name(i)))
-            for a in aggs:
-                if a.property_key is not None:
-                    cols.append(
-                        extract_property(props_col, a.property_key)
-                        .cast(a.input_type)
-                        .alias(self._agg_in(a))
-                    )
+        for i, k in enumerate(keys):
+            cols.append(extract_property(props_col, k).alias(gk_name(i)))
+        for a in aggs:
+            if a.property_key is not None:
+                cols.append(
+                    extract_property(props_col, a.property_key)
+                    .cast(a.input_type)
+                    .alias(self._agg_in(a))
+                )
         return df.select(*cols)
 
     def enhance_vertices(self, deduped: DataFrame) -> DataFrame:
@@ -245,65 +169,84 @@ class GraphStreamGrouping:
         )
 
     # ------------------------------------------------------------------
-    # Stage 4 — groupVertices (GraphStreamGrouping.java:180-185, A7)
+    # Stage 4 — groupVertices (GraphStreamGrouping.java:180-185, A7); the
+    # windowed aggregation and super-id hashing are shared with stage 9
     # ------------------------------------------------------------------
-    def _vertex_group_cols(self) -> list[str]:
-        cols = [self._gk(i) for i in range(len(self.vertex_grouping_keys))]
-        if self.use_vertex_labels:
-            cols.append("vertex_label")
-        return cols
-
-    def _vertex_id_hash_fields(self) -> list[Column]:
-        """CreateSuperElementId inputs: [label?] + grouping values + rowtime
-        (TableGroupingBase.java buildVertexProjectExpressions; rowtime is
-        always the last hash field)."""
-        fields: list[Column] = []
-        if self.use_vertex_labels:
-            fields.append(F.col("vertex_label"))
-        fields += [F.col(self._gk(i)) for i in range(len(self.vertex_grouping_keys))]
+    @staticmethod
+    def _rowtime_ms(rowtime: Column) -> Column:
         # cast handles TIMESTAMP_NTZ inputs (parquet default); rendered as
         # epoch millis so the id is timezone-name independent
-        fields.append(F.unix_millis(F.col("event_time").cast("timestamp")).cast("string"))
-        return fields
+        return F.unix_millis(rowtime.cast("timestamp")).cast("string")
 
-    def group_vertices(self, enhanced: DataFrame) -> DataFrame:
-        group_cols = self._vertex_group_cols()
-        if self.window.kind == WindowKind.SESSION:
-            wcol = window_expr(self.window, "event_time").alias("window")
-            grouped = enhanced.groupBy(wcol, *group_cols)
+    def _vertex_super_id(self, side: str | None = None) -> Column:
+        """CreateSuperElementId over [label?] + grouping values + rowtime
+        (TableGroupingBase.java buildVertexProjectExpressions; rowtime is
+        always the last hash field): of the promoted vertex columns with the
+        rowtime in ``event_time``, or of the inline StreamTriple endpoint
+        struct ``side`` with the rowtime of the carried window."""
+        if side is None:
+            label, rowtime = F.col("vertex_label"), F.col("event_time")
+            values = [F.col(self._gk(i)) for i in range(len(self.vertex_grouping_keys))]
         else:
-            grouped = enhanced.groupBy("window", *group_cols)
-
-        agg_exprs = [a.agg_expr(self._agg_in(a)) for a in self.vertex_aggs]
-        if not agg_exprs:
-            agg_exprs = [F.count(F.lit(1)).alias("_group_size")]
-
-        if self.config.salt_buckets > 0 and self.window.kind != WindowKind.SESSION:
-            out = self._group_salted(
-                enhanced, ["window", *group_cols], "vertex_id", self.vertex_aggs
-            )
-        else:
-            out = grouped.agg(*agg_exprs)
-
-        label = F.col("vertex_label") if self.use_vertex_labels else F.lit(NO_LABEL)
-        keep = ["window"] + [self._gk(i) for i in range(len(self.vertex_grouping_keys))]
-        agg_out = [a.output_key for a in self.vertex_aggs]
-        return out.select(
-            *keep,
-            rowtime_expr().alias("event_time"),
-            label.alias("vertex_label"),
-            *agg_out,
-        ).withColumn(
-            "super_vertex_id",
-            super_element_id(self._vertex_id_hash_fields(), self.config.id_hash),
+            label, rowtime = F.col(f"{side}.vertex_label"), rowtime_expr()
+            props = F.col(f"{side}.vertex_properties")
+            values = [extract_property(props, k) for k in self.vertex_grouping_keys]
+        fields = [label] if self.use_vertex_labels else []
+        return super_element_id(
+            [*fields, *values, self._rowtime_ms(rowtime)], self.config.id_hash
         )
+
+    def _edge_super_id(self) -> Column:
+        """Default: src + tgt + [label?] + grouping values + rowtime.
+        The reference omits src/tgt (TableGroupingBase.java:426-441) which
+        its own tests flag as buggy (LabelGroupSizeAggTest.java:25);
+        ``compat_super_edge_id`` reproduces that."""
+        fields: list[Column] = []
+        if not self.config.compat_super_edge_id:
+            fields += [F.col("source_id"), F.col("target_id")]
+        if self.use_edge_labels:
+            fields.append(F.col("edge_label"))
+        fields += [F.col(self._egk(i)) for i in range(len(self.edge_grouping_keys))]
+        fields.append(self._rowtime_ms(F.col("event_time")))
+        return super_element_id(fields, self.config.id_hash)
+
+    def _group(
+        self, df: DataFrame, kind: str, keys: list[str], use_label: bool, aggs, super_id
+    ) -> DataFrame:
+        """Windowed aggregation of one element kind ("vertex"/"edge") by
+        ``keys`` [+ label], projected to one row per super element: window,
+        keys, rowtime, label, aggregates and the ``super_<kind>_id`` hash."""
+        label = f"{kind}_label"
+        group_cols = [*keys, label] if use_label else keys
+        if self.window.kind == WindowKind.SESSION:
+            window = window_expr(self.window, "event_time").alias("window")
+            out = df.groupBy(window, *group_cols).agg(*self._agg_exprs(aggs))
+        elif self.config.salt_buckets > 0:
+            out = self._group_salted(df, ["window", *group_cols], f"{kind}_id", aggs)
+        else:
+            out = df.groupBy("window", *group_cols).agg(*self._agg_exprs(aggs))
+        return out.select(
+            "window",
+            *keys,
+            rowtime_expr().alias("event_time"),
+            (F.col(label) if use_label else F.lit(NO_LABEL)).alias(label),
+            *[a.output_key for a in aggs],
+        ).withColumn(f"super_{kind}_id", super_id)
+
+    def _agg_exprs(self, aggs) -> list[Column]:
+        return [a.agg_expr(self._agg_in(a)) for a in aggs] or [
+            F.count(F.lit(1)).alias("_group_size")
+        ]
 
     def _group_salted(
         self, enhanced: DataFrame, group_cols: list[str], salt_src: str, aggs
     ) -> DataFrame:
         """Salted two-phase aggregation: phase 1 adds salt = pmod(xxhash64(id), S)
         to the key and computes partial aggregates; phase 2 merges partials
-        per true key. Plain DataFrame code — no Catalyst extension."""
+        per true key. Plain DataFrame code — no Catalyst extension. In
+        Structured Streaming both phases are chained stateful aggregations:
+        phase 1 emits each closed (window, key, salt) row once, and phase 2
+        closes the same window in the same trigger."""
         s = self.config.salt_buckets
         salted = enhanced.withColumn("_salt", F.pmod(F.xxhash64(F.col(salt_src)), F.lit(s)))
         partials: list[Column] = []
@@ -316,6 +259,13 @@ class GraphStreamGrouping:
         if not merges:
             merges = [F.sum("_p__group_size").alias("_group_size")]
         return phase1.groupBy(*group_cols).agg(*merges)
+
+    def group_vertices(self, enhanced: DataFrame) -> DataFrame:
+        gk = [self._gk(i) for i in range(len(self.vertex_grouping_keys))]
+        return self._group(
+            enhanced, "vertex", gk, self.use_vertex_labels, self.vertex_aggs,
+            self._vertex_super_id(),
+        )
 
     # ------------------------------------------------------------------
     # Stage 5 — createSuperVertices (GraphStreamGrouping.java:187-190;
@@ -345,13 +295,8 @@ class GraphStreamGrouping:
         (the reference's J1 condition, TableGroupingBase.java:587-614).
         """
         if self.window.kind != WindowKind.SESSION:
-            return enhanced.select(
-                "vertex_id",
-                "window",
-                super_element_id(self._vertex_id_hash_fields(), self.config.id_hash).alias(
-                    "super_vertex_id"
-                ),
-            )
+            super_id = self._vertex_super_id().alias("super_vertex_id")
+            return enhanced.select("vertex_id", "window", super_id)
         assert grouped is not None, "session-window expansion needs the grouped table"
         g = grouped.select(
             "window",
@@ -370,8 +315,8 @@ class GraphStreamGrouping:
         # (session window, group); broadcast it so the session path never
         # shuffles the raw vertex stream against a tiny summary (the
         # null-safe+containment condition would otherwise fall back to a
-        # shuffled BNLJ). Batch-only path: streaming sessions go through
-        # streaming/pipeline.py, so the hint never meets a streaming frame.
+        # shuffled BNLJ). Batch-only path: streaming session summaries
+        # (streaming/pipeline.py) group vertices without expanding them.
         return enhanced.join(F.broadcast(g), cond, "inner").select(
             enhanced["vertex_id"], g["window"], g["super_vertex_id"]
         )
@@ -380,62 +325,26 @@ class GraphStreamGrouping:
     # Stage 7 — createEdgesWithExpandedVertices (GraphStreamGrouping.java:228-260)
     # ------------------------------------------------------------------
     def edges_with_super_vertices(self, deduped_edges: DataFrame, expanded: DataFrame) -> DataFrame:
-        """Replace edge endpoints with super-vertex ids: two equi joins on
-        (endpoint id, window). The reference's time predicate is vacuous
-        (GraphStreamGrouping.java:243-252); we join window-aligned, which is
-        the semantics its tests actually rely on."""
-        if self.window.kind == WindowKind.SESSION:
-            # Vertex sessions and edge event times: containment join.
-            src = expanded.select(
+        """Replace edge endpoints with super-vertex ids: one join per
+        endpoint on (endpoint id, window). The reference's time predicate is
+        vacuous (GraphStreamGrouping.java:243-252); we join window-aligned,
+        which is the semantics its tests actually rely on. Session windows:
+        the vertex session must contain the edge's event time."""
+        e = deduped_edges
+        for end in ("source_id", "target_id"):
+            v = expanded.select(
                 F.col("vertex_id").alias("_vid"),
                 F.col("window").alias("_vw"),
                 F.col("super_vertex_id").alias("_svid"),
             )
-            e = deduped_edges
-            out = e.join(
-                src,
-                (e["source_id"] == src["_vid"])
-                & (e["event_time"] >= src["_vw.start"])
-                & (e["event_time"] < src["_vw.end"]),
-            ).select(
-                e["edge_id"], e["edge_label"], e["edge_properties"],
-                src["_svid"].alias("source_id"), e["target_id"], e["event_time"], e["window"],
+            if self.window.kind == WindowKind.SESSION:
+                in_window = (e["event_time"] >= v["_vw.start"]) & (e["event_time"] < v["_vw.end"])
+            else:
+                in_window = e["window"] == v["_vw"]
+            e = e.join(v, (e[end] == v["_vid"]) & in_window).select(
+                *[v["_svid"].alias(c) if c == end else e[c] for c in e.columns]
             )
-            tgt = src.select(
-                F.col("_vid").alias("_tvid"), F.col("_vw").alias("_tvw"), F.col("_svid").alias("_tsvid")
-            )
-            return out.join(
-                tgt,
-                (out["target_id"] == tgt["_tvid"])
-                & (out["event_time"] >= tgt["_tvw.start"])
-                & (out["event_time"] < tgt["_tvw.end"]),
-            ).select(
-                out["edge_id"], out["edge_label"], out["edge_properties"],
-                out["source_id"], tgt["_tsvid"].alias("target_id"), out["event_time"], out["window"],
-            )
-        src = expanded.select(
-            F.col("vertex_id").alias("_vid"),
-            F.col("window").alias("_vw"),
-            F.col("super_vertex_id").alias("_svid"),
-        )
-        e = deduped_edges
-        out = e.join(
-            src, (e["source_id"] == src["_vid"]) & (e["window"] == src["_vw"]), "inner"
-        ).select(
-            e["edge_id"], e["edge_label"], e["edge_properties"],
-            src["_svid"].alias("source_id"), e["target_id"], e["event_time"], e["window"],
-        )
-        tgt = expanded.select(
-            F.col("vertex_id").alias("_tvid"),
-            F.col("window").alias("_tvw"),
-            F.col("super_vertex_id").alias("_tsvid"),
-        )
-        return out.join(
-            tgt, (out["target_id"] == tgt["_tvid"]) & (out["window"] == tgt["_tvw"]), "inner"
-        ).select(
-            out["edge_id"], out["edge_label"], out["edge_properties"],
-            out["source_id"], tgt["_tsvid"].alias("target_id"), out["event_time"], out["window"],
-        )
+        return e
 
     def edges_with_super_vertices_from_triples(
         self, triples: DataFrame, edges_unique: bool = False
@@ -445,90 +354,30 @@ class GraphStreamGrouping:
         source/target ids are *recomputed* per edge — no shuffle at all on
         the edge-expansion path. Tumbling/sliding only.
 
-        ``edges_unique`` skips the windowed-dedup groupBy (one fewer
-        shuffle) when the producer guarantees distinct edge observations."""
+        ``edges_unique`` skips the windowed dedup (one fewer shuffle, and
+        no dedup state in Structured Streaming) when the producer
+        guarantees distinct edge observations."""
         assert self.window.kind != WindowKind.SESSION
-        w = window_expr(self.window, "event_time")
-
-        def endpoint_super_id(side: str) -> Column:
-            fields: list[Column] = []
-            if self.use_vertex_labels:
-                fields.append(F.col(f"{side}.vertex_label"))
-            fields += [
-                extract_property(F.col(f"{side}.vertex_properties"), k)
-                for k in self.vertex_grouping_keys
-            ]
-            fields.append(F.unix_millis(rowtime_expr().cast("timestamp")).cast("string"))
-            return super_element_id(fields, self.config.id_hash)
-
-        with_w = triples.select(
-            w.alias("window"), "edge_id", "edge_label", "edge_properties", "source", "target"
-        )
-        if edges_unique and self.window.kind == WindowKind.TUMBLING:
-            return with_w.select(
-                "window",
-                "edge_id",
-                "edge_label",
-                "edge_properties",
-                endpoint_super_id("source").alias("source_id"),
-                endpoint_super_id("target").alias("target_id"),
-                rowtime_expr().alias("event_time"),
-            )
-        expanded = with_w.select(
-            "window",
-            "edge_id",
-            "edge_label",
-            canonical_props("edge_properties").alias("_props_c"),
-            endpoint_super_id("source").alias("source_id"),
-            endpoint_super_id("target").alias("target_id"),
-        )
-        # windowed edge dedup (stage 2) folded in after expansion
-        return (
-            expanded.groupBy(
-                "window", "edge_id", "edge_label", "_props_c", "source_id", "target_id"
-            )
-            .agg(F.count(F.lit(1)).alias("_dup_count"))
-            .select(
-                "window",
-                "edge_id",
-                "edge_label",
-                F.map_from_entries("_props_c").alias("edge_properties"),
-                "source_id",
-                "target_id",
-                rowtime_expr().alias("event_time"),
-            )
-        )
-
-    def expand_triples_stateless(self, triples: DataFrame) -> DataFrame:
-        """Streaming-safe endpoint expansion: pure projection computing
-        super source/target ids from the inlined endpoint vertices, keeping
-        the raw event_time (no dedup, no window materialization — the caller
-        chains dropDuplicatesWithinWatermark + windowed agg). Tumbling only:
-        the rowtime entering the endpoint hash is derived row-locally from
-        event_time, which is single-valued only for tumbling windows."""
-        assert self.window.kind == WindowKind.TUMBLING
-        w = window_expr(self.window, "event_time")
-        rowtime = w["end"] - F.expr("INTERVAL 1 MILLISECOND")
-
-        def endpoint_super_id(side: str) -> Column:
-            fields: list[Column] = []
-            if self.use_vertex_labels:
-                fields.append(F.col(f"{side}.vertex_label"))
-            fields += [
-                extract_property(F.col(f"{side}.vertex_properties"), k)
-                for k in self.vertex_grouping_keys
-            ]
-            fields.append(F.unix_millis(rowtime.cast("timestamp")).cast("string"))
-            return super_element_id(fields, self.config.id_hash)
-
-        return triples.select(
+        windowed = triples.select(
+            window_expr(self.window, "event_time").alias("window"),
             "edge_id",
             "edge_label",
             "edge_properties",
-            endpoint_super_id("source").alias("source_id"),
-            endpoint_super_id("target").alias("target_id"),
-            "event_time",
+            "source",
+            "target",
         )
+        expanded = windowed.select(
+            "window",
+            "edge_id",
+            "edge_label",
+            "edge_properties",
+            self._vertex_super_id("source").alias("source_id"),
+            self._vertex_super_id("target").alias("target_id"),
+            rowtime_expr().alias("event_time"),
+        )
+        if edges_unique and self.window.kind == WindowKind.TUMBLING:
+            return expanded
+        return self._distinct(expanded, "edge_properties")  # stage 2, after expansion
 
     # ------------------------------------------------------------------
     # Stage 8 — enrichEdgesWithSuperVertices (GraphStreamGrouping.java:262-265)
@@ -541,53 +390,10 @@ class GraphStreamGrouping:
     # ------------------------------------------------------------------
     # Stage 9 — groupEdges (GraphStreamGrouping.java:267-272, A8)
     # ------------------------------------------------------------------
-    def _edge_group_cols(self) -> list[str]:
-        cols = ["source_id", "target_id"]
-        cols += [self._egk(i) for i in range(len(self.edge_grouping_keys))]
-        if self.use_edge_labels:
-            cols.append("edge_label")
-        return cols
-
-    def _edge_id_hash_fields(self) -> list[Column]:
-        """Default: src + tgt + [label?] + grouping values + rowtime.
-        The reference omits src/tgt (TableGroupingBase.java:426-441) which
-        its own tests flag as buggy (LabelGroupSizeAggTest.java:25);
-        ``compat_super_edge_id`` reproduces that."""
-        fields: list[Column] = []
-        if not self.config.compat_super_edge_id:
-            fields += [F.col("source_id"), F.col("target_id")]
-        if self.use_edge_labels:
-            fields.append(F.col("edge_label"))
-        fields += [F.col(self._egk(i)) for i in range(len(self.edge_grouping_keys))]
-        fields.append(F.unix_millis(F.col("event_time").cast("timestamp")).cast("string"))
-        return fields
-
     def group_edges(self, enriched: DataFrame) -> DataFrame:
-        group_cols = self._edge_group_cols()
-        if self.window.kind == WindowKind.SESSION:
-            wcol = window_expr(self.window, "event_time").alias("window")
-            grouped = enriched.groupBy(wcol, *group_cols)
-        else:
-            grouped = enriched.groupBy("window", *group_cols)
-        agg_exprs = [a.agg_expr(self._agg_in(a)) for a in self.edge_aggs]
-        if not agg_exprs:
-            agg_exprs = [F.count(F.lit(1)).alias("_group_size")]
-        if self.config.salt_buckets > 0 and self.window.kind != WindowKind.SESSION:
-            out = self._group_salted(enriched, ["window", *group_cols], "edge_id", self.edge_aggs)
-        else:
-            out = grouped.agg(*agg_exprs)
-        label = F.col("edge_label") if self.use_edge_labels else F.lit(NO_LABEL)
-        keep = ["window", "source_id", "target_id"] + [
-            self._egk(i) for i in range(len(self.edge_grouping_keys))
-        ]
-        agg_out = [a.output_key for a in self.edge_aggs]
-        return out.select(
-            *keep,
-            rowtime_expr().alias("event_time"),
-            label.alias("edge_label"),
-            *agg_out,
-        ).withColumn(
-            "super_edge_id", super_element_id(self._edge_id_hash_fields(), self.config.id_hash)
+        egk = ["source_id", "target_id"] + [self._egk(i) for i in range(len(self.edge_grouping_keys))]
+        return self._group(
+            enriched, "edge", egk, self.use_edge_labels, self.edge_aggs, self._edge_super_id()
         )
 
     # ------------------------------------------------------------------
@@ -610,7 +416,11 @@ class GraphStreamGrouping:
     # ------------------------------------------------------------------
     # performGrouping (GraphStreamGrouping.java:99-144)
     # ------------------------------------------------------------------
-    def execute(self, graph: StreamGraph) -> StreamGraph:
+    def summaries(self, graph: StreamGraph) -> tuple[DataFrame, DataFrame]:
+        """Stages 1-4 and 6-9 over a batch or streaming graph: the grouped
+        vertex and edge tables, one row per super element with its window,
+        grouping values, aggregates and super id. The streaming job commits
+        these rows; ``execute`` folds them into super elements."""
         unique = graph.elements_unique and self.window.kind == WindowKind.TUMBLING
         if unique:
             deduped_v = self.assign_window_vertices(graph.vertices)  # 1 (shuffle-free)
@@ -618,7 +428,6 @@ class GraphStreamGrouping:
             deduped_v = self.dedup_vertices(graph.vertices)  # 1
         enhanced_v = self.enhance_vertices(deduped_v)  # 3
         grouped_v = self.group_vertices(enhanced_v)  # 4
-        super_vertices = self.create_super_vertices(grouped_v)  # 5
 
         if graph.triples is not None and self.window.kind != WindowKind.SESSION:
             # joinless fast path: stages 2+6+7 collapse into one projection
@@ -631,10 +440,16 @@ class GraphStreamGrouping:
             edges_expanded = self.edges_with_super_vertices(deduped_e, expanded)  # 7
 
         enriched_e = self.enrich_edges(edges_expanded)  # 8
-        grouped_e = self.group_edges(enriched_e)  # 9
-        super_edges = self.create_super_edges(grouped_e)  # 10
+        return grouped_v, self.group_edges(enriched_e)  # 9
 
-        return replace(graph, vertices=super_vertices, edges=super_edges, triples=None)
+    def execute(self, graph: StreamGraph) -> StreamGraph:
+        grouped_v, grouped_e = self.summaries(graph)
+        return replace(
+            graph,
+            vertices=self.create_super_vertices(grouped_v),  # 5
+            edges=self.create_super_edges(grouped_e),  # 10
+            triples=None,
+        )
 
 
 class GroupingBuilder:

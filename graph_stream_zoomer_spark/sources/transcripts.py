@@ -25,7 +25,6 @@ from pyspark.sql.window import Window
 
 from ..config import StreamGraphConfig
 from ..model import StreamGraph
-from ..functions.text import pdf_text_len
 
 FILLER = "the quick brown fox jumps over the lazy dog and then it stops to think "
 BASE_EPOCH = 1735689600  # 2025-01-01 00:00:00 UTC
@@ -118,21 +117,18 @@ def generate_transcripts(
 # transcript → property-graph binding
 # ---------------------------------------------------------------------------
 
-def _turn_props(prefix: str = "", use_arrow: bool = False) -> list[Column]:
-    """Per-turn derived properties: tool, text_len (Arrow pandas UDF per the
-    A+B axis), time-bucket (hour)."""
-    text_c = F.col(f"{prefix}text")
-    tl = pdf_text_len(text_c) if use_arrow else F.length(text_c)
+def _turn_props(prefix: str = "") -> list[Column]:
+    """Per-turn derived properties: tool, text_len, time-bucket (hour)."""
     return [
         F.col(f"{prefix}tool").alias("tool"),
-        tl.cast("string").alias("text_len"),
+        F.length(f"{prefix}text").cast("string").alias("text_len"),
         F.date_format(F.col(f"{prefix}ts"), "yyyy-MM-dd HH").alias("hour_bucket"),
     ]
 
 
-def transcript_vertices(t: DataFrame, use_arrow: bool = False) -> DataFrame:
+def transcript_vertices(t: DataFrame) -> DataFrame:
     """vertex_id = conv_id:turn_idx, label = role (SURVEY.md §1.4)."""
-    props = _turn_props(use_arrow=use_arrow)
+    props = _turn_props()
     return t.select(
         F.concat_ws(":", "conv_id", F.col("turn_idx").cast("string")).alias("vertex_id"),
         F.col("ts").alias("event_time"),
@@ -144,7 +140,7 @@ def transcript_vertices(t: DataFrame, use_arrow: bool = False) -> DataFrame:
     )
 
 
-def transcript_triples(t: DataFrame, use_arrow: bool = False) -> DataFrame:
+def transcript_triples(t: DataFrame) -> DataFrame:
     """Successor triples via a single pass: lead() over (conv_id, turn_idx).
 
     One analytic-window shuffle partitioned by conv_id; both endpoint turns
@@ -184,7 +180,7 @@ def transcript_triples(t: DataFrame, use_arrow: bool = False) -> DataFrame:
         F.array(F.lit("tool"), F.lit("text_len"), F.lit("hour_bucket"), F.lit("transition")),
         F.array(
             F.col("n_tool"),
-            (pdf_text_len(F.col("n_text")) if use_arrow else F.length("n_text")).cast("string"),
+            F.length("n_text").cast("string"),
             F.date_format(F.col("n_ts"), "yyyy-MM-dd HH"),
             F.concat_ws("->", "role", "n_role"),
         ),
@@ -194,36 +190,35 @@ def transcript_triples(t: DataFrame, use_arrow: bool = False) -> DataFrame:
         F.col("n_ts").alias("event_time"),
         F.concat_ws("->", "role", "n_role").alias("edge_label"),
         edge_props.alias("edge_properties"),
-        vstruct(src_id, "role", _turn_props(use_arrow=use_arrow), "ts").alias("source"),
-        vstruct(tgt_id, "n_role", _turn_props("n_", use_arrow=use_arrow), "n_ts").alias("target"),
+        vstruct(src_id, "role", _turn_props(), "ts").alias("source"),
+        vstruct(tgt_id, "n_role", _turn_props("n_"), "n_ts").alias("target"),
     )
 
 
-def transcript_graph_vertices(t: DataFrame, use_arrow: bool = False) -> DataFrame:
+def transcript_graph_vertices(t: DataFrame) -> DataFrame:
     """Vertex stream derived in ONE pass over the turns table: the set of
     triple endpoints = every turn of a conversation with ≥2 turns, each
     exactly once. Splitting the triple stream instead (Extractor-style,
-    split_triples) would duplicate the whole upstream subplan per endpoint
-    projection AND emit each interior turn twice — two full extra scans +
-    a dedup shuffle at 100 TB. The count-over-conversation window rides the
-    same conv_id exchange the successor lead() already needs."""
+    split_triples) would emit each interior turn twice and need a dedup
+    shuffle. The count-over-conversation window does NOT share the
+    successor lead()'s exchange: the vertex and triple streams are separate
+    queries, so each scans the turns and has its own
+    ``Exchange hashpartitioning(conv_id)``."""
     w = Window.partitionBy("conv_id")
     return (
         t.withColumn("_conv_turns", F.count(F.lit(1)).over(w))
         .where(F.col("_conv_turns") >= 2)
-        .transform(lambda d: transcript_vertices(d, use_arrow=use_arrow))
+        .transform(transcript_vertices)
     )
 
 
-def transcript_graph(
-    t: DataFrame, config: StreamGraphConfig | None = None, use_arrow: bool = False
-) -> StreamGraph:
+def transcript_graph(t: DataFrame, config: StreamGraphConfig | None = None) -> StreamGraph:
     """Transcript turns → StreamGraph with the single-pass vertex stream,
     the triple stream for the joinless edge path, and the uniqueness hint
     that lets the grouping operator skip both dedup shuffles."""
     config = config or StreamGraphConfig()
-    triples = transcript_triples(t, use_arrow=use_arrow)
-    vertices = transcript_graph_vertices(t, use_arrow=use_arrow)
+    triples = transcript_triples(t)
+    vertices = transcript_graph_vertices(t)
     edges = triples.select(
         "edge_id",
         "edge_label",

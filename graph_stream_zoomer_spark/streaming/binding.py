@@ -24,8 +24,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..sources.transcripts import _turn_props
-
 
 def _slim(turns: DataFrame) -> DataFrame:
     """Project the turn stream down to what the summaries actually consume
@@ -62,7 +60,6 @@ def streaming_transcript_triples(
     turns: DataFrame,
     watermark: str = "10 seconds",
     max_turn_gap: str = "1 hour",
-    use_arrow: bool = False,
 ) -> DataFrame:
     joined = _joined_successors(_slim(turns), watermark, max_turn_gap)
 

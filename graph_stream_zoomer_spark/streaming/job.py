@@ -1,6 +1,10 @@
 """Top-level streaming job: transcript stream → grouped summary streams →
 idempotent sinks, resumable from checkpoint.
 
+The summary streams are ``GraphStreamGrouping.summaries`` — the same stages
+the batch ``execute`` runs — over the streaming transcript binding wrapped
+in a ``StreamGraph``; only the exactly-once sink is streaming-specific.
+
 This is the deployable unit (spark-submit --py-files entry point, see
 scripts/run_streaming_job.py). By default two structured-streaming queries
 run side by side — vertex summaries and edge summaries — each with its own
@@ -19,9 +23,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import StreamGraphConfig
+from ..model import StreamGraph, split_triples
 from ..operators.grouping import GraphStreamGrouping
 from .binding import streaming_transcript_triples, streaming_vertex_observations
-from .pipeline import streaming_edge_summaries, streaming_vertex_summaries
 from .sink import IdempotentParquetSink, ProgressListener
 
 TRANSCRIPT_DDL = (
@@ -107,23 +111,21 @@ def run_grouping_job(
 
     triples = streaming_transcript_triples(turns, watermark=wm, max_turn_gap=max_turn_gap)
     vertices = streaming_vertex_observations(turns, watermark=wm, max_turn_gap=max_turn_gap)
-
-    # the transcript binding emits each turn exactly once → no dedup state
-    sv = streaming_vertex_summaries(op, vertices, observations_unique=True)
-    se = streaming_edge_summaries(op, triples)
+    # the transcript binding emits each turn and each successor pair exactly
+    # once → no dedup state; the batch operator's stages build both streams
+    graph = StreamGraph(
+        vertices=vertices,
+        edges=split_triples(triples)[1],
+        config=cfg,
+        triples=triples,
+        elements_unique=True,
+    )
+    sv, se = op.summaries(graph)
 
     listener = ProgressListener()
     listener.attach(spark)
 
-    # salted mode: the streaming agg emits per-salt partials (append mode →
-    # each closed (window, key, salt) row exactly once); the sink's
-    # transform merges them to final rows before commit
-    v_transform = None
-    if cfg.salt_buckets > 0:
-        from .pipeline import merge_partials
-
-        v_transform = lambda b: merge_partials(op, b)  # noqa: E731
-    v_sink = IdempotentParquetSink(os.path.join(out_root, "vertices"), transform=v_transform)
+    v_sink = IdempotentParquetSink(os.path.join(out_root, "vertices"))
     e_sink = IdempotentParquetSink(os.path.join(out_root, "edges"))
 
     def start(df: DataFrame, sink, name: str):

@@ -1,4 +1,4 @@
-"""Structured-Streaming execution of the grouping operator.
+"""Structured-Streaming entry points of the grouping operator.
 
 Reference parity: the reference runs its plan on Flink dynamic tables with a
 10 s bounded-out-of-orderness watermark and window-close emission
@@ -7,148 +7,55 @@ Spark mapping: ``withWatermark`` + windowed aggregation in append mode —
 windows emit once the watermark passes window end; late rows are dropped
 identically.
 
-Streaming plan shape (per stream — vertices and edges):
+There is no streaming-specific plan: the summary streams are the stage
+methods of ``operators/grouping.py`` applied to watermarked streaming
+DataFrames (per stream — vertices and edges):
 
   readStream → withWatermark(event_time, delay)
-    → dropDuplicatesWithinWatermark(observation key)      [stage 1/2 dedup]
-    → groupBy(window(event_time), label, group-prop cols)  [stage 4/9 agg]
-    → foreachBatch: idempotent MERGE into the sink keyed (window, group key)
+    → window assignment [+ windowed DISTINCT]             [stage 1/2]
+    → aggregate by (window, label, group-prop cols)       [stage 4/9 agg]
+    → foreachBatch: exactly-once commit keyed (window, group key)
 
-Dedup note: the batch engine dedups on the full observation row per window
-(A6). In streaming we dedup on (element id, event_time) within the
-watermark horizon — exact for triple-derived streams, where every duplicate
-observation of a vertex is byte-identical (the transcript binding
-guarantees this; duplicates arise only from the 2-endpoints-per-edge split).
-
-Skew note: the streaming state store partitions by group key; a hot (role,
-window) key pins one partition. ``salt_buckets > 0`` splits the first-level
-state key with a deterministic salt and merges partials in foreachBatch —
-the "salted partial aggregation + final merge" design.
+The windowed DISTINCT is a stateful deduplication keyed by the window (the
+raw event time for session windows), so its state is evicted by the
+watermark; producers that emit each element once (the transcript binding)
+skip it. ``salt_buckets > 0`` chains both salted phases as stateful
+aggregations in the same query.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-from typing import Callable
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..config import StreamGraphConfig, WindowKind
-from ..functions.properties import canonical_props, super_element_id
-from ..model import NO_LABEL
-from ..operators.grouping import GraphStreamGrouping, window_expr, rowtime_expr
+from ..operators.grouping import GraphStreamGrouping
 
 
 def streaming_vertex_summaries(
     op: GraphStreamGrouping, vertices: DataFrame, observations_unique: bool = False
 ) -> DataFrame:
-    """Watermarked dedup + windowed vertex aggregation (stages 1+3+4+5) as a
-    single continuous plan. Returns the super-vertex stream in append mode.
-
-    ``vertices`` must already carry an event-time watermark on
-    ``event_time`` (defined once, at the source/join inputs).
+    """Super-vertex summary stream (stages 1+3+4) over a vertex-observation
+    stream that already carries an event-time watermark on ``event_time``.
     ``observations_unique`` skips the dedup state store when the producer
-    guarantees one row per vertex (the transcript binding does).
-    """
+    guarantees one row per vertex (the transcript binding does; tumbling
+    windows only)."""
     if observations_unique:
-        enhanced = op.enhance_vertices(vertices)
+        deduped = op.assign_window_vertices(vertices)
     else:
-        v = vertices.select(
-            "vertex_id",
-            "event_time",
-            "vertex_label",
-            canonical_props("vertex_properties").alias("_props_c"),
-        ).dropDuplicatesWithinWatermark(["vertex_id", "event_time"])
-        enhanced = op.enhance_vertices(
-            v.select(
-                "vertex_id",
-                "event_time",
-                "vertex_label",
-                F.map_from_entries("_props_c").alias("vertex_properties"),
-            )
-        )
-    group_cols = op._vertex_group_cols()
-    agg_exprs = [a.agg_expr(op._agg_in(a)) for a in op.vertex_aggs] or [
-        F.count(F.lit(1)).alias("_group_size")
-    ]
-    if op.config.salt_buckets > 0 and op.window.kind != WindowKind.SESSION:
-        # salted partial agg — final merge happens in the sink's foreachBatch
-        partials = []
-        for a in op.vertex_aggs:
-            partials += a.partial_exprs(op._agg_in(a))
-        grouped = (
-            enhanced.withColumn(
-                "_salt", F.pmod(F.xxhash64("vertex_id"), F.lit(op.config.salt_buckets))
-            )
-            .groupBy(window_expr(op.window, "event_time").alias("window"), *group_cols, "_salt")
-            .agg(*(partials or [F.count(F.lit(1)).alias("_p__group_size")]))
-        )
-        return grouped  # partial rows; merge via merge_partials()
-    grouped = enhanced.groupBy(
-        window_expr(op.window, "event_time").alias("window"), *group_cols
-    ).agg(*agg_exprs)
-    return _project_super_vertices(op, grouped)
-
-
-def merge_partials(op: GraphStreamGrouping, partial_batch: DataFrame) -> DataFrame:
-    """Final merge of salted partials (runs inside foreachBatch, per
-    micro-batch of *closed* windows — append mode guarantees each (window,
-    key, salt) row arrives exactly once)."""
-    group_cols = op._vertex_group_cols()
-    merges = [a.merge_expr() for a in op.vertex_aggs] or [
-        F.sum("_p__group_size").alias("_group_size")
-    ]
-    grouped = partial_batch.groupBy("window", *group_cols).agg(*merges)
-    return _project_super_vertices(op, grouped)
-
-
-def _project_super_vertices(op: GraphStreamGrouping, grouped: DataFrame) -> DataFrame:
-    label = F.col("vertex_label") if op.use_vertex_labels else F.lit(NO_LABEL)
-    keep = ["window"] + [op._gk(i) for i in range(len(op.vertex_grouping_keys))]
-    agg_out = [a.output_key for a in op.vertex_aggs]
-    out = grouped.select(
-        *keep,
-        rowtime_expr().alias("event_time"),
-        label.alias("vertex_label"),
-        *agg_out,
-    ).withColumn(
-        "super_vertex_id", super_element_id(op._vertex_id_hash_fields(), op.config.id_hash)
-    )
-    return out
+        deduped = op.dedup_vertices(vertices)
+    return op.group_vertices(op.enhance_vertices(deduped))
 
 
 def streaming_edge_summaries(op: GraphStreamGrouping, triples: DataFrame) -> DataFrame:
-    """Edge path (stages 2+6+7+8+9) over the (already-watermarked) triple
-    stream: endpoint super ids are recomputed per edge (joinless fast path),
-    then windowed aggregation. Triple-derived successor edges are unique by
-    construction (one edge per (conv_id, turn_idx) pair), so no explicit
-    dedup state is needed on this path."""
-    expanded = triples.transform(op.expand_triples_stateless)
-    enriched = op.enrich_edges(expanded)
-    group_cols = op._edge_group_cols()
-    agg_exprs = [a.agg_expr(op._agg_in(a)) for a in op.edge_aggs] or [
-        F.count(F.lit(1)).alias("_group_size")
-    ]
-    grouped = enriched.groupBy(
-        window_expr(op.window, "event_time").alias("window"), *group_cols
-    ).agg(*agg_exprs)
-    label = F.col("edge_label") if op.use_edge_labels else F.lit(NO_LABEL)
-    keep = ["window", "source_id", "target_id"] + [
-        op._egk(i) for i in range(len(op.edge_grouping_keys))
-    ]
-    agg_out = [a.output_key for a in op.edge_aggs]
-    return grouped.select(
-        *keep,
-        rowtime_expr().alias("event_time"),
-        label.alias("edge_label"),
-        *agg_out,
-    ).withColumn("super_edge_id", super_element_id(op._edge_id_hash_fields(), op.config.id_hash))
+    """Super-edge summary stream (stages 2+6+7+8+9) over the watermarked
+    triple stream: endpoint super ids are recomputed per edge (joinless fast
+    path). Triple-derived successor edges are unique by construction (one
+    edge per (conv_id, turn_idx) pair), so no dedup state is needed."""
+    expanded = op.edges_with_super_vertices_from_triples(triples, edges_unique=True)
+    return op.group_edges(op.enrich_edges(expanded))
 
 
-def summary_triples(
-    super_vertices: DataFrame, super_edges: DataFrame, watermark: str | None = None
-) -> DataFrame:
+def summary_triples(super_vertices: DataFrame, super_edges: DataFrame) -> DataFrame:
     """Stream-stream join of the vertex and edge summary streams on
     (super-vertex id, window) — J3 chained after the windowed aggregations.
 
@@ -158,19 +65,8 @@ def summary_triples(
     derived ``event_time`` instead re-anchors the rows against the already-
     advanced global watermark, which classifies every summary row as late
     and silently drops it (observed: zero join output). Join state is
-    evicted via the propagated operator watermark; ``watermark`` is
-    deprecated and has NO effect.
+    evicted via the propagated operator watermark.
     """
-    if watermark is not None:
-        import warnings
-
-        warnings.warn(
-            "summary_triples(watermark=...) is deprecated and ignored: join-state "
-            "eviction follows the watermarks propagated from the upstream windowed "
-            "aggregations (re-watermarking here would drop every row)",
-            DeprecationWarning,
-            stacklevel=2,
-        )
     sv, se = super_vertices, super_edges
     src = sv.select(
         F.col("super_vertex_id").alias("_sid"),

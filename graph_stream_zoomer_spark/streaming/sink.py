@@ -56,9 +56,7 @@ class IdempotentParquetSink:
     path; identical exactly-once contract). A non-local root raises
     immediately rather than failing mid-stream."""
 
-    def __init__(self, root: str, key_cols: list[str] | None = None, transform=None) -> None:
-        """``transform``: optional DataFrame→DataFrame applied to each batch
-        before commit — used for the salted final merge (merge_partials)."""
+    def __init__(self, root: str, key_cols: list[str] | None = None) -> None:
         scheme = root.split("://", 1)[0] if "://" in root else ""
         if scheme not in ("", "file"):
             raise ValueError(
@@ -67,7 +65,6 @@ class IdempotentParquetSink:
                 f"lineage are POSIX-path based. Use IcebergMergeSink for "
                 f"object-store deployments."
             )
-        self.transform = transform
         # strip the scheme BEFORE deriving sub-paths: os.path.join on a
         # "file://…" string builds a RELATIVE "file:/…" tree under the cwd
         self.root = root.removeprefix("file://")
@@ -119,8 +116,6 @@ class IdempotentParquetSink:
         if batch_id in self._committed():
             return  # replayed batch after restart — idempotent skip
         t0 = time.time()
-        if self.transform is not None:
-            batch = self.transform(batch)
         flat = flatten_window(batch)
         target = os.path.join(self.data_dir, f"batch_id={batch_id}")
         tmp = target + ".tmp"

@@ -136,11 +136,11 @@ def worker(cpus: int, input_dir: str) -> None:
     else:
         t = generate_transcripts(spark, N_CONVS_BATCH, num_partitions=64)
         n_turns = t.count()
-        _ = transcript_graph(t.limit(1000), cfg, use_arrow=False).apply(op).vertices.count()  # warm
+        _ = transcript_graph(t.limit(1000), cfg).apply(op).vertices.count()  # warm
         batch_times = []
         for _i in range(n_runs):  # extra trial: the first is JIT-cold
             t0 = time.time()
-            out = transcript_graph(t, cfg, use_arrow=False).apply(op)
+            out = transcript_graph(t, cfg).apply(op)
             _rows = out.vertices.count() + out.edges.count()
             batch_times.append(time.time() - t0)
         # min of the warm trials: transient host slowdowns only ever ADD time

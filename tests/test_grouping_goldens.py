@@ -136,12 +136,6 @@ def test_config_b_salted(graph):
     _check_config_b(graph.apply(_build_config_b(cfg)))
 
 
-def test_config_b_arrow_extraction(graph):
-    """Arrow-vectorized property extraction path matches Catalyst path."""
-    cfg = StreamGraphConfig(use_arrow_extraction=True)
-    _check_config_b(graph.apply(_build_config_b(cfg)))
-
-
 def test_super_vertex_membership_map(graph):
     """Vertex→super-vertex grouping: {v1,v3},{v2,v4},{v5,v7},{v6,v8}
     (LabelGroupSizeAggTest.java:169-187): same super id within a group,

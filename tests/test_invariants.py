@@ -32,7 +32,7 @@ CONFIGS = [
 def graph(spark):
     t = generate_transcripts(spark, 80, late_fraction_pct=0).cache()
     cfg = StreamGraphConfig(window=WindowConfig.tumbling(120, "SECONDS"))
-    return transcript_graph(t, cfg, use_arrow=False), cfg
+    return transcript_graph(t, cfg), cfg
 
 
 @pytest.mark.parametrize("keys,aggs", CONFIGS)

@@ -42,7 +42,7 @@ def test_grouping_pipeline_shuffle_budget(spark):
     a projection), regardless of data size."""
     cfg = StreamGraphConfig(window=WindowConfig.tumbling(600, "SECONDS"))
     t = generate_transcripts(spark, 200)
-    graph = transcript_graph(t, cfg, use_arrow=False)
+    graph = transcript_graph(t, cfg)
     out = graph.apply(_op(cfg))
     for df in (out.vertices, out.edges):
         st = plan_stats(df)
@@ -74,13 +74,9 @@ def test_grouping_stays_in_codegen(spark):
 
     cfg = StreamGraphConfig(window=WindowConfig.tumbling(600, "SECONDS"))
     t = generate_transcripts(spark, 200)
-    out = transcript_graph(t, cfg, use_arrow=False).apply(op_with_prop(cfg))
+    out = transcript_graph(t, cfg).apply(op_with_prop(cfg))
     txt = plan_stats(out.vertices).text
     assert "EvalPython" not in txt
-    # the Arrow variant routes extraction through ArrowEvalPython (by design)
-    cfg2 = StreamGraphConfig(window=cfg.window, use_arrow_extraction=True)
-    out2 = transcript_graph(t, cfg2, use_arrow=True).apply(op_with_prop(cfg2))
-    assert "ArrowEvalPython" in plan_stats(out2.vertices).text
 
 
 def test_session_expand_join_broadcasts_summary_side(spark):
@@ -90,7 +86,7 @@ def test_session_expand_join_broadcasts_summary_side(spark):
     raw side and never a nested-loop fallback."""
     cfg = StreamGraphConfig(window=WindowConfig.session(300, "SECONDS"))
     t = generate_transcripts(spark, 200)
-    graph = transcript_graph(t, cfg, use_arrow=False)
+    graph = transcript_graph(t, cfg)
     op = _op(cfg)
     # stage 6 in isolation (the full edge plan also holds the legitimate
     # big×big raw-edge join; this pins the raw-vertex × summary join only)
@@ -205,7 +201,7 @@ def test_salted_agg_two_phase_shape(spark):
     partial_* HashAggregates must appear more than the exchange count."""
     cfg = StreamGraphConfig(window=WindowConfig.tumbling(600, "SECONDS"), salt_buckets=8)
     t = generate_transcripts(spark, 200)
-    out = transcript_graph(t, cfg, use_arrow=False).apply(_op(cfg))
+    out = transcript_graph(t, cfg).apply(_op(cfg))
     txt = plan_stats(out.vertices).text
     assert txt.count("HashAggregate") >= 4  # (partial+final) × (salted, merge)
 
@@ -314,3 +310,58 @@ def test_tpch_q3_broadcasts_dim_and_takeordered(spark):
     assert "BroadcastNestedLoopJoin" not in st.text and "CartesianProduct" not in st.text
     assert "TakeOrderedAndProject" in st.text, st.text[:3000]
     assert any("l_shipdate" in f or "o_orderdate" in f for f in st.pushed_filters), st.pushed_filters
+
+
+def test_streaming_job_plan_shape(spark, tmp_path, monkeypatch):
+    """The unified streaming query runs exactly four state operators per
+    data trigger (the successor join, the turn-0 ⋈ turn-1 join and the two
+    windowed aggregations) with the same state keys, no Python evaluation,
+    and reads each chunk at most five times (both successor-join sides and
+    the vertex stream's three branches scan the source)."""
+    import os
+    import re
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from graph_stream_zoomer_spark.streaming.job import read_transcript_stream, run_grouping_job
+
+    queries = []
+    start = DataStreamWriter.start
+
+    def recording_start(self, *args, **kwargs):
+        queries.append(start(self, *args, **kwargs))
+        return queries[-1]
+
+    monkeypatch.setattr(DataStreamWriter, "start", recording_start)
+    turns = generate_transcripts(spark, 30, late_fraction_pct=0, skew=False)
+    table = pa.Table.from_pandas(turns.toPandas(), preserve_index=False).sort_by("ts")
+    d = str(tmp_path / "turns")
+    os.makedirs(d)
+    half = table.num_rows // 2
+    chunks = [table.slice(0, half), table.slice(half)]
+    for i, chunk in enumerate(chunks):
+        f = os.path.join(d, f"chunk-{i}.parquet")
+        pq.write_table(chunk.cast(chunk.schema.set(5, pa.field("ts", pa.timestamp("us", "UTC")))), f)
+        os.utime(f, (1_700_000_000 + i, 1_700_000_000 + i))
+    cfg = StreamGraphConfig(window=WindowConfig.tumbling(600, "SECONDS"))
+    stream = read_transcript_stream(spark, d, max_files_per_trigger=1)
+    result = run_grouping_job(spark, stream, _op(cfg), str(tmp_path / "out"), unified=True)
+
+    data = [p for p in result.listener.progress if p["num_input_rows"] > 0]
+    assert len(data) == len(chunks), result.listener.progress
+    for p, chunk in zip(data, chunks):
+        ops = sorted(so["operator"] for so in p["state_detail"])
+        assert ops == ["stateStoreSave"] * 2 + ["symmetricHashJoin"] * 2, ops
+        assert p["num_input_rows"] <= 5 * chunk.num_rows, (p["num_input_rows"], chunk.num_rows)
+    (q,) = queries
+    plan = q._jsq.explainInternal(True)
+    assert "EvalPython" not in plan, plan[:3000]
+    # the aggregation state is keyed by the watermarked window and the
+    # grouping columns only
+    keys = sorted(re.sub(r"#\d+", "", k) for k in re.findall(r"StateStoreSave \[([^\]]*)\]", plan))
+    assert keys == [
+        "window-T10000ms, source_id, target_id, edge_label",
+        "window-T10000ms, vertex_label",
+    ], keys

@@ -45,8 +45,8 @@ def test_csv_roundtrip_matches_parquet_path(spark, tmp_path):
         .set_config(cfg)
         .build()
     )
-    out_mem = transcript_graph(turns, cfg, use_arrow=False).apply(op)
-    out_csv = transcript_graph(back, cfg, use_arrow=False).apply(op)
+    out_mem = transcript_graph(turns, cfg).apply(op)
+    out_csv = transcript_graph(back, cfg).apply(op)
 
     def key(df):
         return {

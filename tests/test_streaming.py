@@ -50,7 +50,7 @@ def _sentinel(spark):
 
 def _batch_expected(spark, turns):
     """Ground truth from the batch engine on the same (real) turns."""
-    graph = transcript_graph(turns, use_arrow=False)
+    graph = transcript_graph(turns)
     out = graph.apply(_op())
     sv = {
         (r["vertex_label"], r["event_time"]): int(r["vertex_properties"]["count"])
@@ -354,7 +354,7 @@ def test_streaming_set_aggregates_match_batch(spark, tmp_path):
             .build()
         )
 
-    graph = transcript_graph(turns, use_arrow=False)
+    graph = transcript_graph(turns)
     want = {
         (
             r["vertex_label"],

@@ -58,7 +58,7 @@ def _run_vertex_stream(spark, tmp_path, window):
         for r in sink.read(spark).where(F.col("window_start") < "2029-01-01").collect()
     }
     # batch ground truth (dedup path — no uniqueness hint — same result)
-    graph = transcript_graph(turns, StreamGraphConfig(window=window), use_arrow=False)
+    graph = transcript_graph(turns, StreamGraphConfig(window=window))
     batch = graph.apply(_op(window))
     exp = {
         (r["vertex_label"], r["event_time"]): int(r["vertex_properties"]["count"])
@@ -113,7 +113,7 @@ def test_percentile_aggregate_streaming_matches_batch(spark, tmp_path):
         (r["vertex_label"], r["event_time"]): (int(r["count"]), float(r["p50_text_len"]))
         for r in sink.read(spark).where(F.col("window_start") < "2029-01-01").collect()
     }
-    batch = transcript_graph(turns, StreamGraphConfig(window=window), use_arrow=False).apply(op)
+    batch = transcript_graph(turns, StreamGraphConfig(window=window)).apply(op)
     exp = {
         (r["vertex_label"], r["event_time"]): (
             int(r["vertex_properties"]["count"]),

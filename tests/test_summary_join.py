@@ -95,7 +95,7 @@ def test_streaming_summary_triples_match_batch(spark, tmp_path):
     assert len(got) == len(got_rows)  # join keys unique per summary triple
 
     # --- batch ground truth: same grouping, to_triples() join ------------
-    exp_triples = transcript_graph(turns, use_arrow=False).apply(op).to_triples()
+    exp_triples = transcript_graph(turns).apply(op).to_triples()
     exp_rows = exp_triples.select(
         "edge_label",
         "event_time",
