@@ -413,7 +413,7 @@ def main() -> None:
     if len(line) > 1800:  # step 2: 1-decimal cells (±0.05 s, noise floor)
         compact["queries"] = {k: round(v, 1) for k, v in timings.items()}
         line = json.dumps(compact, separators=(",", ":"))
-    if len(line) > 1900:  # step 3: drop the slowest-last tail of the map
+    if len(line) > 1900:  # step 3: drop the fastest cells first, keeping the slow ones
         items = sorted(timings.items(), key=lambda kv: kv[1], reverse=True)
         while len(line) > 1900 and items:
             items.pop()

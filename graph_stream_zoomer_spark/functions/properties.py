@@ -23,9 +23,12 @@ from pyspark.sql import functions as F
 
 
 def extract_property(props_col: Column | str, key: str) -> Column:
-    """P1: pull one key out of the property bag. Pure Catalyst."""
+    """P1: pull one key out of the property bag; NULL when the bag lacks
+    it. Pure Catalyst: a ``GetMapValue`` (``col[key]``), which
+    SimplifyExtractValueOps folds to the one value read when the bag is a
+    ``create_map``, so a bag entry that nothing reads is never computed."""
     c = F.col(props_col) if isinstance(props_col, str) else props_col
-    return F.element_at(c, key)
+    return c[key]
 
 
 def super_element_id(fields: Sequence[Column], algo: str = "sha1") -> Column:

@@ -178,23 +178,17 @@ class GraphStreamGrouping:
         # epoch millis so the id is timezone-name independent
         return F.unix_millis(rowtime.cast("timestamp")).cast("string")
 
-    def _vertex_super_id(self, side: str | None = None) -> Column:
+    def _vertex_super_id(self, prefix: str = "") -> Column:
         """CreateSuperElementId over [label?] + grouping values + rowtime
         (TableGroupingBase.java buildVertexProjectExpressions; rowtime is
         always the last hash field): of the promoted vertex columns with the
-        rowtime in ``event_time``, or of the inline StreamTriple endpoint
-        struct ``side`` with the rowtime of the carried window."""
-        if side is None:
-            label, rowtime = F.col("vertex_label"), F.col("event_time")
-            values = [F.col(self._gk(i)) for i in range(len(self.vertex_grouping_keys))]
-        else:
-            label, rowtime = F.col(f"{side}.vertex_label"), rowtime_expr()
-            props = F.col(f"{side}.vertex_properties")
-            values = [extract_property(props, k) for k in self.vertex_grouping_keys]
-        fields = [label] if self.use_vertex_labels else []
-        return super_element_id(
-            [*fields, *values, self._rowtime_ms(rowtime)], self.config.id_hash
-        )
+        rowtime in ``event_time``, or of the StreamTriple endpoint columns
+        that the triple fast path extracts under ``prefix`` with the rowtime
+        of the carried window."""
+        fields = [F.col(f"{prefix}vertex_label")] if self.use_vertex_labels else []
+        fields += [F.col(prefix + self._gk(i)) for i in range(len(self.vertex_grouping_keys))]
+        rowtime = rowtime_expr() if prefix else F.col("event_time")
+        return super_element_id([*fields, self._rowtime_ms(rowtime)], self.config.id_hash)
 
     def _edge_super_id(self) -> Column:
         """Default: src + tgt + [label?] + grouping values + rowtime.
@@ -354,25 +348,40 @@ class GraphStreamGrouping:
         source/target ids are *recomputed* per edge — no shuffle at all on
         the edge-expansion path. Tumbling/sliding only.
 
+        Each endpoint's label and grouping values are extracted in the
+        same projection as the window assignment. The
+        next projection references the window several times, so Catalyst
+        does not inline the binding into it; extracting beside the window
+        lets the endpoint structs and their property bags fold away to the
+        fields the keys read instead of being built per edge.
+
         ``edges_unique`` skips the windowed dedup (one fewer shuffle, and
         no dedup state in Structured Streaming) when the producer
         guarantees distinct edge observations."""
         assert self.window.kind != WindowKind.SESSION
+
+        def endpoint(side: str) -> list[Column]:
+            props = F.col(f"{side}.vertex_properties")
+            return [F.col(f"{side}.vertex_label").alias(f"{side}_vertex_label")] + [
+                extract_property(props, k).alias(f"{side}_{self._gk(i)}")
+                for i, k in enumerate(self.vertex_grouping_keys)
+            ]
+
         windowed = triples.select(
             window_expr(self.window, "event_time").alias("window"),
             "edge_id",
             "edge_label",
             "edge_properties",
-            "source",
-            "target",
+            *endpoint("source"),
+            *endpoint("target"),
         )
         expanded = windowed.select(
             "window",
             "edge_id",
             "edge_label",
             "edge_properties",
-            self._vertex_super_id("source").alias("source_id"),
-            self._vertex_super_id("target").alias("target_id"),
+            self._vertex_super_id("source_").alias("source_id"),
+            self._vertex_super_id("target_").alias("target_id"),
             rowtime_expr().alias("event_time"),
         )
         if edges_unique and self.window.kind == WindowKind.TUMBLING:

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..config import StreamGraphConfig
-from ..model import StreamGraph
+from ..model import VERTEX_SCHEMA, VERTEX_STRUCT, StreamGraph
 
 FILLER = "the quick brown fox jumps over the lazy dog and then it stops to think "
 BASE_EPOCH = 1735689600  # 2025-01-01 00:00:00 UTC
@@ -114,101 +114,114 @@ def generate_transcripts(
 
 
 # ---------------------------------------------------------------------------
-# transcript → property-graph binding
+# transcript → property-graph binding: one spec for batch and streaming
 # ---------------------------------------------------------------------------
 
-def _turn_props(prefix: str = "") -> list[Column]:
-    """Per-turn derived properties: tool, text_len, time-bucket (hour)."""
+def slim_turns(t: DataFrame) -> DataFrame:
+    """The turn columns the graph is built from, projected BEFORE any
+    ``conv_id`` exchange, analytic window or state store: the raw ``text``
+    payload dominates row bytes but only its length survives into the
+    properties. Catalyst does not push ``length(text)`` below a window or
+    a stream-stream join, so without this projection the batch ``count()``
+    and ``lead()`` windows shuffle every turn's text, and the streaming
+    successor join serializes it into its state store per micro-batch."""
+    return t.select("conv_id", "turn_idx", "role", "tool", "ts", F.length("text").alias("text_len"))
+
+
+def _prop_entries(p: str) -> list[Column]:
+    """Key/value entries of a turn's property bag: tool, text_len and the
+    hour bucket of its time."""
     return [
-        F.col(f"{prefix}tool").alias("tool"),
-        F.length(f"{prefix}text").cast("string").alias("text_len"),
-        F.date_format(F.col(f"{prefix}ts"), "yyyy-MM-dd HH").alias("hour_bucket"),
+        F.lit("tool"), F.col(f"{p}tool"),
+        F.lit("text_len"), F.col(f"{p}text_len").cast("string"),
+        F.lit("hour_bucket"), F.date_format(F.col(f"{p}ts"), "yyyy-MM-dd HH"),
+    ]
+
+
+def _turn_vertex(p: str, conv_id: str | None = None) -> dict[str, Column]:
+    """The vertex of the turn whose slim columns are named ``{p}<column>``
+    (``""``/``"n_"`` over the batch ``lead()``, ``"a."``/``"b."`` over the
+    streaming join); ``conv_id`` names its conversation column when the
+    prefix has none. vertex_id = conv_id:turn_idx, label = role
+    (SURVEY.md §1.4). The bag is a ``create_map``: a key lookup of it folds
+    to the one entry read (SimplifyExtractValueOps), so entries that no
+    key or aggregate reads are never computed."""
+    return {
+        "vertex_id": F.concat_ws(
+            ":", F.col(conv_id or f"{p}conv_id"), F.col(f"{p}turn_idx").cast("string")
+        ),
+        "event_time": F.col(f"{p}ts"),
+        "vertex_label": F.col(f"{p}role"),
+        "vertex_properties": F.create_map(*_prop_entries(p)),
+    }
+
+
+def vertex_columns(p: str = "") -> list[Column]:
+    """The turn's vertex as VERTEX_SCHEMA columns (see ``_turn_vertex``)."""
+    v = _turn_vertex(p)
+    return [v[f].alias(f) for f in VERTEX_SCHEMA.fieldNames()]
+
+
+def triple_columns(a: str, b: str, conv_id: str | None = None) -> list[Column]:
+    """The successor edge a → b with both endpoint vertices as
+    TRIPLE_SCHEMA columns. The edge takes b's time, its label is the role
+    transition, and its bag is b's bag plus ``transition``."""
+    src, tgt = _turn_vertex(a), _turn_vertex(b, conv_id)
+    label = F.concat_ws("->", F.col(f"{a}role"), F.col(f"{b}role"))
+
+    def vstruct(v: dict[str, Column]) -> Column:
+        return F.struct(*[v[f].alias(f) for f in VERTEX_STRUCT.fieldNames()])
+
+    return [
+        F.concat(src["vertex_id"], F.lit("->"), F.col(f"{b}turn_idx").cast("string")).alias(
+            "edge_id"
+        ),
+        tgt["event_time"].alias("event_time"),
+        label.alias("edge_label"),
+        F.create_map(*_prop_entries(b), F.lit("transition"), label).alias("edge_properties"),
+        vstruct(src).alias("source"),
+        vstruct(tgt).alias("target"),
     ]
 
 
 def transcript_vertices(t: DataFrame) -> DataFrame:
-    """vertex_id = conv_id:turn_idx, label = role (SURVEY.md §1.4)."""
-    props = _turn_props()
-    return t.select(
-        F.concat_ws(":", "conv_id", F.col("turn_idx").cast("string")).alias("vertex_id"),
-        F.col("ts").alias("event_time"),
-        F.col("role").alias("vertex_label"),
-        F.map_from_arrays(
-            F.array(F.lit("tool"), F.lit("text_len"), F.lit("hour_bucket")),
-            F.array(*[p for p in props]),
-        ).alias("vertex_properties"),
-    )
+    """Every turn as a vertex (raw turns in, VERTEX_SCHEMA out)."""
+    return slim_turns(t).select(*vertex_columns())
 
 
 def transcript_triples(t: DataFrame) -> DataFrame:
     """Successor triples via a single pass: lead() over (conv_id, turn_idx).
 
-    One analytic-window shuffle partitioned by conv_id; both endpoint turns
-    ride along inline, so the grouping operator's joinless fast path applies.
-    Batch form — the streaming form uses a watermarked self-join
-    (streaming/binding.py).
-    """
+    One analytic-window shuffle partitioned by conv_id, over the slim turns
+    (``text_len``, never ``text``). Both endpoint turns ride along inline
+    as StreamTriple structs, so the grouping operator's joinless fast path
+    applies; that path reads only the endpoint fields its keys need, and
+    Catalyst prunes the rest (unread ``lead()`` columns included). Batch
+    form — the streaming form uses a watermarked self-join
+    (streaming/binding.py)."""
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    nxt = t.select(
-        "conv_id",
-        "turn_idx",
-        "role",
-        "text",
-        "tool",
-        "ts",
-        F.lead("turn_idx").over(w).alias("n_turn_idx"),
-        F.lead("role").over(w).alias("n_role"),
-        F.lead("text").over(w).alias("n_text"),
-        F.lead("tool").over(w).alias("n_tool"),
-        F.lead("ts").over(w).alias("n_ts"),
-    ).where(F.col("n_turn_idx").isNotNull())
-
-    def vstruct(id_expr: Column, label: str, props: list[Column], ts_col: str) -> Column:
-        return F.struct(
-            id_expr.alias("vertex_id"),
-            F.col(label).alias("vertex_label"),
-            F.map_from_arrays(
-                F.array(F.lit("tool"), F.lit("text_len"), F.lit("hour_bucket")),
-                F.array(*props),
-            ).alias("vertex_properties"),
-            F.col(ts_col).alias("event_time"),
-        )
-
-    src_id = F.concat_ws(":", "conv_id", F.col("turn_idx").cast("string"))
-    tgt_id = F.concat_ws(":", "conv_id", F.col("n_turn_idx").cast("string"))
-    edge_props = F.map_from_arrays(
-        F.array(F.lit("tool"), F.lit("text_len"), F.lit("hour_bucket"), F.lit("transition")),
-        F.array(
-            F.col("n_tool"),
-            F.length("n_text").cast("string"),
-            F.date_format(F.col("n_ts"), "yyyy-MM-dd HH"),
-            F.concat_ws("->", "role", "n_role"),
-        ),
-    )
-    return nxt.select(
-        F.concat(src_id, F.lit("->"), F.col("n_turn_idx").cast("string")).alias("edge_id"),
-        F.col("n_ts").alias("event_time"),
-        F.concat_ws("->", "role", "n_role").alias("edge_label"),
-        edge_props.alias("edge_properties"),
-        vstruct(src_id, "role", _turn_props(), "ts").alias("source"),
-        vstruct(tgt_id, "n_role", _turn_props("n_"), "n_ts").alias("target"),
-    )
+    cols = ("turn_idx", "role", "tool", "ts", "text_len")
+    leads = [F.lead(c).over(w).alias(f"n_{c}") for c in cols]
+    nxt = slim_turns(t).select("*", *leads).where(F.col("n_turn_idx").isNotNull())
+    return nxt.select(*triple_columns("", "n_", conv_id="conv_id"))
 
 
 def transcript_graph_vertices(t: DataFrame) -> DataFrame:
-    """Vertex stream derived in ONE pass over the turns table: the set of
+    """Vertex stream derived in ONE pass over the slim turns: the set of
     triple endpoints = every turn of a conversation with ≥2 turns, each
     exactly once. Splitting the triple stream instead (Extractor-style,
     split_triples) would emit each interior turn twice and need a dedup
     shuffle. The count-over-conversation window does NOT share the
     successor lead()'s exchange: the vertex and triple streams are separate
     queries, so each scans the turns and has its own
-    ``Exchange hashpartitioning(conv_id)``."""
+    ``Exchange hashpartitioning(conv_id)``, which carries ``text_len``
+    rather than ``text``."""
     w = Window.partitionBy("conv_id")
     return (
-        t.withColumn("_conv_turns", F.count(F.lit(1)).over(w))
+        slim_turns(t)
+        .withColumn("_conv_turns", F.count(F.lit(1)).over(w))
         .where(F.col("_conv_turns") >= 2)
-        .transform(transcript_vertices)
+        .select(*vertex_columns())
     )
 
 

@@ -13,6 +13,13 @@ watermark — without it the join would buffer every turn forever. Turns
 farther apart than max_turn_gap produce no successor edge (a documented
 sessionization bound, not present in batch).
 
+Both forms bind with the one spec in ``sources/transcripts.py``: the
+turns are first projected to their slim columns (``slim_turns``: ``text``
+becomes ``text_len`` before the join, so no raw payload reaches the join
+state), and the vertex columns and StreamTriple rows are built from the
+``a.``/``b.`` sides of the join exactly as batch builds them from a turn
+and its ``lead()`` successor.
+
 Scale: the join shuffles both sides by conv_id; at 10^12 turns this is the
 dominant shuffle, so the input table should be written bucketed/partitioned
 by conv_id (Iceberg: ``bucket(N, conv_id)``) to allow storage-partitioned
@@ -24,23 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _slim(turns: DataFrame) -> DataFrame:
-    """Project the turn stream down to what the summaries actually consume
-    BEFORE any stateful operator: the raw ``text`` payload dominates row
-    bytes but only its length survives into the properties, so carrying it
-    into the stream-stream join would multiply state-store volume (every
-    buffered row is serialized to the state store per micro-batch) by the
-    payload size. Pushdown here is worth more than any knob downstream —
-    state I/O is the streaming job's scaling ceiling on shared disks."""
-    return turns.select(
-        "conv_id",
-        "turn_idx",
-        "role",
-        "tool",
-        "ts",
-        F.length("text").cast("int").alias("text_len"),
-    )
+from ..sources.transcripts import slim_turns, triple_columns, vertex_columns
 
 
 def _joined_successors(turns: DataFrame, watermark: str, max_turn_gap: str) -> DataFrame:
@@ -61,49 +52,8 @@ def streaming_transcript_triples(
     watermark: str = "10 seconds",
     max_turn_gap: str = "1 hour",
 ) -> DataFrame:
-    joined = _joined_successors(_slim(turns), watermark, max_turn_gap)
-
-    def props(side: str):
-        return F.map_from_arrays(
-            F.array(F.lit("tool"), F.lit("text_len"), F.lit("hour_bucket")),
-            F.array(
-                F.col(f"{side}.tool"),
-                F.col(f"{side}.text_len").cast("string"),
-                F.date_format(F.col(f"{side}.ts"), "yyyy-MM-dd HH"),
-            ),
-        )
-
-    def vid(side: str):
-        return F.concat_ws(
-            ":", F.col(f"{side}.conv_id"), F.col(f"{side}.turn_idx").cast("string")
-        )
-
-    return joined.select(
-        F.concat(vid("a"), F.lit("->"), F.col("b.turn_idx").cast("string")).alias("edge_id"),
-        F.col("b.ts").alias("event_time"),
-        F.concat_ws("->", F.col("a.role"), F.col("b.role")).alias("edge_label"),
-        F.map_from_arrays(
-            F.array(F.lit("tool"), F.lit("text_len"), F.lit("hour_bucket"), F.lit("transition")),
-            F.array(
-                F.col("b.tool"),
-                F.col("b.text_len").cast("string"),
-                F.date_format(F.col("b.ts"), "yyyy-MM-dd HH"),
-                F.concat_ws("->", F.col("a.role"), F.col("b.role")),
-            ),
-        ).alias("edge_properties"),
-        F.struct(
-            vid("a").alias("vertex_id"),
-            F.col("a.role").alias("vertex_label"),
-            props("a").alias("vertex_properties"),
-            F.col("a.ts").alias("event_time"),
-        ).alias("source"),
-        F.struct(
-            vid("b").alias("vertex_id"),
-            F.col("b.role").alias("vertex_label"),
-            props("b").alias("vertex_properties"),
-            F.col("b.ts").alias("event_time"),
-        ).alias("target"),
-    )
+    joined = _joined_successors(slim_turns(turns), watermark, max_turn_gap)
+    return joined.select(*triple_columns("a.", "b."))
 
 
 def streaming_vertex_observations(
@@ -134,27 +84,9 @@ def streaming_vertex_observations(
     throughout (never repacked through structs, which strips the
     event-time marker), and the watermark is defined once per source
     branch — never redefined downstream of a stateful operator."""
-
-    def vertex_proj(df: DataFrame, prefix: str = "") -> DataFrame:
-        return df.select(
-            F.concat_ws(
-                ":", F.col(f"{prefix}conv_id"), F.col(f"{prefix}turn_idx").cast("string")
-            ).alias("vertex_id"),
-            F.col(f"{prefix}ts").alias("event_time"),
-            F.col(f"{prefix}role").alias("vertex_label"),
-            F.map_from_arrays(
-                F.array(F.lit("tool"), F.lit("text_len"), F.lit("hour_bucket")),
-                F.array(
-                    F.col(f"{prefix}tool"),
-                    F.col(f"{prefix}text_len").cast("string"),
-                    F.date_format(F.col(f"{prefix}ts"), "yyyy-MM-dd HH"),
-                ),
-            ).alias("vertex_properties"),
-        )
-
-    slim = _slim(turns)
-    rest = vertex_proj(
-        slim.withWatermark("ts", watermark).where(F.col("turn_idx") >= 1)
+    slim = slim_turns(turns)
+    rest = (
+        slim.withWatermark("ts", watermark).where(F.col("turn_idx") >= 1).select(*vertex_columns())
     )
     t0 = slim.withWatermark("ts", watermark).where(F.col("turn_idx") == 0).alias("a")
     t1 = (
@@ -170,5 +102,4 @@ def streaming_vertex_observations(
         & (F.col("_ts1") <= F.col("a.ts") + F.expr(f"INTERVAL {max_turn_gap}")),
         "inner",
     )
-    first_v = vertex_proj(first.select("a.*"))
-    return rest.unionByName(first_v)
+    return rest.unionByName(first.select(*vertex_columns("a.")))

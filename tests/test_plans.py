@@ -3,10 +3,12 @@ the results (the 100-TB contract — see graph_stream_zoomer_spark/plans)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
-from graph_stream_zoomer_spark import Count, StreamGraphConfig, WindowConfig
+from graph_stream_zoomer_spark import AvgProperty, Count, StreamGraphConfig, WindowConfig
 from graph_stream_zoomer_spark.operators.grouping import GroupingBuilder
 from graph_stream_zoomer_spark.plans.inspect import plan_stats
 from graph_stream_zoomer_spark.sources.transcripts import generate_transcripts, transcript_graph
@@ -53,6 +55,55 @@ def test_grouping_pipeline_shuffle_budget(spark):
         assert st.num_exchanges <= 2, f"{st.num_exchanges} exchanges\n" + st.text[:3000]
         # codegen spans are hidden under AdaptiveSparkPlan pre-execution;
         # Python-free-ness is asserted in test_grouping_stays_in_codegen
+
+
+def test_binding_builds_only_what_the_grouping_reads(spark, tmp_path):
+    """The flagship grouping (``:label`` keys, Count + AvgProperty
+    ("text_len")) reads each endpoint's label and the vertex text length,
+    nothing more: the edge plan never reads ``text`` from parquet, the
+    vertex plan's conv_id exchange carries ``length(text)`` instead of the
+    raw text, and neither plan builds property bags, hour buckets or
+    endpoint structs. A key that does read a bag entry keeps it."""
+    path = str(tmp_path / "turns")
+    generate_transcripts(spark, 200).write.parquet(path)
+    cfg = StreamGraphConfig(window=WindowConfig.tumbling(600, "SECONDS"))
+
+    def grouped(vertex_keys):
+        op = (
+            GroupingBuilder()
+            .add_vertex_grouping_keys(vertex_keys)
+            .add_vertex_aggregate_function(Count())
+            .add_vertex_aggregate_function(AvgProperty("text_len"))
+            .add_edge_grouping_key(":label")
+            .add_edge_aggregate_function(Count())
+            .set_window_config(cfg.window)
+            .set_config(cfg)
+            .build()
+        )
+        out = transcript_graph(spark.read.parquet(path), cfg).apply(op)
+        for df in (out.vertices, out.edges):
+            df.collect()
+        return out
+
+    out = grouped([":label"])
+    edge_reads = plan_stats(out.edges).read_schemas
+    assert edge_reads, edge_reads
+    assert all("text" not in re.findall(r"(\w+):", rs) for rs in edge_reads), edge_reads
+    vplan = _plan(out.vertices).splitlines()
+    # the final and the initial adaptive plan each list the exchange once
+    exchanges = [i for i, line in enumerate(vplan) if "Exchange hashpartitioning(conv_id" in line]
+    assert exchanges, "\n".join(vplan)
+    for below in (vplan[i + 1] for i in exchanges):
+        assert "Project [" in below and re.search(r"length\(text#\d+\) AS text_len", below), below
+        assert not re.search(r"[\[,] ?text#\d+[,\]]", below), below
+    for df in (out.vertices, out.edges):
+        plan = _plan(df)
+        for built in ("date_format", "map_from_arrays", "named_struct(vertex_id"):
+            assert built not in plan, plan[:3000]
+    # pruning drops only what nothing reads
+    keyed = grouped([":label", "hour_bucket"])
+    for df in (keyed.vertices, keyed.edges):
+        assert "date_format" in _plan(df)
 
 
 def test_grouping_stays_in_codegen(spark):
@@ -227,13 +278,13 @@ def test_streaming_join_state_carries_no_text_payload(spark):
     volume was the streaming job's scaling ceiling — BENCH.md 'Streaming
     state volume'). Catalyst does not column-prune through state stores,
     so the projection must sit below the join by construction."""
-    from graph_stream_zoomer_spark.sources.transcripts import generate_transcripts
-    from graph_stream_zoomer_spark.streaming.binding import _joined_successors, _slim
+    from graph_stream_zoomer_spark.sources.transcripts import generate_transcripts, slim_turns
+    from graph_stream_zoomer_spark.streaming.binding import _joined_successors
 
     turns = generate_transcripts(spark, 5)
-    slim_cols = set(_slim(turns).columns)
+    slim_cols = set(slim_turns(turns).columns)
     assert "text" not in slim_cols and "text_len" in slim_cols
-    joined = _joined_successors(_slim(turns), "10 seconds", "1 hour")
+    joined = _joined_successors(slim_turns(turns), "10 seconds", "1 hour")
     buffered = {f.name for f in joined.schema.fields}
     assert "text" not in buffered, "raw text payload reached the join state"
 

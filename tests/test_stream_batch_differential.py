@@ -23,7 +23,9 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from graph_stream_zoomer_spark import AvgProperty, Count, StreamGraphConfig, WindowConfig
+from graph_stream_zoomer_spark import (
+    AvgProperty, Count, MaxProperty, MinProperty, StreamGraphConfig, WindowConfig,
+)
 from graph_stream_zoomer_spark.operators.grouping import GroupingBuilder
 from graph_stream_zoomer_spark.sources.transcripts import generate_transcripts, transcript_graph
 from graph_stream_zoomer_spark.streaming.job import read_transcript_stream, run_grouping_job
@@ -50,21 +52,26 @@ SENTINEL = pa.Table.from_pylist(
 )
 
 
-def _op(salt: int):
+def _op(salt: int, keyed: bool = False):
+    """Label keys with Count + AvgProperty("text_len"), or (``keyed``) keys
+    and aggregates that read every entry of the binding's property bags:
+    vertices by tool + hour_bucket with Min/Max/AvgProperty("text_len"),
+    edges by transition with Count."""
     cfg = StreamGraphConfig(
         window=WindowConfig.tumbling(10, "MINUTES"), watermark_delay="10 seconds",
         salt_buckets=salt,
     )
+    b = GroupingBuilder()
+    if keyed:
+        b.add_vertex_grouping_keys(["tool", "hour_bucket"]).add_edge_grouping_key("transition")
+        for agg in (MinProperty, MaxProperty, AvgProperty):
+            b.add_vertex_aggregate_function(agg("text_len"))
+    else:
+        b.add_vertex_grouping_keys([":label", "tool"]).add_edge_grouping_key(":label")
+        b.add_vertex_aggregate_function(Count())
+        b.add_vertex_aggregate_function(AvgProperty("text_len"))
     return (
-        GroupingBuilder()
-        .add_vertex_grouping_keys([":label", "tool"])
-        .add_vertex_aggregate_function(Count())
-        .add_vertex_aggregate_function(AvgProperty("text_len"))
-        .add_edge_grouping_key(":label")
-        .add_edge_aggregate_function(Count())
-        .set_window_config(cfg.window)
-        .set_config(cfg)
-        .build()
+        b.add_edge_aggregate_function(Count()).set_window_config(cfg.window).set_config(cfg).build()
     )
 
 
@@ -122,8 +129,11 @@ def _write_chunks(parts: list[pa.Table], d: str, first: int, mtime0: int) -> Non
         os.utime(f, (mtime0 + i, mtime0 + i))
 
 
-@pytest.mark.parametrize("salt,unified", [(0, True), (5, False)], ids=["unified", "salted"])
-def test_streaming_job_equals_batch_execute(spark, tmp_path, salt, unified):
+@pytest.mark.parametrize(
+    "salt,unified,keyed", [(0, True, False), (5, False, False), (0, True, True)],
+    ids=["unified", "salted", "keyed"],
+)
+def test_streaming_job_equals_batch_execute(spark, tmp_path, salt, unified, keyed):
     rng = random.Random(20 + salt)
     turns = generate_transcripts(spark, 60, late_fraction_pct=0)
     table = pa.Table.from_pandas(turns.toPandas(), preserve_index=False).cast(TURNS_SCHEMA)
@@ -135,7 +145,7 @@ def test_streaming_job_equals_batch_execute(spark, tmp_path, salt, unified):
     d, out_root = str(tmp_path / "turns"), str(tmp_path / "out")
     os.makedirs(d)
     mtime0 = int(time.time()) - 3600
-    op = _op(salt)
+    op = _op(salt, keyed)
 
     def drain():
         stream = read_transcript_stream(spark, d, max_files_per_trigger=1)

@@ -146,10 +146,10 @@ def test_checkpoint_resume_exactly_once(spark, tmp_path):
 
 
 def test_streaming_salted_matches_batch(spark, tmp_path, turns_dir):
-    """Salted mode: streaming agg emits per-salt partials; the sink's
-    transform merges them — results identical to the unsalted batch run.
-    (Append mode emits every partial of a closed window in one batch, so
-    the merge is complete by construction.)"""
+    """Salted mode: both salted phases run inside the streaming query as
+    chained stateful aggregations — phase 1 emits each closed (window, key,
+    salt) partial once, phase 2 merges them in the same trigger — so the
+    sink commits merged rows, identical to the unsalted batch run."""
     d, turns = turns_dir
     stream = read_transcript_stream(spark, d)
     result = run_grouping_job(spark, stream, _op(salt=5), str(tmp_path / "out_salted"))

@@ -3,6 +3,9 @@ input_hint: per-turn text equality under stable turn ordering)."""
 
 from __future__ import annotations
 
+from collections import defaultdict
+from datetime import timezone
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -83,6 +86,114 @@ def test_triples_binding(transcripts):
     assert r["edge_label"].startswith("user->")
     assert r["edge_properties"]["text_len"] is not None
     assert r["source"]["vertex_properties"]["hour_bucket"] is not None
+
+
+def _expected_binding(turns):
+    """The transcript graph computed in Python from collected turns:
+    vertices (every turn of a conversation with >=2 turns), edges and
+    triples (one per consecutive pair), with every property-map entry."""
+    convs = defaultdict(list)
+    for r in turns:
+        convs[r["conv_id"]].append(r)
+
+    def vertex(r):
+        return {
+            "vertex_id": f"{r['conv_id']}:{r['turn_idx']}",
+            "vertex_label": r["role"],
+            "vertex_properties": {
+                "tool": r["tool"],
+                "text_len": str(len(r["text"])),
+                "hour_bucket": r["ts"].astimezone(timezone.utc).strftime("%Y-%m-%d %H"),
+            },
+            "event_time": r["ts"],
+        }
+
+    vertices, triples = [], []
+    for rows in convs.values():
+        rows.sort(key=lambda r: r["turn_idx"])
+        if len(rows) >= 2:
+            vertices += [vertex(r) for r in rows]
+        for a, b in zip(rows, rows[1:]):
+            label = f"{a['role']}->{b['role']}"
+            triples.append({
+                "edge_id": f"{a['conv_id']}:{a['turn_idx']}->{b['turn_idx']}",
+                "event_time": b["ts"],
+                "edge_label": label,
+                "edge_properties": {**vertex(b)["vertex_properties"], "transition": label},
+                "source": vertex(a),
+                "target": vertex(b),
+            })
+    edges = [
+        {"edge_id": t["edge_id"], "edge_label": t["edge_label"],
+         "edge_properties": t["edge_properties"], "source_id": t["source"]["vertex_id"],
+         "target_id": t["target"]["vertex_id"], "event_time": t["event_time"]}
+        for t in triples
+    ]
+    return vertices, edges, triples
+
+
+def _by_id(rows):
+    return sorted(rows, key=lambda r: r.get("vertex_id") or r["edge_id"])
+
+
+def test_binding_values_match_python(transcripts):
+    """Every column of the batch binding — vertices, edges and triples,
+    every property-map entry, the endpoint ids and labels — equals what
+    Python computes from the collected turns."""
+    graph = transcript_graph(transcripts)
+    vertices, edges, triples = _expected_binding(transcripts.collect())
+    got = [
+        [r.asDict(recursive=True) for r in df.collect()]
+        for df in (graph.vertices, graph.edges, graph.triples)
+    ]
+    assert list(got[0][0]) == ["vertex_id", "event_time", "vertex_label", "vertex_properties"]
+    assert list(got[2][0]) == [
+        "edge_id", "event_time", "edge_label", "edge_properties", "source", "target",
+    ]
+    for got_rows, expected in zip(got, (vertices, edges, triples)):
+        assert len(got_rows) == len(expected)
+        assert _by_id(got_rows) == _by_id(expected)
+
+
+def test_absent_property_key_groups_as_null(transcripts):
+    """A grouping key that names no property of the bag yields a NULL
+    group value on both sides (vertex promotion and the triple fast path's
+    endpoint extraction), not an error."""
+    cfg = StreamGraphConfig(window=WindowConfig.tumbling(600, "SECONDS"))
+    graph = transcript_graph(transcripts, cfg)
+    op = (
+        GroupingBuilder()
+        .add_vertex_grouping_keys([":label", "no_such_key"])
+        .add_vertex_aggregate_function(Count())
+        .add_edge_grouping_keys([":label", "no_such_key"])
+        .add_edge_aggregate_function(Count())
+        .set_window_config(cfg.window)
+        .set_config(cfg)
+        .build()
+    )
+    grouped_v, grouped_e = op.summaries(graph)
+    v, e = grouped_v.collect(), grouped_e.collect()
+    assert v and all(r["_gk_0"] is None for r in v)
+    assert e and all(r["_egk_0"] is None for r in e)
+    assert sum(int(r["count"]) for r in v) == graph.vertices.count()
+    assert sum(int(r["count"]) for r in e) == graph.edges.count()
+    # the same super ids as grouping by label alone: a NULL value is
+    # skipped by the id hash
+    label_only = (
+        GroupingBuilder()
+        .add_vertex_grouping_key(":label")
+        .add_vertex_aggregate_function(Count())
+        .add_edge_grouping_key(":label")
+        .add_edge_aggregate_function(Count())
+        .set_window_config(cfg.window)
+        .set_config(cfg)
+        .build()
+    )
+    lv, le = label_only.summaries(graph)
+    assert {r["super_vertex_id"] for r in v} == {r["super_vertex_id"] for r in lv.collect()}
+    assert {r["source_id"] for r in e} == {r["source_id"] for r in le.collect()}
+    out = graph.apply(op)
+    assert all("no_such_key" not in r["vertex_properties"] for r in out.vertices.collect())
 
 
 def test_group_by_role_count(transcripts):
