@@ -1881,367 +1881,6 @@ WHERE rk <= 10
 """
 
 
-def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product quantization (operators/pq.py): 64-dim vectors → 8 codes
-    (m=8 subspaces × k=16 entries) against the md5-sampled reproducible
-    codebooks + relative reconstruction error. The oracle re-derives the
-    same codebooks (ROW_NUMBER over md5(id)) and the same argmin
-    (round-8 distance, code tie-break) in SQL."""
-    from graph_stream_zoomer_spark.operators.pq import pq_encode, sample_pq_codebooks
-
-    emb = _emb(spark, sf_dir)
-    return pq_encode(emb, sample_pq_codebooks(emb, 64))
-
-
-def _pq_ctes(m: int = 8, d: int = 8, k: int = 16) -> str:
-    subs = "\n  UNION ALL ".join(
-        f"SELECT vec_id, {s} AS s, v[{s * d + 1}:{s * d + d}] AS xs FROM base"
-        for s in range(m)
-    )
-    csubs = "\n  UNION ALL ".join(
-        f"SELECT j, {s} AS s, cv[{s * d + 1}:{s * d + d}] AS cs FROM samp"
-        for s in range(m)
-    )
-    return f"""
-WITH base AS MATERIALIZED (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-),
-samp AS MATERIALIZED (
-  SELECT ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR))) - 1 AS j,
-         v AS cv
-  FROM base ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT {k}
-),
-subs AS MATERIALIZED ({subs}),
-cs AS MATERIALIZED ({csubs}),
-dists AS (
-  SELECT b.vec_id, b.s, c.j,
-         list_sum(list_transform(list_zip(b.xs, c.cs),
-                                 z -> (z[1] - z[2]) * (z[1] - z[2]))) AS dist
-  FROM subs b JOIN cs c USING (s)
-),
-chosen AS MATERIALIZED (
-  SELECT vec_id, s, j, dist,
-         ROW_NUMBER() OVER (PARTITION BY vec_id, s
-                            ORDER BY round(dist, 8), j) AS rk
-  FROM dists
-)"""
-
-
-_PQ_SQL = (
-    _pq_ctes()
-    + """,
-agg AS (
-  SELECT vec_id,
-         string_agg(CAST(j AS VARCHAR), ',' ORDER BY s) AS codes,
-         list_sum(list(dist ORDER BY s)) AS err2
-  FROM chosen WHERE rk = 1 GROUP BY vec_id
-),
-x2 AS (SELECT vec_id, list_sum(list_transform(v, x -> x * x)) AS xx FROM base)
-SELECT a.vec_id, a.codes,
-       CASE WHEN xx > 0 THEN ROUND(sqrt(err2 / xx), 5) ELSE 0.0 END AS rel_err
-FROM agg a JOIN x2 USING (vec_id)
-"""
-)
-
-
-_PQ_ADC_SQL = (
-    _pq_ctes()
-    + """,
-adc AS (
-  SELECT cc.vec_id AS neighbor_id, qd.vec_id AS query_id,
-         list_sum(list(qd.dist ORDER BY cc.s)) AS adist
-  FROM (SELECT vec_id, s, j FROM chosen WHERE rk = 1) cc
-  JOIN (SELECT vec_id, s, j, dist FROM dists WHERE vec_id < 3) qd
-    ON qd.s = cc.s AND qd.j = cc.j
-  WHERE cc.vec_id <> qd.vec_id
-  GROUP BY 1, 2
-)
-SELECT query_id, neighbor_id, CAST(rk AS BIGINT) AS rank,
-       ROUND(adist, 6) AS adc_dist
-FROM (
-  SELECT query_id, neighbor_id, adist,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY ROUND(adist, 6), neighbor_id) AS rk
-  FROM adc
-)
-WHERE rk <= 10
-"""
-)
-
-
-def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ADC search over PQ codes (operators/pq.py): corpus = 8-byte codes,
-    query = float vector turned into an m×k exact-distance lookup table
-    (driver-built, broadcast as a literal array per query row); distance =
-    Σ_s LUT[s][code_s], ranked on (round-6 dist, neighbor id)."""
-    from graph_stream_zoomer_spark.operators.pq import pq_adc_topk, sample_pq_codebooks
-
-    emb = _emb(spark, sf_dir)
-    books = sample_pq_codebooks(emb, 64)
-    queries = [
-        (r["vec_id"], [float(x) for x in r["embedding"]])
-        for r in emb.where(F.col("vec_id") < 3).collect()
-    ]
-    # Arrow encode: bit-identical to the Catalyst literal form by
-    # construction (pinned by tests/test_pq.py::test_pq_arrow_path_is_
-    # bit_identical) and skips its ~20 s flat expression-compile cost
-    return pq_adc_topk(emb, queries, books, k=10, use_arrow_encode=True)
-
-
-def _ivfpq_sql(q_pred: str) -> str:
-    """IVF-PQ oracle, parameterized over the query predicate — the list
-    path's row uses 3 queries, the DataFrame batch path's row 8."""
-    return (
-        _pq_ctes()
-        + f""",
-cdists AS MATERIALIZED (
-  SELECT b.vec_id, mm.j AS cid,
-         list_sum(list_transform(list_zip(b.v, mm.cv),
-                                 z -> (z[1] - z[2]) * (z[1] - z[2]))) AS cdist
-  FROM base b CROSS JOIN samp mm
-),
-cells AS MATERIALIZED (
-  SELECT vec_id, cid AS cell FROM (
-    SELECT vec_id, cid,
-           ROW_NUMBER() OVER (PARTITION BY vec_id
-                              ORDER BY round(cdist, 8), cid) AS rk
-    FROM cdists
-  ) WHERE rk = 1
-),
-probes AS MATERIALIZED (
-  SELECT vec_id AS query_id, cid AS cell FROM (
-    SELECT vec_id, cid,
-           ROW_NUMBER() OVER (PARTITION BY vec_id
-                              ORDER BY round(cdist, 8), cid) AS rk
-    FROM cdists WHERE {q_pred}
-  ) WHERE rk <= 4
-),
-adc AS (
-  SELECT cc.vec_id AS neighbor_id, p.query_id,
-         list_sum(list(qd.dist ORDER BY cc.s)) AS adist
-  FROM (SELECT vec_id, s, j FROM chosen WHERE rk = 1) cc
-  JOIN cells ON cells.vec_id = cc.vec_id
-  JOIN probes p ON p.cell = cells.cell
-  JOIN (SELECT vec_id, s, j, dist FROM dists WHERE {q_pred}) qd
-    ON qd.vec_id = p.query_id AND qd.s = cc.s AND qd.j = cc.j
-  WHERE cc.vec_id <> p.query_id
-  GROUP BY 1, 2
-)
-SELECT query_id, neighbor_id, CAST(rk AS BIGINT) AS rank,
-       ROUND(adist, 6) AS adc_dist
-FROM (
-  SELECT query_id, neighbor_id, adist,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY ROUND(adist, 6), neighbor_id) AS rk
-  FROM adc
-)
-WHERE rk <= 10
-"""
-    )
-
-
-_IVFPQ_SQL = _ivfpq_sql("vec_id < 3")
-_IVFPQ_BATCH_SQL = _ivfpq_sql("vec_id < 8")
-
-
-def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ composed index (operators/pq.py): corpus rows in their
-    L2-nearest coarse cell, queries probe their 4 nearest of 16 cells,
-    ADC distances over global PQ codes only for candidates in probed
-    cells. The md5 sample serves as both the coarse quantizer and the
-    PQ codebook source (n_centroids = k = 16), so the oracle re-derives
-    everything from one sampled row set."""
-    from graph_stream_zoomer_spark.operators.pq import (
-        ivfpq_topk,
-        sample_coarse_centroids,
-        sample_pq_codebooks,
-    )
-
-    emb = _emb(spark, sf_dir)
-    coarse = sample_coarse_centroids(emb, n_centroids=16)
-    books = sample_pq_codebooks(emb, 64, k=16)
-    queries = [
-        (r["vec_id"], [float(x) for x in r["embedding"]])
-        for r in emb.where(F.col("vec_id") < 3).collect()
-    ]
-    # use_arrow_assign=False pins the Catalyst-literal cell fold — the
-    # exact arithmetic the DuckDB oracle replays (the Arrow twin is the
-    # deployment default above _LITERAL_CELL_BUDGET model floats).
-    return ivfpq_topk(
-        emb, queries, coarse, books, k=10, n_probe=4, use_arrow_assign=False
-    )
-
-
-def q_ann_ivfpq_batch_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ with the QUERIES AS A DATAFRAME (operators/pq.py
-    _batch_probe_frame): per-query probe cells and ADC lookup tables built
-    inside an Arrow mapInPandas pass instead of a driver Python loop —
-    the 10⁶-query batch re-ranking form (driver work flat in n_queries).
-    Bit-identical to the list path by sequential-order accumulation, so
-    the same DuckDB oracle shape applies, here over 8 queries."""
-    from graph_stream_zoomer_spark.operators.pq import (
-        ivfpq_topk,
-        sample_coarse_centroids,
-        sample_pq_codebooks,
-    )
-
-    emb = _emb(spark, sf_dir)
-    coarse = sample_coarse_centroids(emb, n_centroids=16)
-    books = sample_pq_codebooks(emb, 64, k=16)
-    qdf = emb.where(F.col("vec_id") < 8)
-    return ivfpq_topk(
-        emb, qdf, coarse, books, k=10, n_probe=4, use_arrow_assign=False
-    )
-
-
-def _residual_pq_ctes(m: int = 8, d: int = 8, pq_k: int = 16, n_cent: int = 16) -> str:
-    """Shared CTEs for the RESIDUAL IVF-PQ oracle: coarse = md5-rank rows
-    (cid = rank), cells = round-8 L2 argmin (tie → smaller cid), residual
-    codebooks = residuals of md5-order rows n_cent+1..n_cent+pq_k (code =
-    rank among them) — the exact sampling operators/pq.py's by_residual
-    path performs (centroid rows themselves are skipped: their residual is
-    the zero vector)."""
-    rsubs = "\n  UNION ALL ".join(
-        f"SELECT vec_id, {s} AS s, rv[{s * d + 1}:{s * d + d}] AS xs FROM resid"
-        for s in range(m)
-    )
-    bsubs = "\n  UNION ALL ".join(
-        f"SELECT j, {s} AS s, rv[{s * d + 1}:{s * d + d}] AS cs FROM booksamp"
-        for s in range(m)
-    )
-    qsubs = "\n  UNION ALL ".join(
-        f"SELECT query_id, cell, {s} AS s, qrv[{s * d + 1}:{s * d + d}] AS qs FROM qresid"
-        for s in range(m)
-    )
-    return f"""
-WITH base AS MATERIALIZED (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-),
-ord AS MATERIALIZED (
-  SELECT vec_id, v,
-         ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR))) AS rn
-  FROM base
-),
-coarse AS MATERIALIZED (SELECT rn - 1 AS cid, v AS cv FROM ord WHERE rn <= {n_cent}),
-cdists AS MATERIALIZED (
-  SELECT b.vec_id, c.cid,
-         list_sum(list_transform(list_zip(b.v, c.cv),
-                                 z -> (z[1] - z[2]) * (z[1] - z[2]))) AS cdist
-  FROM base b CROSS JOIN coarse c
-),
-cellrk AS MATERIALIZED (
-  SELECT vec_id, cid,
-         ROW_NUMBER() OVER (PARTITION BY vec_id
-                            ORDER BY round(cdist, 8), cid) AS rk
-  FROM cdists
-),
-cells AS MATERIALIZED (SELECT vec_id, cid AS cell FROM cellrk WHERE rk = 1),
-resid AS MATERIALIZED (
-  SELECT b.vec_id, list_transform(list_zip(b.v, c.cv), z -> z[1] - z[2]) AS rv
-  FROM base b
-  JOIN cells ce ON ce.vec_id = b.vec_id
-  JOIN coarse c ON c.cid = ce.cell
-),
-booksamp AS MATERIALIZED (
-  SELECT ROW_NUMBER() OVER (ORDER BY o.rn) - 1 AS j, r.rv
-  FROM ord o JOIN resid r ON r.vec_id = o.vec_id
-  WHERE o.rn > {n_cent} AND o.rn <= {n_cent + pq_k}
-),
-rsubs AS MATERIALIZED ({rsubs}),
-bsubs AS MATERIALIZED ({bsubs}),
-rdists AS (
-  SELECT b.vec_id, b.s, c.j,
-         list_sum(list_transform(list_zip(b.xs, c.cs),
-                                 z -> (z[1] - z[2]) * (z[1] - z[2]))) AS dist
-  FROM rsubs b JOIN bsubs c USING (s)
-),
-rchosen AS MATERIALIZED (
-  SELECT vec_id, s, j,
-         ROW_NUMBER() OVER (PARTITION BY vec_id, s
-                            ORDER BY round(dist, 8), j) AS rk
-  FROM rdists
-),
-probes AS MATERIALIZED (
-  SELECT vec_id AS query_id, cid AS cell FROM cellrk
-  WHERE vec_id < 3 AND rk <= 4
-),
-qresid AS MATERIALIZED (
-  SELECT p.query_id, p.cell,
-         list_transform(list_zip(b.v, c.cv), z -> z[1] - z[2]) AS qrv
-  FROM probes p
-  JOIN base b ON b.vec_id = p.query_id
-  JOIN coarse c ON c.cid = p.cell
-),
-qsubs AS MATERIALIZED ({qsubs}),
-qdists AS MATERIALIZED (
-  SELECT q.query_id, q.cell, q.s, c.j,
-         list_sum(list_transform(list_zip(q.qs, c.cs),
-                                 z -> (z[1] - z[2]) * (z[1] - z[2]))) AS dist
-  FROM qsubs q JOIN bsubs c USING (s)
-)"""
-
-
-_IVFPQ_RESIDUAL_SQL = (
-    _residual_pq_ctes()
-    + """,
-adc AS (
-  SELECT cc.vec_id AS neighbor_id, p.query_id,
-         list_sum(list(qd.dist ORDER BY cc.s)) AS adist
-  FROM (SELECT vec_id, s, j FROM rchosen WHERE rk = 1) cc
-  JOIN cells ON cells.vec_id = cc.vec_id
-  JOIN probes p ON p.cell = cells.cell
-  JOIN qdists qd
-    ON qd.query_id = p.query_id AND qd.cell = p.cell
-   AND qd.s = cc.s AND qd.j = cc.j
-  WHERE cc.vec_id <> p.query_id
-  GROUP BY 1, 2
-)
-SELECT query_id, neighbor_id, CAST(rk AS BIGINT) AS rank,
-       ROUND(adist, 6) AS adc_dist
-FROM (
-  SELECT query_id, neighbor_id, adist,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY ROUND(adist, 6), neighbor_id) AS rk
-  FROM adc
-)
-WHERE rk <= 10
-"""
-)
-
-
-def q_ann_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RESIDUAL IVF-PQ (FAISS by_residual, operators/pq.py ivfpq_topk):
-    corpus rows encode as PQ of (x − centroid[cell]) against codebooks
-    md5-sampled from residual space (skipping the centroid rows, whose
-    residual is the zero vector); each query builds one exact LUT per
-    probed cell from its own residual there. Was pinned only by pytest
-    recall floors before — this row hash-checks the full residual
-    arithmetic (cell assignment, residual sampling, per-cell LUT, ADC
-    ranking) against the DuckDB oracle."""
-    from graph_stream_zoomer_spark.operators.pq import (
-        ivfpq_topk,
-        sample_coarse_centroids,
-    )
-
-    emb = _emb(spark, sf_dir)
-    coarse = sample_coarse_centroids(emb, n_centroids=16)
-    queries = [
-        (r["vec_id"], [float(x) for x in r["embedding"]])
-        for r in emb.where(F.col("vec_id") < 3).collect()
-    ]
-    return ivfpq_topk(
-        emb,
-        queries,
-        coarse,
-        k=10,
-        n_probe=4,
-        by_residual=True,
-        use_arrow_assign=False,
-    )
-
-
 def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from graph_stream_zoomer_spark.operators.similarity import brute_force_topk
 
@@ -3243,10 +2882,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     same-machinery siblings) live in extra_queries() below, still verified
     by scripts/local_verify.py and pytest. r05 rotation: the only two keys
     with no driver record in ANY round (hll_registers, skew_profile) plus
-    this round's two NEW keys come FIRST; with them green the union across
-    r03∪r04∪r05 driver-proves every registry key (documented in README).
+    r05's NEW grouping key come FIRST; the union across r03∪r04∪r05
+    driver-proves 71 of the 74 registry keys (documented in README).
     Four r04-green keys whose machinery other gate rows exercise ceded
-    their slots to extra_queries()."""
+    their slots to extra_queries(). The three product-quantization rows
+    were deleted with operators/pq.py; three grouping rows from
+    extra_queries() took their slots."""
     return {
         # --- never driver-proven (r04's window was spent on the r03
         # --- backlog; both judge-verified green via local_verify in r04)
@@ -3254,7 +2895,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "skew_profile": q_skew_profile,
         # --- NEW in r05
         "graph_group_salted_props": q_graph_group_salted_props,
-        "ann_ivfpq_batch_queries": q_ann_ivfpq_batch_queries,
         "doc_quantiles": q_doc_quantiles,
         # --- r04-green keys kept under the gate (regression cover)
         "kmv_distinct": q_kmv_distinct,
@@ -3263,7 +2903,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pack_sequences": q_pack_sequences,
         "kmeans_centroids": q_kmeans_centroids,
         "ann_ivf_topk": q_ann_ivf_topk,
-        "ann_ivfpq_residual": q_ann_ivfpq_residual,
         "quality_filter": q_quality_filter,
         "sessionize": q_sessionize,
         "conv_rollup": q_conv_rollup,
@@ -3286,6 +2925,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "graph_triples_join": q_graph_triples_join,
         "graph_pagerank": q_graph_pagerank,
         "graph_structure": q_graph_structure,
+        # --- grouping rows promoted from extra_queries() into the slots
+        # --- the deleted product-quantization rows held (r02/r03 driver-green)
+        "graph_group_role_count_salted": _role_count_query({"salt_buckets": 8}),
+        "graph_group_top_transitions": q_graph_group_top_transitions,
+        "graph_group_window_users": q_graph_group_window_users,
         # --- streaming/CEP/joins/relational (r03 driver-green)
         "cep_sequence_match": q_cep_sequence_match,
         "events_json_promote": q_events_json,
@@ -3304,7 +2948,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_embedding_cosine": q_dedup_embedding_cosine,
         "ann_int8_topk": q_ann_int8_topk,
         "ann_lsh_topk_multi": q_ann_lsh_topk_multi,
-        "ann_ivfpq_topk": q_ann_ivfpq_topk,
     }
 
 
@@ -3315,17 +2958,10 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     them with the SAME rows/cols/hash check; all were driver-green in
     CORRECTNESS_r02/r03 artifacts when they occupied gate slots."""
     return {
-        # plan variant of graph_group_role_count (salted two-phase) — same
-        # rows, pinned by tests/test_grouping_goldens.py
-        "graph_group_role_count_salted": _role_count_query({"salt_buckets": 8}),
         # beyond-reference aggregate kinds over the same grouping core as
         # graph_group_role_count/minmax (merge logic pinned in test_dataops)
         "graph_group_role_sets": q_graph_group_role_sets,
         "graph_group_role_median": q_graph_group_role_median,
-        # rank-filter over graph_group_edge_transition's grouping
-        "graph_group_top_transitions": q_graph_group_top_transitions,
-        # strict subset of graph_group_full (fewer grouping keys)
-        "graph_group_window_users": q_graph_group_window_users,
         # CEP machinery proven by cep_sequence_match; negation pinned in
         # tests/test_cep.py
         "cep_followed_by": q_cep_followed_by,
@@ -3358,9 +2994,6 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_cosine_scores": q_ann_cosine_scores,
         # single-table LSH = ann_lsh_topk_multi at L=1
         "ann_lsh_topk": q_ann_lsh_topk,
-        # PQ encode + ADC proven end-to-end inside ann_ivfpq_topk/_residual
-        "pq_codes": q_pq_codes,
-        "pq_adc_topk": q_pq_adc_topk,
         # int8 quantization proven end-to-end by ann_int8_topk
         "embedding_quantize": q_embedding_quantize,
         # --- rotated out of the r05 gate window (all r04 driver-green);
@@ -3396,7 +3029,6 @@ def oracle_sql() -> dict[str, str]:
         "hll_registers": _HLL_SQL,
         "skew_profile": _SKEW_SQL,
         "graph_group_salted_props": _SALTED_PROPS_SQL,
-        "ann_ivfpq_batch_queries": _IVFPQ_BATCH_SQL,
         "doc_quantiles": _DOC_QUANTILES_SQL,
         "kmv_distinct": _KMV_SQL,
         "cms_heavy_hitters": _CMS_SQL,
@@ -3404,7 +3036,6 @@ def oracle_sql() -> dict[str, str]:
         "pack_sequences": _PACK_SQL,
         "kmeans_centroids": _KMEANS_SQL,
         "ann_ivf_topk": _ANN_IVF_SQL,
-        "ann_ivfpq_residual": _IVFPQ_RESIDUAL_SQL,
         "quality_filter": _QUALITY_FILTER_SQL,
         "sessionize": _SESSIONIZE_SQL,
         "conv_rollup": _CONV_ROLLUP_SQL,
@@ -3426,6 +3057,9 @@ def oracle_sql() -> dict[str, str]:
         "graph_triples_join": _TRIPLES_JOIN_SQL,
         "graph_pagerank": _PAGERANK_SQL,
         "graph_structure": _GRAPH_STRUCTURE_SQL,
+        "graph_group_role_count_salted": _ROLE_COUNT_SQL,
+        "graph_group_top_transitions": _TOP_TRANSITIONS_SQL,
+        "graph_group_window_users": _WINDOW_USERS_SQL,
         "cep_sequence_match": _CEP_SQL,
         "events_json_promote": _EVENTS_JSON_SQL,
         "tpch_pricing_summary": _TPCH_Q1_SQL,
@@ -3442,18 +3076,14 @@ def oracle_sql() -> dict[str, str]:
         "dedup_embedding_cosine": _DEDUP_EMB_SQL,
         "ann_int8_topk": _ANN_INT8_SQL,
         "ann_lsh_topk_multi": _ANN_LSH_MULTI_SQL,
-        "ann_ivfpq_topk": _IVFPQ_SQL,
     }
 
 
 def extra_oracle_sql() -> dict[str, str]:
     """DuckDB oracles for extra_queries() — verified by scripts/local_verify.py."""
     return {
-        "graph_group_role_count_salted": _ROLE_COUNT_SQL,
         "graph_group_role_sets": _ROLE_SETS_SQL,
         "graph_group_role_median": _ROLE_MEDIAN_SQL,
-        "graph_group_top_transitions": _TOP_TRANSITIONS_SQL,
-        "graph_group_window_users": _WINDOW_USERS_SQL,
         "cep_followed_by": _CEP_FOLLOWED_BY_SQL,
         "tpch_shipping_priority": _TPCH_Q3_SQL,
         "tfidf_scores": _TFIDF_SQL,
@@ -3467,8 +3097,6 @@ def extra_oracle_sql() -> dict[str, str]:
         "dedup_fingerprint": _DEDUP_FP_SQL,
         "ann_cosine_scores": _ANN_SCORES_SQL,
         "ann_lsh_topk": _ANN_LSH_SQL,
-        "pq_codes": _PQ_SQL,
-        "pq_adc_topk": _PQ_ADC_SQL,
         "embedding_quantize": _EMB_QUANT_SQL,
         "bpe_merges": _BPE_MERGES_SQL,
         "text_split_counts": _SPLIT_SQL,

@@ -2,7 +2,7 @@
 query & data-processing capabilities of dbs-leipzig/graph-stream-zoomer
 (windowed property-graph-stream grouping), extended with the large-scale
 training-data pipeline operators (dedup, similarity search, text analysis,
-multimodal plumbing) a 100 TB deployment needs.
+sketches, media digests) a 100 TB deployment needs.
 
 Not a port: the reference is Flink Table API + Gradoop; this engine is
 DataFrame/Catalyst-first (see SURVEY.md §7 design stance).

@@ -1,20 +1,5 @@
-"""Multimodal column plumbing: image/audio/video as opaque ``binary``
-columns with typed metadata, processed via Arrow-batched ``mapInPandas``.
-
-Decode/feature/resize kernels are REAL — pure stdlib+numpy, no media
-libs — for PPM (P6), baseline JPEG (JFIF; in-tree T.81 codec
-operators/jpeg.py: Annex K tables, Huffman, zigzag, 8×8 DCT), PNG
-(operators/png.py: zlib inflate + all five scanline filters, gray/RGB/
-RGBA/palette), and WAV audio (operators/wav.py: PCM 8/16/32-bit +
-IEEE-float; feature = RMS amplitude). The image and audio paths
-therefore run end-to-end on actual pixels/samples in this container for
-the dominant interchange formats. Remaining lib-bound formats
-(progressive JPEG, 16-bit/Adam7 PNG, lossy audio codecs, video frame
-seeking) are declared stubs: they raise NotImplementedError unless
-``fake=True`` substitutes a deterministic payload-derived fake. The
-Spark-side plumbing — schema, batch iteration, partition-preserving
-projection — is identical for both; a real PIL/soundfile/pyav deployment
-only widens the format dispatch.
+"""Media digests: document text bytes as an opaque ``binary`` payload,
+hashed through Arrow-batched ``mapInPandas``.
 
 Scale notes: mapInPandas streams Arrow batches, so a 100 TB binary column
 never materializes per-row Python objects; keep
@@ -24,416 +9,28 @@ payloads fits executor memory.
 
 from __future__ import annotations
 
+import hashlib
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BinaryType,
-    DoubleType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("kind", StringType(), False),  # image | audio | video
-        StructField("payload", BinaryType(), True),
-        StructField("mime", StringType(), True),
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("duration_ms", IntegerType(), True),
-    ]
-)
-
-FEATURE_SCHEMA = StructType(
+DIGEST_SCHEMA = StructType(
     [
         StructField("media_id", LongType(), False),
         StructField("n_bytes", LongType(), False),
         StructField("digest", StringType(), False),
-        StructField("feat_mean", DoubleType(), True),
-        StructField("feat_dim", IntegerType(), False),
     ]
 )
-
-
-def parse_ppm(payload: bytes) -> "np.ndarray":
-    """Decode a binary PPM (P6) image to an (h, w, 3) uint8 array — pure
-    numpy, no imaging libs. Handles arbitrary whitespace and '#' comments in
-    the header per the netpbm spec."""
-    if payload is None or not payload.startswith(b"P6"):
-        raise ValueError("not a P6 PPM payload")
-    fields: list[int] = []
-    i = 2
-    while len(fields) < 3:
-        while i < len(payload) and payload[i : i + 1].isspace():
-            i += 1
-        if payload[i : i + 1] == b"#":
-            while i < len(payload) and payload[i : i + 1] != b"\n":
-                i += 1
-            continue
-        j = i
-        while j < len(payload) and not payload[j : j + 1].isspace():
-            j += 1
-        fields.append(int(payload[i:j]))
-        i = j
-    i += 1  # single whitespace after maxval
-    w, h, maxval = fields
-    if maxval > 255:
-        raise ValueError("16-bit PPM not supported")
-    arr = np.frombuffer(payload, dtype=np.uint8, count=w * h * 3, offset=i)
-    return arr.reshape(h, w, 3)
-
-
-def encode_ppm(arr: "np.ndarray") -> bytes:
-    h, w, _ = arr.shape
-    return b"P6\n%d %d\n255\n" % (w, h) + arr.astype(np.uint8).tobytes()
-
-
-def _decode_kernel(payload: bytes, kind: str, fake: bool):
-    """Decode step: REAL for P6 PPM (numpy pixel decode — feature = mean
-    pixel intensity over the 3 channel planes); other formats dispatch to
-    the declared stub (PIL / soundfile / pyav in a real deployment)."""
-    import hashlib
-
-    if payload is not None and payload.startswith(b"P6"):
-        # Opportunistic sniff: a non-PPM payload can legitimately start with
-        # b"P6" (e.g. raw text routed through documents_as_media), so a parse
-        # failure falls through to the stub/fake branch instead of killing
-        # the whole mapInPandas task.
-        try:
-            arr = parse_ppm(payload)
-            return float(arr.mean() / 255.0), 3, hashlib.sha256(payload).hexdigest()
-        except ValueError:
-            pass
-    if payload is not None and payload.startswith(b"\xff\xd8"):
-        # baseline JPEG — REAL pure-numpy decode (operators/jpeg.py); same
-        # sniff-don't-trust fallthrough as PPM
-        try:
-            from .jpeg import parse_jpeg
-
-            arr = parse_jpeg(payload)
-            return float(arr.mean() / 255.0), 3, hashlib.sha256(payload).hexdigest()
-        except ValueError:
-            pass
-    if payload is not None and payload.startswith(b"\x89PNG\r\n\x1a\n"):
-        # PNG — REAL stdlib-zlib + numpy decode (operators/png.py)
-        try:
-            from .png import parse_png
-
-            arr = parse_png(payload)
-            return (
-                float(arr.mean() / 255.0),
-                int(arr.shape[2]),
-                hashlib.sha256(payload).hexdigest(),
-            )
-        except ValueError:
-            pass
-    if payload is not None and payload.startswith(b"BM"):
-        # uncompressed 24/32-bit BMP — REAL decode (operators/bmp.py)
-        try:
-            from .bmp import parse_bmp
-
-            arr = parse_bmp(payload)
-            return float(arr.mean() / 255.0), 3, hashlib.sha256(payload).hexdigest()
-        except ValueError:
-            pass
-    if payload is not None and payload.startswith(b"GIF8"):
-        # GIF — REAL LZW decode (operators/gif.py); feature = first frame
-        try:
-            from .gif import parse_gif
-
-            arr = parse_gif(payload)
-            return float(arr.mean() / 255.0), 3, hashlib.sha256(payload).hexdigest()
-        except ValueError:
-            pass
-    if payload is not None and payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-        # WAV — REAL PCM/float decode (operators/wav.py); audio feature =
-        # RMS amplitude in [0, 1], dim = channel count
-        try:
-            from .wav import parse_wav
-
-            samples, _rate = parse_wav(payload)
-            rms = float(np.sqrt(np.mean(np.square(samples)))) if samples.size else 0.0
-            return rms, int(samples.shape[1]), hashlib.sha256(payload).hexdigest()
-        except ValueError:
-            pass
-    if not fake:
-        raise NotImplementedError(
-            f"decode for kind={kind!r} requires media libs not present in this container"
-        )
-    # deterministic fake feature: byte histogram mean over a fixed dim
-    dim = 16
-    if payload is None:
-        return 0.0, dim, hashlib.sha256(b"").hexdigest()
-    digest = hashlib.sha256(payload).hexdigest()
-    mean = sum(payload[:1024]) / max(1, len(payload[:1024])) / 255.0
-    return mean, dim, digest
-
-
-def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
-    """binary payload → feature row via Arrow-batched mapInPandas."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                _decode_kernel(p, k, fake)
-                for p, k in zip(pdf["payload"], pdf["kind"], strict=True)
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].astype("int64"),
-                    "n_bytes": pdf["payload"].map(lambda b: 0 if b is None else len(b)).astype("int64"),
-                    "digest": [f[2] for f in feats],
-                    "feat_mean": [f[0] for f in feats],
-                    "feat_dim": [f[1] for f in feats],
-                }
-            )
-
-    return media.mapInPandas(run, FEATURE_SCHEMA)
-
-
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("kind", StringType(), False),
-        StructField("payload", BinaryType(), True),
-        StructField("mime", StringType(), True),
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("duration_ms", IntegerType(), True),
-    ]
-)
-
-FRAME_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("frame_idx", IntegerType(), False),
-        StructField("frame_ts_ms", IntegerType(), False),
-        StructField("payload", BinaryType(), True),
-    ]
-)
-
-
-def _resize_kernel(payload: bytes, width: int, height: int, fake: bool) -> bytes:
-    """Image resize: REAL for P6 PPM — nearest-neighbor index mapping in
-    numpy (deterministic, lib-free) re-encoded as P6. Other formats fall to
-    the declared stub (PIL resample in a real deployment); deterministic
-    fake = payload truncated/cycled to a size proportional to the target
-    pixel count (keeps downstream size-based logic exercisable)."""
-    if payload is not None and payload.startswith(b"P6"):
-        # Same sniff-don't-trust rule as _decode_kernel: malformed "P6"-
-        # prefixed payloads fall through rather than failing the task.
-        try:
-            arr = parse_ppm(payload)
-        except ValueError:
-            arr = None
-        if arr is not None:
-            h, w, _ = arr.shape
-            rows = (np.arange(height) * h) // height
-            cols = (np.arange(width) * w) // width
-            return encode_ppm(arr[rows][:, cols])
-    if payload is not None and payload.startswith(b"\xff\xd8"):
-        # baseline JPEG: real decode → nearest-neighbor resize → re-encode
-        try:
-            from .jpeg import encode_jpeg, parse_jpeg
-
-            arr = parse_jpeg(payload)
-            h, w, _ = arr.shape
-            rows = (np.arange(height) * h) // height
-            cols = (np.arange(width) * w) // width
-            return encode_jpeg(arr[rows][:, cols])
-        except ValueError:
-            pass
-    if payload is not None and payload.startswith(b"\x89PNG\r\n\x1a\n"):
-        # PNG: real decode → nearest-neighbor resize → re-encode (lossless)
-        try:
-            from .png import encode_png, parse_png
-
-            arr = parse_png(payload)
-            h, w = arr.shape[:2]
-            rows = (np.arange(height) * h) // height
-            cols = (np.arange(width) * w) // width
-            return encode_png(arr[rows][:, cols])
-        except ValueError:
-            pass
-    if payload is not None and payload.startswith(b"BM"):
-        # uncompressed BMP: real decode → nearest-neighbor → 24-bit re-encode
-        try:
-            from .bmp import encode_bmp, parse_bmp
-
-            arr = parse_bmp(payload)
-            h, w, _ = arr.shape
-            rows = (np.arange(height) * h) // height
-            cols = (np.arange(width) * w) // width
-            return encode_bmp(arr[rows][:, cols])
-        except ValueError:
-            pass
-    if payload is not None and payload.startswith(b"GIF8"):
-        # GIF: real decode (first frame) → nearest-neighbor → re-encode
-        try:
-            from .gif import encode_gif, parse_gif
-
-            arr = parse_gif(payload)
-            h, w, _ = arr.shape
-            rows = (np.arange(height) * h) // height
-            cols = (np.arange(width) * w) // width
-            return encode_gif(arr[rows][:, cols])
-        except ValueError:
-            pass
-    if not fake:
-        raise NotImplementedError("resize requires image libs not present in this container")
-    if payload is None:
-        return None
-    target = max(1, (width * height) // 64)
-    reps = (target + len(payload) - 1) // max(1, len(payload))
-    return (payload * reps)[:target]
-
-
-def resize_media(
-    media: DataFrame, width: int, height: int, fake: bool = True
-) -> DataFrame:
-    """Schema-preserving payload transform (image resize) via Arrow-batched
-    mapInPandas — partition-preserving (no shuffle), same MEDIA_SCHEMA out,
-    so resizes chain with decode/feature stages."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf.copy()
-            out["payload"] = pdf["payload"].map(
-                lambda b: _resize_kernel(b, width, height, fake)
-            )
-            out["width"] = width
-            out["height"] = height
-            yield out[[f.name for f in RESIZED_SCHEMA.fields]]
-
-    return media.mapInPandas(run, RESIZED_SCHEMA)
-
-
-def sample_frames(
-    media: DataFrame, n_frames: int = 4, frame_interval_ms: int = 1000, fake: bool = True
-) -> DataFrame:
-    """Cardinality-changing video → frames extraction: each media row yields
-    up to ``n_frames`` frame rows (uniformly spaced). mapInPandas is the
-    right primitive because the fan-out happens inside the Arrow batch —
-    no explode of a pre-materialized frame array, so a 4K video's frames
-    never coexist as one row.
-
-    REAL for MJPEG-in-AVI (operators/avi.py — RIFF chunk walk; each
-    emitted frame is a standalone JPEG payload, timestamps from the
-    container's dwMicroSecPerFrame): inter-frame codecs remain the
-    declared stub. Deterministic fake: frame k = the k-th payload slice."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, tss, payloads = [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"], strict=True):
-                if payload is None:
-                    continue
-                if payload.startswith(b"GIF8"):
-                    # animated GIF — REAL multi-frame decode; each sampled
-                    # frame re-encodes as a standalone single-frame GIF,
-                    # timestamps from the cumulative GCE delays
-                    try:
-                        from .gif import encode_gif, parse_gif_frames
-
-                        gframes, gdelays = parse_gif_frames(payload)
-                        starts = [0]
-                        for dms in gdelays[:-1]:
-                            starts.append(starts[-1] + dms)
-                        n = min(n_frames, len(gframes))
-                        for k in range(n):
-                            src = (k * len(gframes)) // n  # uniform spacing
-                            ids.append(mid)
-                            idxs.append(k)
-                            tss.append(starts[src])
-                            payloads.append(encode_gif(gframes[src]))
-                        continue
-                    except ValueError:
-                        pass
-                if (
-                    len(payload) >= 12
-                    and payload[:4] == b"RIFF"
-                    and payload[8:12] == b"AVI "
-                ):
-                    # same sniff-don't-trust fallthrough as the image kernels
-                    try:
-                        from .avi import parse_mjpeg_avi
-
-                        all_frames, ivl_ms = parse_mjpeg_avi(payload)
-                        n = min(n_frames, len(all_frames))
-                        for k in range(n):
-                            src = (k * len(all_frames)) // n  # uniform spacing
-                            ids.append(mid)
-                            idxs.append(k)
-                            tss.append(src * ivl_ms)
-                            payloads.append(all_frames[src])
-                        continue
-                    except ValueError:
-                        pass
-                if not fake:
-                    raise NotImplementedError(
-                        "frame extraction requires video libs not present in this container"
-                    )
-                n = min(n_frames, max(1, len(payload)))
-                step = max(1, len(payload) // n)
-                for k in range(n):
-                    ids.append(mid)
-                    idxs.append(k)
-                    tss.append(k * frame_interval_ms)
-                    payloads.append(bytes(payload[k * step : (k + 1) * step]))
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "frame_ts_ms": pd.Series(tss, dtype="int32"),
-                    "payload": pd.Series(payloads, dtype="object"),
-                }
-            )
-
-    return media.mapInPandas(run, FRAME_SCHEMA)
-
-
-def generate_ppm(width: int, height: int, seed: int = 0) -> bytes:
-    """Deterministic P6 PPM test image (channel-wise gradients keyed by
-    ``seed``) — lets tests and demos drive the REAL decode/resize kernels
-    with zero external assets."""
-    y = np.arange(height, dtype=np.int64)[:, None]
-    x = np.arange(width, dtype=np.int64)[None, :]
-    r = np.broadcast_to((y * 7 + seed) % 256, (height, width))
-    g = np.broadcast_to((x * 13 + seed * 3) % 256, (height, width))
-    b = (x + y + seed) % 256
-    return encode_ppm(np.stack([r, g, b], axis=-1).astype(np.uint8))
-
-
-def documents_as_media(docs: DataFrame) -> DataFrame:
-    """Adapter used in tests/benchmarks: treat document text bytes as an
-    opaque binary payload with 'image' metadata (the libs-free stand-in for
-    a real media table)."""
-    return docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.lit("image").alias("kind"),
-        F.encode(F.col("text"), "UTF-8").alias("payload"),
-        F.lit("application/octet-stream").alias("mime"),
-        F.lit(None).cast("int").alias("width"),
-        F.lit(None).cast("int").alias("height"),
-        F.lit(None).cast("int").alias("duration_ms"),
-    )
 
 
 def media_digests(docs: DataFrame) -> DataFrame:
-    """Oracle-checkable slice of the multimodal path: byte length + sha256
-    digest per payload, computed through the real mapInPandas plumbing."""
+    """Byte length + sha256 digest of each document's UTF-8 text payload,
+    keyed by ``doc_id`` as ``media_id``."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
         for pdf in batches:
             yield pd.DataFrame(
                 {
@@ -443,11 +40,8 @@ def media_digests(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    schema = StructType(
-        [
-            StructField("media_id", LongType(), False),
-            StructField("n_bytes", LongType(), False),
-            StructField("digest", StringType(), False),
-        ]
+    media = docs.select(
+        F.col("doc_id").alias("media_id"),
+        F.encode(F.col("text"), "UTF-8").alias("payload"),
     )
-    return documents_as_media(docs).mapInPandas(run, schema)
+    return media.mapInPandas(run, DIGEST_SCHEMA)

@@ -472,6 +472,17 @@ def ivf_topk(
     )
 
 
+def scaled_elements(vec: Column, scale: int, null_message: str) -> Column:
+    """Each element scaled to a long (half-up at 1/scale resolution); a NULL
+    element raises ``null_message`` instead of dropping out of the sum."""
+    return F.transform(
+        vec,
+        lambda e: F.when(
+            e.isNull(), F.raise_error(F.lit(null_message)).cast("long")
+        ).otherwise(F.floor(e.cast("double") * scale + F.lit(0.5)).cast("long")),
+    )
+
+
 def pool_embeddings(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -494,8 +505,9 @@ def pool_embeddings(
     Scale: posexplode → ONE map-side-combined groupBy(group, pos) — the
     combiner bounds shuffle rows at (groups × dim) per map task however
     large the corpus — then a tiny groupBy(group) rebuilds the array
-    (collect_list bounded by dim). NULL vectors are skipped; ragged
-    dimensions raise loudly (a mean over mixed-dim vectors is undefined).
+    (collect_list bounded by dim). NULL vectors are skipped; a NULL element
+    inside a vector and ragged dimensions raise loudly (either would leave
+    some dimension averaged over fewer vectors than its group holds).
     """
     if mode not in ("mean", "sum"):
         raise ValueError(f"mode must be 'mean' or 'sum'; got {mode!r}")
@@ -503,9 +515,7 @@ def pool_embeddings(
         raise ValueError("scale must be positive")
     g = list(group_cols or [])
     x = F.col(vec_col)
-    scaled = F.transform(
-        x, lambda e: F.floor(e.cast("double") * scale + F.lit(0.5)).cast("long")
-    )
+    scaled = scaled_elements(x, scale, f"pool_embeddings: NULL element in {vec_col}")
     exploded = (
         df.where(x.isNotNull())
         .select(*g, F.posexplode(scaled).alias("pos", "_v"))

@@ -6,12 +6,10 @@ the batch ``execute`` runs — over the streaming transcript binding wrapped
 in a ``StreamGraph``; only the exactly-once sink is streaming-specific.
 
 This is the deployable unit (spark-submit --py-files entry point, see
-scripts/run_streaming_job.py). By default two structured-streaming queries
-run side by side — vertex summaries and edge summaries — each with its own
-checkpoint location and sink, overlapping their stage latencies on idle
-cores; ``unified=True`` instead runs both pipelines as branches of one
-discriminated-union query (one trigger/checkpoint/drain cycle — less total
-work for saturated clusters), with identical output.
+scripts/run_streaming_job.py). The vertex and edge summary pipelines run as
+two branches of one discriminated-union structured-streaming query: one
+trigger/commit/offset log, one checkpoint tree, one no-data drain sequence,
+split into the two sinks per micro-batch.
 """
 
 from __future__ import annotations
@@ -65,24 +63,16 @@ def run_grouping_job(
     *,
     available_now: bool = True,
     max_turn_gap: str = "1 hour",
-    unified: bool = False,
+    unified: bool = True,
     state_store: str | None = None,
 ) -> StreamingJobResult:
     """Launch the grouping job; with available_now=True blocks until the
     current input is drained (the test/backfill mode — production uses
     processingTime triggers and runs forever).
 
-    ``unified=True`` runs the vertex and edge summary pipelines as two
-    branches of ONE streaming query (a discriminated union): one
-    trigger/commit/offset log, one checkpoint tree, one no-data drain
-    sequence — less total work, and row-for-row identical output to the
-    two-query mode (verified under full watermark drain). Measured head to
-    head (BENCH.md appendix): unified is faster in wall-clock when cores
-    are scarce (−21% at 2 pinned cores — two concurrent queries contend)
-    and within noise of two-query when cores are plentiful (−6% at 8). The
-    default keeps the two-query shape for its operational properties
-    (independent checkpoints, one stream restartable without the other);
-    prefer unified on a core-constrained deployment.
+    ``unified`` is accepted for existing callers and must be True: the
+    two-query mode (separate vertex and edge queries) was removed after the
+    one-query form won at 2 and 8 pinned cores (BENCH.md appendix).
 
     ``state_store``: ``"rocksdb"`` switches the state backend to Spark's
     bundled RocksDBStateStoreProvider — off-heap, spill-to-disk, changelog
@@ -94,6 +84,11 @@ def run_grouping_job(
     checkpoint; the provider class is recorded in the checkpoint and
     cannot change across restarts.
     """
+    if not unified:
+        raise ValueError(
+            "the two-query streaming mode (unified=False) was removed; "
+            "run_grouping_job always runs one unified query"
+        )
     cfg: StreamGraphConfig = op.config
     wm = cfg.watermark_delay
     if state_store is not None:
@@ -128,60 +123,47 @@ def run_grouping_job(
     v_sink = IdempotentParquetSink(os.path.join(out_root, "vertices"))
     e_sink = IdempotentParquetSink(os.path.join(out_root, "edges"))
 
-    def start(df: DataFrame, sink, name: str):
-        w = (
-            df.writeStream.foreachBatch(sink)
-            .outputMode("append")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(out_root, f"_checkpoints/{name}"))
-        )
-        if available_now:
-            w = w.trigger(availableNow=True)
-        return w.start()
+    ckpt = os.path.join(out_root, "_checkpoints/summaries")
+    _refuse_stale_sink(v_sink.root, ckpt)
+    _refuse_stale_sink(e_sink.root, ckpt)
 
-    ckpt = lambda name: os.path.join(out_root, f"_checkpoints/{name}")  # noqa: E731
-    if unified:
-        _refuse_stale_sink(v_sink.root, ckpt("summaries"))
-        _refuse_stale_sink(e_sink.root, ckpt("summaries"))
-        u = _tagged_union(sv, se)
+    def split_sink(batch: DataFrame, batch_id: int) -> None:
+        # one persist serves both splits; each sink then caches only its
+        # own (tiny) summary slice for the lineage count + write
+        batch.persist()
+        try:
+            v_sink(batch.where(F.col("kind") == "v").select("v.*"), batch_id)
+            e_sink(batch.where(F.col("kind") == "e").select("e.*"), batch_id)
+        finally:
+            batch.unpersist()
 
-        def split_sink(batch: DataFrame, batch_id: int) -> None:
-            # one persist serves both splits; each sink then caches only its
-            # own (tiny) summary slice for the lineage count + write
-            batch.persist()
-            try:
-                v_sink(batch.where(F.col("kind") == "v").select("v.*"), batch_id)
-                e_sink(batch.where(F.col("kind") == "e").select("e.*"), batch_id)
-            finally:
-                batch.unpersist()
-
-        q = start(u, split_sink, "summaries")
-        if available_now:
-            q.awaitTermination()
-    else:
-        _refuse_stale_sink(v_sink.root, ckpt("vertex_summaries"))
-        _refuse_stale_sink(e_sink.root, ckpt("edge_summaries"))
-        q1 = start(sv, v_sink, "vertex_summaries")
-        q2 = start(se, e_sink, "edge_summaries")
-        if available_now:
-            q1.awaitTermination()
-            q2.awaitTermination()
+    w = (
+        _tagged_union(sv, se)
+        .writeStream.foreachBatch(split_sink)
+        .outputMode("append")
+        .queryName("summaries")
+        .option("checkpointLocation", ckpt)
+    )
+    if available_now:
+        w = w.trigger(availableNow=True)
+    q = w.start()
+    if available_now:
+        q.awaitTermination()
     listener.detach(spark)
     return StreamingJobResult(vertex_sink=v_sink, edge_sink=e_sink, listener=listener)
 
 
 def _refuse_stale_sink(sink_root: str, checkpoint_dir: str) -> None:
     """Refuse to start when the sink already has a commit log but the query
-    checkpoint tree is empty: that happens when the job mode (unified vs
-    two-query) changed on an existing out_root — batch ids restart at 0
-    under the fresh checkpoint and the idempotent guard would silently skip
+    checkpoint tree is missing (deleted or lost): batch ids would restart at
+    0 under a fresh checkpoint and the idempotent guard would silently skip
     real new batches (data loss, no error)."""
     commits = os.path.join(sink_root, "_lineage", "commits.json")
     if os.path.exists(commits) and not os.path.exists(checkpoint_dir):
         raise ValueError(
             f"sink {sink_root} has a commit log but checkpoint {checkpoint_dir} is missing; "
-            "the job mode (unified vs two-query) likely changed on an existing out_root. "
-            "Use a fresh out_root (or resume with the original mode)."
+            "resuming would restart batch ids at 0 and skip new batches as replays. "
+            "Restore the checkpoint or use a fresh out_root."
         )
 
 

@@ -312,13 +312,14 @@ def windowed_embedding_sums(
     adjacent windows merge by adding (s, n). Emitting the long form is
     deliberate — rebuilding the array needs a second aggregation, which
     streaming append mode forbids; use ``pooled_from_sums`` on closed
-    windows (the sink table or each foreachBatch batch)."""
+    windows (the sink table or each foreachBatch batch). A NULL element
+    inside a vector raises, as in the batch twin."""
+    from graph_stream_zoomer_spark.operators.similarity import scaled_elements
+
     if scale <= 0:
         raise ValueError("scale must be positive")
     x = F.col(vec_col)
-    scaled = F.transform(
-        x, lambda e: F.floor(e.cast("double") * scale + F.lit(0.5)).cast("long")
-    )
+    scaled = scaled_elements(x, scale, f"windowed_embedding_sums: NULL element in {vec_col}")
     exploded = (
         stream.withWatermark(ts_col, watermark_delay)
         # NULL vectors skipped like the batch twin (pool_embeddings)

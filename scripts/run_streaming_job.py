@@ -71,12 +71,6 @@ def build_parser() -> argparse.ArgumentParser:
     ap.add_argument("--salt", type=int, default=0)
     ap.add_argument("--max-turn-gap", default="1 hour")
     ap.add_argument("--available-now", action="store_true")
-    ap.add_argument(
-        "--unified",
-        action="store_true",
-        help="run vertex+edge summaries as one discriminated-union query "
-        "(one checkpoint/commit cycle; best when the cluster is saturated)",
-    )
     return ap
 
 
@@ -138,7 +132,6 @@ def main() -> None:
         args.output,
         available_now=args.available_now,
         max_turn_gap=args.max_turn_gap,
-        unified=args.unified,
     )
     if not args.available_now:
         spark.streams.awaitAnyTermination()

@@ -26,10 +26,7 @@ from graph_stream_zoomer_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash_duplicates,
 )
-from graph_stream_zoomer_spark.operators.multimodal import (
-    documents_as_media,
-    extract_features,
-)
+from graph_stream_zoomer_spark.operators.multimodal import media_digests
 from graph_stream_zoomer_spark.operators.similarity import (
     brute_force_topk,
     ivf_topk,
@@ -191,60 +188,16 @@ def test_text_functions_pandas_matches_catalyst(spark, docs):
     assert fps[0] == fps[1] and fps[0] != fps[4]
 
 
-def test_multimodal_plumbing(docs):
-    media = documents_as_media(docs)
-    assert dict(media.dtypes)["payload"] == "binary"
-    feats = extract_features(media, fake=True).collect()
-    assert len(feats) == docs.count()
-    by_id = {r["media_id"]: r for r in feats}
-    assert by_id[0]["digest"] == by_id[1]["digest"]  # same payload → same digest
-    assert by_id[0]["digest"] != by_id[4]["digest"]
-    assert all(r["n_bytes"] > 0 and r["feat_dim"] == 16 for r in feats)
+def test_media_digests_match_hashlib(docs):
+    import hashlib
 
-
-def test_multimodal_decode_stub_raises(docs):
-    media = documents_as_media(docs)
-    with pytest.raises(Exception, match="NotImplementedError|decode"):
-        extract_features(media, fake=False).collect()
-
-
-def test_multimodal_resize_chain(docs):
-    from graph_stream_zoomer_spark.operators.multimodal import resize_media
-
-    media = documents_as_media(docs)
-    resized = resize_media(media, width=64, height=32, fake=True)
-    # schema-preserving: output chains straight into the feature stage
-    assert [f.name for f in resized.schema.fields] == [f.name for f in media.schema.fields]
-    rows = resized.collect()
-    assert len(rows) == docs.count()
-    target = (64 * 32) // 64
-    assert all(r["width"] == 64 and r["height"] == 32 for r in rows)
-    assert all(len(r["payload"]) == target for r in rows)
-    feats = {r["media_id"]: r for r in extract_features(resized, fake=True).collect()}
-    assert all(f["n_bytes"] == target for f in feats.values())
-    # deterministic: identical payloads resize identically
-    assert feats[0]["digest"] == feats[1]["digest"]
-
-
-def test_multimodal_frame_sampling(docs):
-    from graph_stream_zoomer_spark.operators.multimodal import sample_frames
-
-    media = documents_as_media(docs)
-    frames = sample_frames(media, n_frames=4, frame_interval_ms=500)
-    rows = frames.collect()
-    per_media = {}
-    for r in rows:
-        per_media.setdefault(r["media_id"], []).append(r)
-    assert set(per_media) == {r["media_id"] for r in media.select("media_id").collect()}
-    for mid, fs in per_media.items():
-        idxs = sorted(f["frame_idx"] for f in fs)
-        assert idxs == list(range(len(fs))) and len(fs) <= 4
-        assert all(f["frame_ts_ms"] == f["frame_idx"] * 500 for f in fs)
-        assert all(len(f["payload"]) > 0 for f in fs)
-    # deterministic fan-out: identical payloads produce identical frames
-    f0 = [bytes(f["payload"]) for f in sorted(per_media[0], key=lambda f: f["frame_idx"])]
-    f1 = [bytes(f["payload"]) for f in sorted(per_media[1], key=lambda f: f["frame_idx"])]
-    assert f0 == f1
+    rows = {r["doc_id"]: r["text"] for r in docs.collect()}
+    out = {r["media_id"]: r for r in media_digests(docs).collect()}
+    assert set(out) == set(rows)
+    for i, text in rows.items():
+        payload = text.encode("utf-8")
+        assert out[i]["n_bytes"] == len(payload)
+        assert out[i]["digest"] == hashlib.sha256(payload).hexdigest()
 
 
 def test_simhash_reproducible_mode(docs):
@@ -418,48 +371,6 @@ def test_connected_components_nonconvergence_raises(spark):
     assert set(cc2.values()) == {0}
 
 
-def test_ppm_decode_and_resize_are_real(spark):
-    """The image path runs on ACTUAL pixels for PPM payloads — no fake
-    fallback (fake=False) and no imaging libs: decode, feature-extract and
-    nearest-neighbor resize verified against numpy ground truth."""
-    import numpy as np
-
-    from graph_stream_zoomer_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        encode_ppm,
-        extract_features,
-        generate_ppm,
-        parse_ppm,
-        resize_media,
-    )
-
-    payloads = {0: generate_ppm(12, 8, seed=1), 1: generate_ppm(5, 7, seed=9)}
-    # roundtrip sanity
-    for p in payloads.values():
-        assert encode_ppm(parse_ppm(p)) == p
-
-    media = spark.createDataFrame(
-        [(i, "image", p, "image/x-portable-pixmap", None, None, None) for i, p in payloads.items()],
-        MEDIA_SCHEMA,
-    )
-    feats = {r["media_id"]: r for r in extract_features(media, fake=False).collect()}
-    for i, p in payloads.items():
-        arr = parse_ppm(p)
-        assert feats[i]["feat_dim"] == 3
-        assert feats[i]["feat_mean"] == float(arr.mean() / 255.0)
-
-    small = {r["media_id"]: r for r in resize_media(media, 4, 3, fake=False).collect()}
-    for i, p in payloads.items():
-        arr = parse_ppm(p)
-        h, w, _ = arr.shape
-        rows = (np.arange(3) * h) // 3
-        cols = (np.arange(4) * w) // 4
-        out = parse_ppm(bytes(small[i]["payload"]))
-        assert out.shape == (3, 4, 3)
-        assert (out == arr[rows][:, cols]).all()
-        assert small[i]["width"] == 4 and small[i]["height"] == 3
-
-
 def test_deterministic_sample(spark):
     """k-per-group subsample is stable across reruns and input order, keeps
     exactly min(k, group size) rows per stratum, and ranks by md5(key)."""
@@ -584,86 +495,6 @@ def test_stddev_aggregate_direct_and_salted_merge(spark):
     m1 = one.groupBy("salt").agg(*sd.partial_exprs("x")).agg(sd.merge_expr()).collect()[0]
     assert m1["stddev_x"] is None
     assert one.agg(sd.agg_expr("x")).collect()[0]["stddev_x"] is None
-
-
-def test_jpeg_decode_and_resize_are_real(spark):
-    """Baseline JPEG runs on ACTUAL pixels via the in-tree pure-numpy T.81
-    codec (fake=False, no imaging libs): encode→decode round-trips within
-    lossy-compression tolerance, the decode exactly matches the
-    DCT→quant→dequant→IDCT reference pipeline, and the Spark feature/resize
-    kernels consume and emit real JFIF streams."""
-    import numpy as np
-
-    from graph_stream_zoomer_spark.operators.jpeg import encode_jpeg, parse_jpeg
-    from graph_stream_zoomer_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        extract_features,
-        resize_media,
-    )
-
-    rng = np.random.default_rng(7)
-    h, w = 21, 34  # non-multiples of 8 exercise edge padding/cropping
-    yy, xx = np.mgrid[0:h, 0:w]
-    img = np.clip(
-        np.stack([yy * 255 / h, xx * 255 / w, (yy + xx) * 255 / (h + w)], axis=-1)
-        + rng.normal(0, 3, (h, w, 3)),
-        0,
-        255,
-    ).astype(np.uint8)
-    enc = encode_jpeg(img, quality=90)
-    assert enc[:2] == b"\xff\xd8" and enc[-2:] == b"\xff\xd9"
-    dec = parse_jpeg(enc)
-    assert dec.shape == img.shape
-    mae = float(np.abs(dec.astype(float) - img.astype(float)).mean())
-    assert mae < 6.0, f"JPEG round-trip error too large: {mae}"
-    assert encode_jpeg(img, quality=90) == enc  # deterministic
-
-    media = spark.createDataFrame(
-        [(0, "image", enc, "image/jpeg", w, h, None)], MEDIA_SCHEMA
-    )
-    feat = extract_features(media, fake=False).collect()[0]
-    assert feat["feat_dim"] == 3
-    assert feat["feat_mean"] == float(dec.mean() / 255.0)
-
-    small = resize_media(media, 8, 6, fake=False).collect()[0]
-    out = parse_jpeg(bytes(small["payload"]))
-    assert out.shape == (6, 8, 3)
-    # content sanity: resized pixels near the nearest-neighbor downsample
-    rows = (np.arange(6) * dec.shape[0]) // 6
-    cols = (np.arange(8) * dec.shape[1]) // 8
-    ref = dec[rows][:, cols]
-    assert float(np.abs(out.astype(float) - ref.astype(float)).mean()) < 10.0
-
-
-def test_p6_prefixed_non_ppm_falls_through(spark):
-    """A payload that merely *starts* with b'P6' (e.g. raw text routed via
-    documents_as_media) must not kill the mapInPandas task: fake=True falls
-    through to the deterministic fake; fake=False raises the declared
-    NotImplementedError (stub), not a parse ValueError."""
-    import hashlib
-
-    import pytest
-
-    from graph_stream_zoomer_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        extract_features,
-        resize_media,
-    )
-
-    bogus = b"P6ssword reset requested by user"  # text, not a netpbm header
-    media = spark.createDataFrame(
-        [(0, "text", bogus, "text/plain", None, None, None)], MEDIA_SCHEMA
-    )
-    row = extract_features(media, fake=True).collect()[0]
-    assert row["digest"] == hashlib.sha256(bogus).hexdigest()
-    assert row["feat_dim"] == 16  # fake-branch dim, not the PPM 3
-    resized = resize_media(media, 4, 3, fake=True).collect()[0]
-    assert resized["payload"] is not None
-    with pytest.raises(Exception) as ei:
-        extract_features(media, fake=False).collect()
-    assert "NotImplementedError" in str(ei.value) or isinstance(
-        ei.value, NotImplementedError
-    )
 
 
 def test_pack_sequences_and_split(spark):
@@ -851,7 +682,8 @@ def test_ivf_topk_degraded_rows_agree_across_probe_paths(spark, monkeypatch):
 
 def test_pool_embeddings(spark):
     """Mean/sum pooling: exact vs Python ints on the same scaled grid,
-    NULLs skipped, ragged dims raise, plan is a combinable two-exchange."""
+    NULL vectors skipped, NULL elements and ragged dims raise, plan is a
+    combinable two-exchange."""
     import pytest
 
     from graph_stream_zoomer_spark.operators.similarity import pool_embeddings
@@ -887,6 +719,19 @@ def test_pool_embeddings(spark):
     )
     with pytest.raises(Exception, match="ragged"):
         pool_embeddings(ragged, group_cols=["grp"]).collect()
+    # a NULL element inside a non-null vector raises (it would otherwise be
+    # counted in the mean's denominator but left out of its sum); the
+    # streaming twin's sums raise the same way
+    from graph_stream_zoomer_spark.streaming.sketches import windowed_embedding_sums
+
+    holey = spark.createDataFrame(
+        [("a", [1.0, 2.0], "2024-01-01 10:00:00"), ("a", [3.0, None], "2024-01-01 10:01:00")],
+        "grp string, embedding array<double>, ts string",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    with pytest.raises(Exception, match="NULL element"):
+        pool_embeddings(holey, group_cols=["grp"]).collect()
+    with pytest.raises(Exception, match="NULL element"):
+        windowed_embedding_sums(holey, "ts", "embedding").collect()
     with pytest.raises(ValueError, match="mode"):
         pool_embeddings(df, mode="median")
     # plan: both aggregates partial (map-side combined)

@@ -184,6 +184,42 @@ def test_super_ids_consistent_across_paths(graph):
     assert joined.count() == 0
 
 
+@pytest.mark.parametrize(
+    "window",
+    [WindowConfig.tumbling(600, "SECONDS"), WindowConfig.sliding(600, 300, "SECONDS")],
+    ids=["tumbling", "sliding"],
+)
+def test_join_path_super_edge_endpoints_are_super_vertices(graph, window):
+    """Referential integrity on the join path (``triples=None``): every
+    super-edge source and target names a super-vertex of the same
+    event_time. The triple fast path does not hold this (see
+    ``edges_with_super_vertices_from_triples``)."""
+    from dataclasses import replace
+
+    g, _ = graph
+    cfg = StreamGraphConfig(window=window)
+    op = (
+        GroupingBuilder()
+        .add_vertex_grouping_key(":label")
+        .add_edge_grouping_key(":label")
+        .add_vertex_aggregate_function(Count())
+        .add_edge_aggregate_function(Count())
+        .set_window_config(window)
+        .set_config(cfg)
+        .build()
+    )
+    out = replace(g, config=cfg, triples=None).apply(op)
+    sv = out.vertices.select("vertex_id", "event_time")
+    se = out.edges.select("source_id", "target_id", "event_time").cache()
+    assert se.count() > 0 and sv.count() > 0
+    for end in ("source_id", "target_id"):
+        dangling = se.join(
+            sv, (se[end] == sv["vertex_id"]) & (se["event_time"] == sv["event_time"]), "left_anti"
+        )
+        assert dangling.count() == 0, (end, dangling.limit(5).collect())
+    se.unpersist()
+
+
 def test_operator_is_closed_groupings_compose(graph):
     """The reference's core contract (README.md:16-20): output has the same
     schema as input, so groupings COMPOSE. Grouping by :label and then
@@ -230,10 +266,7 @@ def test_driver_registry_contract():
     assert list(q) == list(o)
     assert set(xq) == set(xo)
     assert not set(q) & set(xq)
-    # r05 rotation: the 2 keys with no driver record in any round + the 2
-    # keys new this round lead the window
-    r05_unproven = {
-        "hll_registers", "skew_profile",
-        "graph_group_salted_props", "ann_ivfpq_batch_queries",
-    }
+    # r05 rotation: the 2 keys with no driver record in any round + the
+    # key new in r05 lead the window
+    r05_unproven = {"hll_registers", "skew_profile", "graph_group_salted_props"}
     assert set(list(q)[: len(r05_unproven)]) == r05_unproven

@@ -398,7 +398,7 @@ def test_streaming_job_plan_shape(spark, tmp_path, monkeypatch):
         os.utime(f, (1_700_000_000 + i, 1_700_000_000 + i))
     cfg = StreamGraphConfig(window=WindowConfig.tumbling(600, "SECONDS"))
     stream = read_transcript_stream(spark, d, max_files_per_trigger=1)
-    result = run_grouping_job(spark, stream, _op(cfg), str(tmp_path / "out"), unified=True)
+    result = run_grouping_job(spark, stream, _op(cfg), str(tmp_path / "out"))
 
     data = [p for p in result.listener.progress if p["num_input_rows"] > 0]
     assert len(data) == len(chunks), result.listener.progress

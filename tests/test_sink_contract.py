@@ -1,6 +1,6 @@
 """Contract tests that need no running stream (and no Iceberg jars):
-the generated MERGE statement, the mode-switch sink guard, and the shared
-CEP interval grammar."""
+the generated MERGE statement, the lost-checkpoint sink guard, the removed
+two-query job mode, and the shared CEP interval grammar."""
 
 from __future__ import annotations
 
@@ -10,7 +10,7 @@ import os
 import pytest
 
 from graph_stream_zoomer_spark.operators.cep import _interval_us
-from graph_stream_zoomer_spark.streaming.job import _refuse_stale_sink
+from graph_stream_zoomer_spark.streaming.job import _refuse_stale_sink, run_grouping_job
 from graph_stream_zoomer_spark.streaming.sink import IcebergMergeSink
 
 
@@ -41,7 +41,7 @@ def test_iceberg_merge_sql_rejects_missing_keys():
         IcebergMergeSink("t", [])
 
 
-# ------------------------------------------------------- mode-switch guard
+# ---------------------------------------------------- lost-checkpoint guard
 def test_stale_sink_guard(tmp_path):
     root = str(tmp_path / "vertices")
     ckpt = str(tmp_path / "_checkpoints/vertex_summaries")
@@ -53,9 +53,15 @@ def test_stale_sink_guard(tmp_path):
         json.dump([0, 1], f)
     os.makedirs(ckpt)
     _refuse_stale_sink(root, ckpt)
-    # committed sink + MISSING checkpoint = mode switch on existing out_root
+    # committed sink + MISSING checkpoint (lost or moved) on an existing out_root
     with pytest.raises(ValueError, match="commit log"):
         _refuse_stale_sink(root, str(tmp_path / "_checkpoints/summaries"))
+
+
+def test_two_query_mode_is_refused(tmp_path):
+    # raised before any Spark object is touched
+    with pytest.raises(ValueError, match="two-query streaming mode"):
+        run_grouping_job(None, None, None, str(tmp_path / "out"), unified=False)
 
 
 # -------------------------------------------------------- interval grammar

@@ -130,10 +130,9 @@ def _write_chunks(parts: list[pa.Table], d: str, first: int, mtime0: int) -> Non
 
 
 @pytest.mark.parametrize(
-    "salt,unified,keyed", [(0, True, False), (5, False, False), (0, True, True)],
-    ids=["unified", "salted", "keyed"],
+    "salt,keyed", [(0, False), (5, False), (0, True)], ids=["unsalted", "salted", "keyed"],
 )
-def test_streaming_job_equals_batch_execute(spark, tmp_path, salt, unified, keyed):
+def test_streaming_job_equals_batch_execute(spark, tmp_path, salt, keyed):
     rng = random.Random(20 + salt)
     turns = generate_transcripts(spark, 60, late_fraction_pct=0)
     table = pa.Table.from_pandas(turns.toPandas(), preserve_index=False).cast(TURNS_SCHEMA)
@@ -149,7 +148,7 @@ def test_streaming_job_equals_batch_execute(spark, tmp_path, salt, unified, keye
 
     def drain():
         stream = read_transcript_stream(spark, d, max_files_per_trigger=1)
-        return run_grouping_job(spark, stream, op, out_root, unified=unified)
+        return run_grouping_job(spark, stream, op, out_root)
 
     _write_chunks(chunks[:stop_after], d, 0, mtime0)
     drain()
