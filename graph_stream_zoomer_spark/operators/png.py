@@ -1,18 +1,17 @@
-"""Pure-stdlib+numpy PNG codec (RFC 2083 / ISO 15948) for the multimodal
-kernels — no imaging libs, mirroring the in-tree baseline-JPEG codec
-(operators/jpeg.py) that already made the dominant lossy format real.
+"""Pure-stdlib+numpy PNG codec (RFC 2083 / ISO 15948), no imaging libs.
+Standalone: the grouping operator and the gated ``media_digests`` path
+(which reads only a SHA-256 and a byte length) do not call it.
 
 Decoder scope: 8-bit-per-sample, color types 0 (gray), 2 (RGB),
 3 (palette), 4 (gray+alpha), 6 (RGBA), non-interlaced, all five scanline
 filters (None/Sub/Up/Average/Paeth), multi-IDAT. That covers the
 overwhelming majority of PNGs in the wild; 16-bit and Adam7 raise
-ValueError (→ the multimodal dispatch falls through to the declared
-stub). Inflate is stdlib zlib; unfiltering is numpy per scanline ('Up'
-fully vectorized; Sub/Avg/Paeth walk pixels along x — at production
+ValueError. Inflate is stdlib zlib; unfiltering is numpy per scanline
+('Up' fully vectorized; Sub/Avg/Paeth walk pixels along x — at production
 scale you'd swap in libpng, but the semantics here are exact).
 
 Encoder: filter 0 (None) rows + zlib — canonical, deterministic output
-for round-trips and in-tree test assets.
+for round-trips and test assets.
 """
 
 from __future__ import annotations

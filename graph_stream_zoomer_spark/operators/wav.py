@@ -1,8 +1,7 @@
-"""Pure-stdlib+numpy WAV (RIFF/WAVE) codec for the multimodal audio
-kernel — PCM 8/16/32-bit int and 32/64-bit IEEE float, any channel
-count. Lossy codecs (mp3/ogg/aac) remain declared stubs (they need
-real decoder libs); uncompressed WAV is the interchange format a
-training pipeline actually lands audio in before feature extraction.
+"""Pure-stdlib+numpy WAV (RIFF/WAVE) codec — PCM 8/16/32-bit int and
+32/64-bit IEEE float, any channel count. Standalone: the grouping operator
+and the gated ``media_digests`` path do not call it. Lossy codecs
+(mp3/ogg/aac) are out of scope (they need real decoder libs).
 """
 
 from __future__ import annotations
@@ -15,7 +14,7 @@ import numpy as np
 def parse_wav(payload: bytes) -> tuple["np.ndarray", int]:
     """Decode to (n_samples, n_channels) float64 in [-1, 1] + sample rate.
     Walks RIFF chunks (fmt before data, extra chunks skipped); raises
-    ValueError for non-PCM/float encodings (→ multimodal stub fallthrough).
+    ValueError for non-PCM/float encodings.
     """
     if (
         payload is None

@@ -1,9 +1,6 @@
-"""Pure-numpy PNG and WAV codecs (operators/png.py, operators/wav.py) and
-their wiring into the multimodal kernels — the real-decode companions of
-the PPM/JPEG tests in test_dataops.py. Ground truth: forward-filtered
-scanlines built independently in the test must invert exactly; WAV PCM
-round-trips within quantization; the Spark mapInPandas path runs with
-fake=False on both formats."""
+"""Pure-numpy PNG and WAV codecs (operators/png.py, operators/wav.py).
+Ground truth: forward-filtered scanlines built independently in the test
+must invert exactly; WAV PCM round-trips within quantization."""
 
 from __future__ import annotations
 
@@ -112,187 +109,3 @@ def test_wav_roundtrip_and_formats():
     assert np.array_equal(s2, f32.astype(np.float64))
     with pytest.raises(ValueError):
         parse_wav(b"RIFF\x00\x00\x00\x00JUNK" + b"\x00" * 40)
-
-
-def test_png_and_wav_kernels_run_real_in_spark(spark):
-    """fake=False end-to-end through mapInPandas: PNG feature/resize on
-    actual pixels, WAV feature = RMS amplitude on actual samples."""
-    from graph_stream_zoomer_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        extract_features,
-        resize_media,
-    )
-
-    img = _img(10, 6, 3, seed=3)
-    png = encode_png(img)
-    t = np.linspace(0, 1, 400, endpoint=False)
-    wave = 0.5 * np.sin(2 * np.pi * 10 * t)
-    wav = encode_wav(wave, rate=16000)
-    media = spark.createDataFrame(
-        [
-            (0, "image", png, "image/png", None, None, None),
-            (1, "audio", wav, "audio/wav", None, None, 25),
-        ],
-        MEDIA_SCHEMA,
-    )
-    feats = {r["media_id"]: r for r in extract_features(media, fake=False).collect()}
-    assert feats[0]["feat_dim"] == 3
-    assert feats[0]["feat_mean"] == pytest.approx(float(img.mean() / 255.0))
-    decoded, _ = parse_wav(wav)
-    assert feats[1]["feat_dim"] == 1
-    assert feats[1]["feat_mean"] == pytest.approx(
-        float(np.sqrt(np.mean(np.square(decoded)))), abs=1e-9
-    )
-
-    # resize only the image row (the audio row has no image resize; the
-    # kernel's WAV payload would fall to the stub — keep it out)
-    small = resize_media(media.where("media_id = 0"), 3, 4, fake=False).collect()[0]
-    out = parse_png(bytes(small["payload"]))
-    rows = (np.arange(4) * 10) // 4
-    cols = (np.arange(3) * 6) // 3
-    assert (out == img[rows][:, cols]).all()
-
-
-def test_mjpeg_avi_frame_sampling_is_real(spark):
-    """Video frame extraction runs on an ACTUAL container (fake=False):
-    a 6-frame MJPEG AVI built from the in-tree JPEG encoder round-trips —
-    sampled frames are standalone JPEGs whose decoded pixels match the
-    source frames at the uniformly-spaced indices, with container-derived
-    timestamps."""
-    from graph_stream_zoomer_spark.operators.avi import (
-        encode_mjpeg_avi,
-        parse_mjpeg_avi,
-    )
-    from graph_stream_zoomer_spark.operators.jpeg import encode_jpeg, parse_jpeg
-    from graph_stream_zoomer_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        sample_frames,
-    )
-
-    srcs = [np.full((16, 16, 3), 20 * k, dtype=np.uint8) for k in range(6)]
-    jpegs = [encode_jpeg(a) for a in srcs]
-    avi = encode_mjpeg_avi(jpegs, fps=5, width=16, height=16)
-    back, ivl = parse_mjpeg_avi(avi)
-    assert back == jpegs and ivl == 200  # 5 fps → 200 ms/frame
-
-    media = spark.createDataFrame(
-        [(7, "video", avi, "video/x-msvideo", 16, 16, 1200)], MEDIA_SCHEMA
-    )
-    rows = sorted(
-        sample_frames(media, n_frames=3, fake=False).collect(),
-        key=lambda r: r["frame_idx"],
-    )
-    assert [r["frame_idx"] for r in rows] == [0, 1, 2]
-    picked = [(0 * 6) // 3, (1 * 6) // 3, (2 * 6) // 3]  # uniform spacing
-    assert [r["frame_ts_ms"] for r in rows] == [p * 200 for p in picked]
-    for r, p in zip(rows, picked, strict=True):
-        got = parse_jpeg(bytes(r["payload"]))
-        want = parse_jpeg(jpegs[p])
-        assert (got == want).all()
-
-    # non-AVI video payload still raises the declared stub under fake=False
-    junk = spark.createDataFrame(
-        [(8, "video", b"\x00\x00\x00 ftypisom then mp4 boxes", "video/mp4", None, None, 1000)],
-        MEDIA_SCHEMA,
-    )
-    with pytest.raises(Exception, match="NotImplementedError|video libs"):
-        sample_frames(junk, n_frames=2, fake=False).collect()
-
-
-def test_bmp_codec_ground_truth_and_spark_kernels(spark):
-    """BMP decode verified against a byte-level hand-built file (bottom-up
-    BGR rows with 4-byte padding), the encoder round-trips, top-down and
-    32-bit forms decode, and the Spark decode/resize kernels run REAL
-    (fake=False) on BMP payloads."""
-    import struct
-
-    from graph_stream_zoomer_spark.operators.bmp import encode_bmp, parse_bmp
-    from graph_stream_zoomer_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        extract_features,
-        resize_media,
-    )
-
-    # hand-built 2x2 24-bit BMP: rows stored bottom-up, BGR, padded to 8 B
-    # image (top-down RGB): [[red, green], [blue, white]]
-    red, green, blue, white = (255, 0, 0), (0, 255, 0), (0, 0, 255), (255, 255, 255)
-    def bgr(px): return bytes([px[2], px[1], px[0]])
-    pix = (bgr(blue) + bgr(white) + b"\x00\x00"      # bottom row first
-           + bgr(red) + bgr(green) + b"\x00\x00")
-    hdr = struct.pack("<2sIHHI", b"BM", 54 + len(pix), 0, 0, 54)
-    dib = struct.pack("<IiiHHIIiiII", 40, 2, 2, 1, 24, 0, len(pix), 0, 0, 0, 0)
-    img = parse_bmp(hdr + dib + pix)
-    assert img.shape == (2, 2, 3)
-    assert tuple(img[0, 0]) == red and tuple(img[0, 1]) == green
-    assert tuple(img[1, 0]) == blue and tuple(img[1, 1]) == white
-
-    # encoder round-trip
-    assert (parse_bmp(encode_bmp(img)) == img).all()
-
-    # top-down (negative height) and 32-bit BGRA forms
-    pix_td = (bgr(red) + bgr(green) + b"\x00\x00" + bgr(blue) + bgr(white) + b"\x00\x00")
-    dib_td = struct.pack("<IiiHHIIiiII", 40, 2, -2, 1, 24, 0, len(pix_td), 0, 0, 0, 0)
-    assert (parse_bmp(hdr + dib_td + pix_td) == img).all()
-    pix32 = b"".join(bgr(p) + b"\xff" for p in (blue, white, red, green))
-    dib32 = struct.pack("<IiiHHIIiiII", 40, 2, 2, 1, 32, 0, len(pix32), 0, 0, 0, 0)
-    assert (parse_bmp(hdr + dib32 + pix32) == img).all()
-
-    with pytest.raises(ValueError):
-        parse_bmp(b"BMnot really a bitmap" + b"\x00" * 60)
-
-    # Spark kernels: real decode (mean intensity) + real resize
-    media = spark.createDataFrame(
-        [(11, "image", encode_bmp(img), "image/bmp", 2, 2, None)], MEDIA_SCHEMA
-    )
-    feat = extract_features(media, fake=False).first()
-    assert feat.feat_mean == pytest.approx(float(img.mean() / 255.0)) and feat.feat_dim == 3
-    resized = resize_media(media, width=4, height=4, fake=False).first()
-    back = parse_bmp(bytes(resized.payload))
-    rows = (np.arange(4) * 2) // 4
-    assert back.shape == (4, 4, 3) and (back == img[rows][:, rows]).all()
-
-
-def test_gif_spark_kernels_run_real(spark):
-    """GIF through all three Spark kernels with fake=False: feature =
-    first-frame mean, resize round-trips through decode→NN→re-encode,
-    and animated GIFs frame-sample with cumulative-delay timestamps."""
-    from graph_stream_zoomer_spark.operators.gif import encode_gif, parse_gif
-    from graph_stream_zoomer_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        extract_features,
-        resize_media,
-        sample_frames,
-    )
-
-    rng = np.random.RandomState(7)
-    palette = rng.randint(0, 256, size=(4, 3), dtype=np.uint8)
-    frames = [palette[rng.randint(0, 4, size=(8, 8))] for _ in range(5)]
-    anim = encode_gif(frames, delays_ms=[50, 50, 100, 100, 50])
-    still = encode_gif(frames[0])
-
-    media = spark.createDataFrame(
-        [
-            (21, "image", still, "image/gif", 8, 8, None),
-            (22, "video", anim, "image/gif", 8, 8, 350),
-        ],
-        MEDIA_SCHEMA,
-    )
-    feats = {r.media_id: r for r in extract_features(media, fake=False).collect()}
-    assert feats[21].feat_mean == pytest.approx(float(frames[0].mean() / 255.0))
-
-    resized = resize_media(
-        media.where("media_id = 21"), width=4, height=4, fake=False
-    ).first()
-    back = parse_gif(bytes(resized.payload))
-    rows = (np.arange(4) * 8) // 4
-    assert (back == frames[0][rows][:, rows]).all()
-
-    sampled = sorted(
-        sample_frames(media.where("media_id = 22"), n_frames=3, fake=False).collect(),
-        key=lambda r: r["frame_idx"],
-    )
-    picked = [(k * 5) // 3 for k in range(3)]  # 0, 1, 3
-    starts = [0, 50, 100, 200, 300]
-    assert [r.frame_ts_ms for r in sampled] == [starts[p] for p in picked]
-    for r, p in zip(sampled, picked, strict=True):
-        assert (parse_gif(bytes(r.payload)) == frames[p]).all()

@@ -130,7 +130,7 @@ def _write_chunks(parts: list[pa.Table], d: str, first: int, mtime0: int) -> Non
 
 
 @pytest.mark.parametrize(
-    "salt,keyed", [(0, False), (5, False), (0, True)], ids=["unsalted", "salted", "keyed"],
+    "salt,keyed", [(0, False), (5, False), (0, True)], ids=["unified", "salted", "keyed"],
 )
 def test_streaming_job_equals_batch_execute(spark, tmp_path, salt, keyed):
     rng = random.Random(20 + salt)

@@ -204,6 +204,20 @@ def test_late_rows_dropped(spark, tmp_path):
     assert labels == {"user", "assistant"}
 
 
+def test_unified_query_matches_batch(spark, tmp_path, turns_dir):
+    """An explicit unified=True (the keyword the benchmark's stream workload
+    passes) runs the same single discriminated-union query and must emit
+    exactly the batch rows under full watermark drain."""
+    d, turns = turns_dir
+    stream = read_transcript_stream(spark, d)
+    result = run_grouping_job(
+        spark, stream, _op(), str(tmp_path / "out_u"), unified=True
+    )
+    exp_sv, exp_se = _batch_expected(spark, turns)
+    assert _collect_sink(spark, result.vertex_sink, "vertex_label") == exp_sv
+    assert _collect_sink(spark, result.edge_sink, "edge_label") == exp_se
+
+
 def test_rocksdb_state_store_matches_batch(spark, tmp_path, turns_dir):
     """state_store='rocksdb' (Spark's bundled RocksDBStateStoreProvider —
     the off-heap production backend for state that outgrows executor heap)
