@@ -83,21 +83,19 @@ def _grouped_vertices(spark: SparkSession, sf_dir: str, cfg: StreamGraphConfig,
     return g.apply(op.build()).vertices
 
 
-def _role_count_query(cfg_kw: dict):
-    def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        sv = _grouped_vertices(
-            spark, sf_dir, _cfg(**cfg_kw),
-            [":label"], [Count(), AvgProperty("text_len"), SumProperty("value_c")],
-        )
-        p = F.col("vertex_properties")
-        return sv.select(
-            F.col("vertex_label"),
-            ((F.unix_millis(F.col("event_time").cast("timestamp")) + 1) / 1000).cast("bigint").alias("window_end_s"),
-            F.element_at(p, "count").cast("bigint").alias("cnt"),
-            F.round(F.element_at(p, "avg_text_len").cast("double"), 4).alias("avg_text_len"),
-            F.element_at(p, "sum_value_c").cast("double").cast("bigint").alias("sum_value_c"),
-        )
-    return q
+def q_graph_group_role_count(spark: SparkSession, sf_dir: str) -> DataFrame:
+    sv = _grouped_vertices(
+        spark, sf_dir, _cfg(),
+        [":label"], [Count(), AvgProperty("text_len"), SumProperty("value_c")],
+    )
+    p = F.col("vertex_properties")
+    return sv.select(
+        F.col("vertex_label"),
+        ((F.unix_millis(F.col("event_time").cast("timestamp")) + 1) / 1000).cast("bigint").alias("window_end_s"),
+        F.element_at(p, "count").cast("bigint").alias("cnt"),
+        F.round(F.element_at(p, "avg_text_len").cast("double"), 4).alias("avg_text_len"),
+        F.element_at(p, "sum_value_c").cast("double").cast("bigint").alias("sum_value_c"),
+    )
 
 
 _ROLE_COUNT_SQL = f"""
@@ -485,43 +483,6 @@ WITH {_SQL_T}
 SELECT CAST(length(text) AS BIGINT) AS text_len,
        {_win_end_s('ts')} AS window_end_s,
        COUNT(*) AS cnt
-FROM v GROUP BY 1, 2
-"""
-
-
-def q_graph_group_salted_props(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Salted two-phase PROPERTY aggregates (min/max/avg over text_len plus
-    count) under label grouping: phase 1 aggregates per (window, label,
-    salt) partial, phase 2 merges partials — avg via (sum, count) carry,
-    min/max by re-min/re-max (operators/grouping.py salted path). The
-    driver row proves the phase-1/phase-2 decomposition itself reassembles
-    exact answers for every aggregate kind, not just count; the two-phase
-    plan shape is pinned in tests/test_plans.py."""
-    sv = _grouped_vertices(
-        spark, sf_dir, _cfg(salt_buckets=8),
-        [":label"],
-        [Count(), MinProperty("text_len"), MaxProperty("text_len"),
-         AvgProperty("text_len")],
-    )
-    p = F.col("vertex_properties")
-    return sv.select(
-        F.col("vertex_label"),
-        ((F.unix_millis(F.col("event_time").cast("timestamp")) + 1) / 1000).cast("bigint").alias("window_end_s"),
-        F.element_at(p, "count").cast("bigint").alias("cnt"),
-        F.element_at(p, "min_text_len").cast("double").cast("bigint").alias("min_text_len"),
-        F.element_at(p, "max_text_len").cast("double").cast("bigint").alias("max_text_len"),
-        F.round(F.element_at(p, "avg_text_len").cast("double"), 4).alias("avg_text_len"),
-    )
-
-
-_SALTED_PROPS_SQL = f"""
-WITH {_SQL_T}
-SELECT role AS vertex_label,
-       {_win_end_s('ts')} AS window_end_s,
-       COUNT(*) AS cnt,
-       CAST(MIN(length(text)) AS BIGINT) AS min_text_len,
-       CAST(MAX(length(text)) AS BIGINT) AS max_text_len,
-       ROUND(AVG(CAST(length(text) AS DOUBLE)), 4) AS avg_text_len
 FROM v GROUP BY 1, 2
 """
 
@@ -2710,8 +2671,8 @@ FROM h GROUP BY 1, 2
 
 def q_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Key-skew diagnostics (operators/skew.py): top heavy keys with ppm
-    fixed-point share/skew figures — the pre-pass that decides
-    salt_buckets. Integer arithmetic only, hash-exact cross-engine."""
+    fixed-point share/skew figures — a diagnostic pre-pass that changes no
+    plan. Integer arithmetic only, hash-exact cross-engine."""
     from graph_stream_zoomer_spark.operators.skew import skew_profile
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -2870,7 +2831,7 @@ FROM r WHERE rn <= 32 GROUP BY event_type
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: windowed graph grouping (role label + count/avg/sum) over
     the sf0.001 events stream bound as conversation transcripts."""
-    return _role_count_query({})(spark, "/root/testdata/sf0.001")
+    return q_graph_group_role_count(spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -2881,20 +2842,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     semantics another row already proves (plan variants, sub-compositions,
     same-machinery siblings) live in extra_queries() below, still verified
     by scripts/local_verify.py and pytest. r05 rotation: the only two keys
-    with no driver record in ANY round (hll_registers, skew_profile) plus
-    r05's NEW grouping key come FIRST; the union across r03∪r04∪r05
-    driver-proves 71 of the 74 registry keys (documented in README).
-    Four r04-green keys whose machinery other gate rows exercise ceded
-    their slots to extra_queries(). The three product-quantization rows
-    were deleted with operators/pq.py; three grouping rows from
-    extra_queries() took their slots."""
+    with no driver record before r05 (hll_registers, skew_profile) come
+    FIRST; the union across r03∪r04∪r05 driver-proves 69 of the 72
+    registry keys (documented in README). Four r04-green keys whose
+    machinery other gate rows exercise ceded their slots to
+    extra_queries(). The three product-quantization rows were deleted with
+    operators/pq.py and the two salted-aggregation rows with the salted
+    path; grouping rows from extra_queries() took their slots."""
     return {
         # --- never driver-proven (r04's window was spent on the r03
         # --- backlog; both judge-verified green via local_verify in r04)
         "hll_registers": q_hll_registers,
         "skew_profile": q_skew_profile,
         # --- NEW in r05
-        "graph_group_salted_props": q_graph_group_salted_props,
         "doc_quantiles": q_doc_quantiles,
         # --- r04-green keys kept under the gate (regression cover)
         "kmv_distinct": q_kmv_distinct,
@@ -2915,7 +2875,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "embedding_stats": q_embedding_stats,
         "text_stats": q_text_stats,
         # --- reference graph-grouping core (all r03 driver-green)
-        "graph_group_role_count": _role_count_query({}),
+        "graph_group_role_count": q_graph_group_role_count,
         "graph_group_role_minmax": q_graph_group_role_minmax,
         "graph_group_edge_transition": q_graph_group_edge_transition,
         "graph_group_full": q_graph_group_full,
@@ -2926,8 +2886,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "graph_pagerank": q_graph_pagerank,
         "graph_structure": q_graph_structure,
         # --- grouping rows promoted from extra_queries() into the slots
-        # --- the deleted product-quantization rows held (r02/r03 driver-green)
-        "graph_group_role_count_salted": _role_count_query({"salt_buckets": 8}),
+        # --- the deleted product-quantization and salted-aggregation rows
+        # --- held (r02/r03 driver-green)
+        "graph_group_role_sets": q_graph_group_role_sets,
+        "graph_group_role_median": q_graph_group_role_median,
         "graph_group_top_transitions": q_graph_group_top_transitions,
         "graph_group_window_users": q_graph_group_window_users,
         # --- streaming/CEP/joins/relational (r03 driver-green)
@@ -2958,10 +2920,6 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     them with the SAME rows/cols/hash check; all were driver-green in
     CORRECTNESS_r02/r03 artifacts when they occupied gate slots."""
     return {
-        # beyond-reference aggregate kinds over the same grouping core as
-        # graph_group_role_count/minmax (merge logic pinned in test_dataops)
-        "graph_group_role_sets": q_graph_group_role_sets,
-        "graph_group_role_median": q_graph_group_role_median,
         # CEP machinery proven by cep_sequence_match; negation pinned in
         # tests/test_cep.py
         "cep_followed_by": q_cep_followed_by,
@@ -3028,7 +2986,6 @@ def oracle_sql() -> dict[str, str]:
     return {
         "hll_registers": _HLL_SQL,
         "skew_profile": _SKEW_SQL,
-        "graph_group_salted_props": _SALTED_PROPS_SQL,
         "doc_quantiles": _DOC_QUANTILES_SQL,
         "kmv_distinct": _KMV_SQL,
         "cms_heavy_hitters": _CMS_SQL,
@@ -3057,7 +3014,8 @@ def oracle_sql() -> dict[str, str]:
         "graph_triples_join": _TRIPLES_JOIN_SQL,
         "graph_pagerank": _PAGERANK_SQL,
         "graph_structure": _GRAPH_STRUCTURE_SQL,
-        "graph_group_role_count_salted": _ROLE_COUNT_SQL,
+        "graph_group_role_sets": _ROLE_SETS_SQL,
+        "graph_group_role_median": _ROLE_MEDIAN_SQL,
         "graph_group_top_transitions": _TOP_TRANSITIONS_SQL,
         "graph_group_window_users": _WINDOW_USERS_SQL,
         "cep_sequence_match": _CEP_SQL,
@@ -3082,8 +3040,6 @@ def oracle_sql() -> dict[str, str]:
 def extra_oracle_sql() -> dict[str, str]:
     """DuckDB oracles for extra_queries() — verified by scripts/local_verify.py."""
     return {
-        "graph_group_role_sets": _ROLE_SETS_SQL,
-        "graph_group_role_median": _ROLE_MEDIAN_SQL,
         "cep_followed_by": _CEP_FOLLOWED_BY_SQL,
         "tpch_shipping_priority": _TPCH_Q3_SQL,
         "tfidf_scores": _TFIDF_SQL,

@@ -85,8 +85,6 @@ class StreamGraphConfig:
 
     - ``watermark_delay``: bounded out-of-orderness; reference hard-wires
       10 s in the table schemas (``model/table/TableSet.java:151,168``).
-    - ``salt_buckets``: >0 enables the salted two-phase aggregation for
-      skewed group keys (absent in the reference; our scale addition).
     - ``id_hash``: 'sha1' for reference parity (CreateSuperElementId,
       ``impl/functions/utils/CreateSuperElementId.java:27-47``) or
       'sha256' (used by the DuckDB-oracle harness, which lacks sha1).
@@ -96,7 +94,6 @@ class StreamGraphConfig:
     """
 
     watermark_delay: str = "10 seconds"
-    salt_buckets: int = 0
     id_hash: str = "sha1"
     compat_super_edge_id: bool = False
     window: WindowConfig = field(default_factory=WindowConfig)

@@ -8,10 +8,6 @@ TableAvgProperty, each with createAccumulator/accumulate/merge/getValue)
 collapse to native Spark aggregate expressions, which already execute as
 partial+final hash aggregates (map-side combine before the shuffle).
 
-Each descriptor additionally exposes a *decomposed* partial/merge form used
-by the salted two-phase aggregation (skew defense — SURVEY.md §4; the
-reference has none), in batch and in Structured Streaming alike.
-
 Deliberate divergences from reference quirks (SURVEY.md §2.3):
   - MaxProperty: reference seeds the accumulator with Double.MIN_VALUE (the
     smallest *positive* double) and is wrong for all-negative inputs
@@ -100,75 +96,6 @@ class AggregateFunction:
         fn = getattr(F, self.kind)
         return fn(F.col(input_col)).alias(self.output_key)
 
-    # -- decomposed (partial / merge) form for salted 2-phase agg --------
-    def partial_exprs(self, input_col: str) -> list[Column]:
-        p = f"_p_{self.output_key}"
-        if self.kind == "count":
-            return [F.count(F.lit(1)).alias(p)]
-        if self.kind == "avg":
-            return [
-                F.sum(F.col(input_col)).alias(p + "_sum"),
-                F.count(F.col(input_col)).alias(p + "_cnt"),
-            ]
-        if self.kind == "stddev":
-            # algebraic: (n, Σx, Σx²) partials merge exactly
-            return [
-                F.count(F.col(input_col)).alias(p + "_cnt"),
-                F.sum(F.col(input_col)).alias(p + "_sum"),
-                F.sum(F.col(input_col) * F.col(input_col)).alias(p + "_sq"),
-            ]
-        if self.kind in ("collect_set", "count_distinct"):
-            # per-salt distinct sets merge exactly (set union is algebraic)
-            return [F.collect_set(F.col(input_col)).alias(p)]
-        if self.kind in ("percentile", "approx_percentile"):
-            # not algebraic: a per-salt partial would need an exposed
-            # mergeable sketch buffer, which Spark SQL does not surface.
-            # Percentiles of a hot key are exactly what salting would have
-            # protected — callers must run them unsalted (the windowed
-            # state already bounds per-key cardinality) or pre-bucket.
-            raise ValueError(
-                f"{self.kind} aggregates are not salt-decomposable; "
-                "use salt_buckets=0 for this grouping"
-            )
-        fn = getattr(F, self.kind)
-        return [fn(F.col(input_col)).alias(p)]
-
-    def merge_expr(self) -> Column:
-        p = f"_p_{self.output_key}"
-        if self.kind == "count":
-            return F.sum(F.col(p)).alias(self.output_key)
-        if self.kind == "avg":
-            return (F.sum(F.col(p + "_sum")) / F.sum(F.col(p + "_cnt"))).alias(self.output_key)
-        if self.kind == "stddev":
-            n = F.sum(F.col(p + "_cnt"))
-            s = F.sum(F.col(p + "_sum"))
-            sq = F.sum(F.col(p + "_sq"))
-            # sample variance from merged moments; greatest(0, ·) guards
-            # float cancellation. NULL for n < 2 matches stddev_samp under
-            # Spark 3.0+ defaults (SPARK-13860: singleton groups return
-            # NULL; NaN only under spark.sql.legacy.statisticalAggregate=
-            # true, which this engine does not support in salted mode) —
-            # so the salted two-phase plan and the direct plan agree on
-            # singleton groups, pinned by tests/test_dataops.py's
-            # test_stddev_aggregate_direct_and_salted_merge.
-            var = F.greatest(F.lit(0.0), (sq - s * s / n) / (n - 1))
-            return F.when(n >= 2, F.sqrt(var)).alias(self.output_key)
-        if self.kind == "sum":
-            return F.sum(F.col(p)).alias(self.output_key)
-        if self.kind in ("collect_set", "count_distinct"):
-            union = F.array_distinct(F.flatten(F.collect_list(F.col(p))))
-            if self.kind == "count_distinct":
-                return F.size(union).cast("bigint").alias(self.output_key)
-            return F.nullif(
-                F.array_join(F.array_sort(union), ","), F.lit("")
-            ).alias(self.output_key)
-        fn = getattr(F, self.kind)
-        return fn(F.col(p)).alias(self.output_key)
-
-    def merge_agg_expr(self) -> Column:
-        """Merge expr usable inside .agg (avg needs post-division)."""
-        return self.merge_expr()
-
 
 def Count() -> AggregateFunction:
     return AggregateFunction("count")
@@ -191,9 +118,8 @@ def AvgProperty(key: str) -> AggregateFunction:
 
 
 def StddevProperty(key: str) -> AggregateFunction:
-    """Sample standard deviation — beyond-reference aggregate, fully
-    algebraic ((n, Σx, Σx²) partials), so it participates in the salted
-    two-phase aggregation unlike the percentile family."""
+    """Sample standard deviation — beyond-reference aggregate; NULL for
+    groups of fewer than two values (``stddev_samp``)."""
     return AggregateFunction("stddev", key)
 
 
@@ -201,9 +127,8 @@ def CollectSetProperty(key: str) -> AggregateFunction:
     """Distinct property values per group, rendered as the sorted
     comma-joined string (deterministic, engine-portable) — the graph-
     summarization "which values occur in this super-vertex" aggregate the
-    reference family lacks. Streaming-legal (collect_set) and salt-
-    decomposable (set union is algebraic); state per group is bounded by
-    the property's value cardinality, so use on low-cardinality
+    reference family lacks. Streaming-legal (collect_set); state per group
+    is bounded by the property's value cardinality, so use on low-cardinality
     properties (roles, tools, languages) at 100 TB.
 
     Encoding caveat: the comma-join renders a set whose only member is

@@ -14,8 +14,8 @@ the merge-sort formulation instead:
 so each left row picks up the most recent right payload in a single pass.
 Cost is ONE exchange (hash partition on the join keys) plus a per-partition
 sort — the same budget as a regular shuffle join — regardless of how many
-right rows precede each left row. Skewed keys can reuse the salting pattern
-from the grouping operator upstream of this call if needed.
+right rows precede each left row. A hot join key lands in one task;
+AQE skew-join handling is the mitigation lever.
 
 Semantics match ``pandas.merge_asof`` / DuckDB ``ASOF LEFT JOIN``:
 - ``direction="backward"`` (default): latest right row with

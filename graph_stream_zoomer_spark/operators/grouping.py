@@ -27,10 +27,6 @@ Spark-first divergences (semantics preserved, plan improved):
     rows), implemented as key-equality + temporal containment.
   - Property extraction/fold are native Catalyst expressions (see
     functions/properties.py) so every stage stays in WholeStageCodegen.
-  - Optional salted two-phase aggregation (``salt_buckets > 0``) defuses hot
-    group keys; in batch Catalyst already does map-side partial aggregation,
-    but the salted form is load-bearing for the streaming state store where
-    one hot (window, key) otherwise pins one state partition.
 
 Emission parity: the emitted event_time of a super element is the Flink
 window rowtime = window_end − 1 ms (asserted by the reference goldens,
@@ -214,11 +210,9 @@ class GraphStreamGrouping:
         group_cols = [*keys, label] if use_label else keys
         if self.window.kind == WindowKind.SESSION:
             window = window_expr(self.window, "event_time").alias("window")
-            out = df.groupBy(window, *group_cols).agg(*self._agg_exprs(aggs))
-        elif self.config.salt_buckets > 0:
-            out = self._group_salted(df, ["window", *group_cols], f"{kind}_id", aggs)
         else:
-            out = df.groupBy("window", *group_cols).agg(*self._agg_exprs(aggs))
+            window = "window"
+        out = df.groupBy(window, *group_cols).agg(*self._agg_exprs(aggs))
         return out.select(
             "window",
             *keys,
@@ -231,28 +225,6 @@ class GraphStreamGrouping:
         return [a.agg_expr(self._agg_in(a)) for a in aggs] or [
             F.count(F.lit(1)).alias("_group_size")
         ]
-
-    def _group_salted(
-        self, enhanced: DataFrame, group_cols: list[str], salt_src: str, aggs
-    ) -> DataFrame:
-        """Salted two-phase aggregation: phase 1 adds salt = pmod(xxhash64(id), S)
-        to the key and computes partial aggregates; phase 2 merges partials
-        per true key. Plain DataFrame code — no Catalyst extension. In
-        Structured Streaming both phases are chained stateful aggregations:
-        phase 1 emits each closed (window, key, salt) row once, and phase 2
-        closes the same window in the same trigger."""
-        s = self.config.salt_buckets
-        salted = enhanced.withColumn("_salt", F.pmod(F.xxhash64(F.col(salt_src)), F.lit(s)))
-        partials: list[Column] = []
-        for a in aggs:
-            partials += a.partial_exprs(self._agg_in(a))
-        if not partials:
-            partials = [F.count(F.lit(1)).alias("_p__group_size")]
-        phase1 = salted.groupBy(*group_cols, "_salt").agg(*partials)
-        merges = [a.merge_expr() for a in aggs]
-        if not merges:
-            merges = [F.sum("_p__group_size").alias("_group_size")]
-        return phase1.groupBy(*group_cols).agg(*merges)
 
     def group_vertices(self, enhanced: DataFrame) -> DataFrame:
         gk = [self._gk(i) for i in range(len(self.vertex_grouping_keys))]
@@ -309,8 +281,8 @@ class GraphStreamGrouping:
         # (session window, group); broadcast it so the session path never
         # shuffles the raw vertex stream against a tiny summary (the
         # null-safe+containment condition would otherwise fall back to a
-        # shuffled BNLJ). Batch-only path: streaming session summaries
-        # (streaming/pipeline.py) group vertices without expanding them.
+        # shuffled BNLJ). Batch-only path: over a stream, session windows
+        # are grouped (stages 1, 3 and 4) but not expanded.
         return enhanced.join(F.broadcast(g), cond, "inner").select(
             enhanced["vertex_id"], g["window"], g["super_vertex_id"]
         )

@@ -23,9 +23,8 @@ extension the brief asks for beyond reference coverage.
 - No windows, no joins, no Python. The whole plan is one
   WholeStageCodegen span per side of the exchange.
 - Skewed conversations (one conv with millions of turns) are bounded by
-  the generator's cap in tests; in production the same salting used by
-  the grouping operator applies (partial agg already absorbs most skew
-  because every aggregate here is algebraic).
+  the generator's cap in tests; in production partial aggregation absorbs
+  most skew because every aggregate here is algebraic.
 
 The streaming twin (`streaming_conversation_stats`) expresses the same
 rollup as a session-window aggregation: a conversation is "closed" when

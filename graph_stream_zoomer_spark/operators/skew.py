@@ -1,14 +1,13 @@
-"""Key-skew diagnostics — the planning tool behind the engine's explicit
-skew handling (StreamGraphConfig.salt_buckets, the salted two-phase
-aggregate in operators/grouping.py, and AQE skew-join at run time).
+"""Key-skew diagnostics: how heavy the heaviest keys of a column set are.
 
-At 100 TB the question "is conv_id/role skewed enough to salt?" must be
-answered by a cheap pre-pass, not by watching a straggler task die. The
-profile is ONE map-side-combined groupBy over the keys plus a TakeOrdered
-for the heavy hitters — no global sort, no driver-side data beyond top_k
-rows — and every reported figure is integer arithmetic (ppm fixed-point),
-so the output is hash-exact cross-engine and usable as a drift monitor
-(profile today vs yesterday compares bit-for-bit).
+A diagnostic only; it changes no plan. The grouping operator's defence
+against hot keys is Spark's own map-side partial aggregation (and AQE
+skew-join at run time). The profile is ONE map-side-combined groupBy over
+the keys plus a TakeOrdered for the heavy hitters — no global sort, no
+driver-side data beyond top_k rows — and every reported figure is integer
+arithmetic (ppm fixed-point), so the output is hash-exact cross-engine and
+usable as a drift monitor (profile today vs yesterday compares
+bit-for-bit).
 """
 
 from __future__ import annotations
@@ -29,7 +28,6 @@ def skew_profile(df: DataFrame, key_cols: list[str], top_k: int = 10) -> DataFra
       share_ppm     cnt / total_rows, parts-per-million (integer div)
       skew_ppm      cnt / mean_rows_per_key in ppm — 1_000_000 means the
                     key is exactly average; 50_000_000 means a 50× hot key
-                    (the salted two-phase aggregate's trigger signal)
 
     Plan: groupBy keys (1 exchange, partial agg), 1-row totals broadcast,
     TakeOrderedAndProject for the top_k — no global sort."""
@@ -71,23 +69,3 @@ def skew_profile(df: DataFrame, key_cols: list[str], top_k: int = 10) -> DataFra
     return top.select(
         rank.alias("rank"), "key", "cnt", "share_ppm", "skew_ppm"
     )
-
-
-def suggest_salt_buckets(
-    df: DataFrame, key_cols: list[str], target_rows_per_task: int = 5_000_000
-) -> int:
-    """Salt-bucket recommendation: ceil(heaviest key / target rows per
-    task), 0 when no key exceeds the target (salting has a merge cost —
-    don't pay it for balanced keys). Collects ONE number."""
-    key = F.concat_ws(":", *[F.col(c).cast("string") for c in key_cols])
-    row = (
-        df.select(key.alias("key"))
-        .groupBy("key")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .agg(F.max("cnt").alias("max_cnt"))
-        .first()
-    )
-    max_cnt = row["max_cnt"] or 0
-    if max_cnt <= target_rows_per_task:
-        return 0
-    return -(-max_cnt // target_rows_per_task)

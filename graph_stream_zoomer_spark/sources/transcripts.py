@@ -45,7 +45,7 @@ def generate_transcripts(
     """Deterministic synthetic transcripts, mean ≈9 turns/conversation.
 
     ``skew``: the first 0.1% of conv_ids get 10× turns and a hot role —
-    exercises the salted aggregation path. ``late_fraction_pct``% of turns
+    a hot-key input for the grouping's partial aggregation. ``late_fraction_pct``% of turns
     get ts lagged 15 s (1.5× the default watermark) to exercise late-data
     drops.
     """

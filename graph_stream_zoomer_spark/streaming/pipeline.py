@@ -7,9 +7,9 @@ Spark mapping: ``withWatermark`` + windowed aggregation in append mode —
 windows emit once the watermark passes window end; late rows are dropped
 identically.
 
-There is no streaming-specific plan: the summary streams are the stage
-methods of ``operators/grouping.py`` applied to watermarked streaming
-DataFrames (per stream — vertices and edges):
+There is no streaming-specific plan: the summary streams are
+``GraphStreamGrouping.summaries`` (``operators/grouping.py``) applied to
+watermarked streaming DataFrames (per stream — vertices and edges):
 
   readStream → withWatermark(event_time, delay)
     → window assignment [+ windowed DISTINCT]             [stage 1/2]
@@ -19,40 +19,15 @@ DataFrames (per stream — vertices and edges):
 The windowed DISTINCT is a stateful deduplication keyed by the window (the
 raw event time for session windows), so its state is evicted by the
 watermark; producers that emit each element once (the transcript binding)
-skip it. ``salt_buckets > 0`` chains both salted phases as stateful
-aggregations in the same query.
+skip it (``StreamGraph.elements_unique``). Each element kind is one
+stateful aggregation; Spark's partial aggregation combines rows before
+the state store.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..operators.grouping import GraphStreamGrouping
-
-
-def streaming_vertex_summaries(
-    op: GraphStreamGrouping, vertices: DataFrame, observations_unique: bool = False
-) -> DataFrame:
-    """Super-vertex summary stream (stages 1+3+4) over a vertex-observation
-    stream that already carries an event-time watermark on ``event_time``.
-    ``observations_unique`` skips the dedup state store when the producer
-    guarantees one row per vertex (the transcript binding does; tumbling
-    windows only)."""
-    if observations_unique:
-        deduped = op.assign_window_vertices(vertices)
-    else:
-        deduped = op.dedup_vertices(vertices)
-    return op.group_vertices(op.enhance_vertices(deduped))
-
-
-def streaming_edge_summaries(op: GraphStreamGrouping, triples: DataFrame) -> DataFrame:
-    """Super-edge summary stream (stages 2+6+7+8+9) over the watermarked
-    triple stream: endpoint super ids are recomputed per edge (joinless fast
-    path). Triple-derived successor edges are unique by construction (one
-    edge per (conv_id, turn_idx) pair), so no dedup state is needed."""
-    expanded = op.edges_with_super_vertices_from_triples(triples, edges_unique=True)
-    return op.group_edges(op.enrich_edges(expanded))
 
 
 def summary_triples(super_vertices: DataFrame, super_edges: DataFrame) -> DataFrame:

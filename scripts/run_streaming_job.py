@@ -10,7 +10,7 @@ Deployment (north rule):
         --vertex-aggs count,avg:text_len --edge-aggs count \
         --window 600 --watermark "10 seconds" \
         [--window-kind tumbling|sliding|session --slide 60 | --gap 1800] \
-        [--input-format iceberg] [--salt 16] [--available-now]
+        [--input-format iceberg] [--available-now]
 
 On a cluster the same script runs unchanged: master/executor topology comes
 from spark-submit; the job only ever references the SparkSession. For the
@@ -68,7 +68,6 @@ def build_parser() -> argparse.ArgumentParser:
     ap.add_argument("--slide", type=float, default=None, help="slide seconds (sliding only)")
     ap.add_argument("--gap", type=float, default=None, help="inactivity gap seconds (session only)")
     ap.add_argument("--watermark", default="10 seconds")
-    ap.add_argument("--salt", type=int, default=0)
     ap.add_argument("--max-turn-gap", default="1 hour")
     ap.add_argument("--available-now", action="store_true")
     return ap
@@ -95,11 +94,7 @@ def build_grouping(args):
     else:
         window = WindowConfig.tumbling(args.window, "SECONDS")
 
-    cfg = StreamGraphConfig(
-        window=window,
-        watermark_delay=args.watermark,
-        salt_buckets=args.salt,
-    )
+    cfg = StreamGraphConfig(window=window, watermark_delay=args.watermark)
     b = (
         GroupingBuilder()
         .add_vertex_grouping_keys([k for k in args.vertex_keys.split(",") if k])

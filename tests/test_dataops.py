@@ -446,9 +446,8 @@ def test_weighted_sample(spark):
 
 
 def test_percentile_aggregates(spark):
-    """Exact percentile matches hand-computed interpolation, the approx
-    sketch lands within tolerance, and the salted decomposition refuses
-    (percentiles are not algebraic)."""
+    """Exact percentile matches hand-computed interpolation and the approx
+    sketch lands within tolerance."""
     import pytest
 
     from graph_stream_zoomer_spark.operators.aggregation import (
@@ -464,36 +463,23 @@ def test_percentile_aggregates(spark):
     assert row["p50_x"] == 3.0
     assert row["p90_x"] == pytest.approx(7.6)  # 4 + 0.6*(10-4)
     assert abs(row["p50approx_x"] - 3.0) <= 1.0
-    with pytest.raises(ValueError, match="not salt-decomposable"):
-        med.partial_exprs("x")
 
 
 def test_stddev_aggregate_direct_and_salted_merge(spark):
-    """StddevProperty: direct form equals stddev_samp; the (n, Σx, Σx²)
-    partial/merge decomposition reproduces it exactly across salt buckets,
-    and n<2 merges to NULL like stddev_samp."""
+    """StddevProperty: direct form equals stddev_samp, and n<2 gives NULL
+    like stddev_samp."""
     import statistics
 
     import pytest
 
     from graph_stream_zoomer_spark.operators.aggregation import StddevProperty
-    from pyspark.sql import functions as SF
 
     vals = [1.0, 2.0, 3.0, 4.0, 10.0, 7.5]
     df = spark.createDataFrame([(v, i % 3) for i, v in enumerate(vals)], "x double, salt int")
     sd = StddevProperty("x")
     direct = df.agg(sd.agg_expr("x")).collect()[0]["stddev_x"]
     assert direct == pytest.approx(statistics.stdev(vals))
-    merged = (
-        df.groupBy("salt")
-        .agg(*sd.partial_exprs("x"))
-        .agg(sd.merge_expr())
-        .collect()[0]["stddev_x"]
-    )
-    assert merged == pytest.approx(direct)
     one = spark.createDataFrame([(5.0, 0)], "x double, salt int")
-    m1 = one.groupBy("salt").agg(*sd.partial_exprs("x")).agg(sd.merge_expr()).collect()[0]
-    assert m1["stddev_x"] is None
     assert one.agg(sd.agg_expr("x")).collect()[0]["stddev_x"] is None
 
 

@@ -130,12 +130,6 @@ def test_config_b_join_path(spark, graph):
     _check_config_b(g2.apply(_build_config_b()))
 
 
-def test_config_b_salted(graph):
-    """Salted two-phase aggregation produces identical results."""
-    cfg = StreamGraphConfig(salt_buckets=7)
-    _check_config_b(graph.apply(_build_config_b(cfg)))
-
-
 def test_super_vertex_membership_map(graph):
     """Vertex→super-vertex grouping: {v1,v3},{v2,v4},{v5,v7},{v6,v8}
     (LabelGroupSizeAggTest.java:169-187): same super id within a group,

@@ -247,31 +247,6 @@ def test_embedding_near_dup_default_is_bucketed(spark):
     assert "CartesianProduct" not in txt and "NestedLoop" not in txt, txt[:2000]
 
 
-def test_salted_agg_two_phase_shape(spark):
-    """Salted path: two aggregation levels with map-side partial combine —
-    partial_* HashAggregates must appear more than the exchange count."""
-    cfg = StreamGraphConfig(window=WindowConfig.tumbling(600, "SECONDS"), salt_buckets=8)
-    t = generate_transcripts(spark, 200)
-    out = transcript_graph(t, cfg).apply(_op(cfg))
-    txt = plan_stats(out.vertices).text
-    assert txt.count("HashAggregate") >= 4  # (partial+final) × (salted, merge)
-
-
-def test_salted_props_gate_query_two_phase_shape(spark):
-    """The driver-gated graph_group_salted_props row (min/max/avg property
-    aggregates under salt_buckets=8) must run the genuine two-phase shape:
-    phase 1 groups by (…, salt), phase 2 merges partials — so the salt
-    column appears in the plan and both aggregation levels are present.
-    Its oracle row then proves the decomposition reassembles exact
-    answers for every aggregate kind, not just count."""
-    import __spark_entry__ as e
-
-    df = e.q_graph_group_salted_props(spark, "/root/testdata/sf0.01")
-    st = plan_stats(df)
-    assert "_salt" in st.text, st.text[:2000]
-    assert st.text.count("HashAggregate") >= 4, st.text[:2000]
-
-
 def test_streaming_join_state_carries_no_text_payload(spark):
     """State-byte pushdown pin: the successor join's buffered rows must
     carry text_len, never the raw text payload (~75% of row bytes; state

@@ -1,12 +1,12 @@
 """Skew diagnostics (operators/skew.py): figure correctness, determinism,
-salt recommendation, and the no-global-sort plan."""
+and the no-global-sort plan."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from graph_stream_zoomer_spark.operators.skew import skew_profile, suggest_salt_buckets
+from graph_stream_zoomer_spark.operators.skew import skew_profile
 from graph_stream_zoomer_spark.plans.inspect import plan_stats
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -45,10 +45,3 @@ def test_skew_profile_plan_no_global_sort(events):
     assert "TakeOrderedAndProject" in st.text, st.text[:3000]
     assert st.num_sortmerge_joins == 0
     assert "EvalPython" not in st.text
-
-
-def test_suggest_salt_buckets(events):
-    # hottest user has 86 events at sf0.01 → target 50 ⇒ ceil(86/50) = 2
-    assert suggest_salt_buckets(events, ["user_id"], 50) == 2
-    # no key above target → 0 (don't pay the merge cost)
-    assert suggest_salt_buckets(events, ["user_id"], 1000) == 0

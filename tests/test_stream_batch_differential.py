@@ -8,7 +8,8 @@ chunk boundaries and drained one file per trigger; the job is stopped after
 a random number of chunks and restarted on the same checkpoint. A
 far-future sentinel conversation closes every real window, and every
 closed window's super-vertices and super-edges (ids, rowtimes, labels,
-grouping values and aggregates) must equal the batch ``execute()`` output.
+grouping values and aggregates) must equal the batch ``execute()`` output,
+for tumbling and sliding windows.
 """
 
 from __future__ import annotations
@@ -52,15 +53,12 @@ SENTINEL = pa.Table.from_pylist(
 )
 
 
-def _op(salt: int, keyed: bool = False):
+def _op(window: WindowConfig, keyed: bool = False):
     """Label keys with Count + AvgProperty("text_len"), or (``keyed``) keys
     and aggregates that read every entry of the binding's property bags:
     vertices by tool + hour_bucket with Min/Max/AvgProperty("text_len"),
     edges by transition with Count."""
-    cfg = StreamGraphConfig(
-        window=WindowConfig.tumbling(10, "MINUTES"), watermark_delay="10 seconds",
-        salt_buckets=salt,
-    )
+    cfg = StreamGraphConfig(window=window, watermark_delay="10 seconds")
     b = GroupingBuilder()
     if keyed:
         b.add_vertex_grouping_keys(["tool", "hour_bucket"]).add_edge_grouping_key("transition")
@@ -129,11 +127,16 @@ def _write_chunks(parts: list[pa.Table], d: str, first: int, mtime0: int) -> Non
         os.utime(f, (mtime0 + i, mtime0 + i))
 
 
+TUMBLING = WindowConfig.tumbling(10, "MINUTES")
+SLIDING = WindowConfig.sliding(10, 5, "MINUTES")
+
+
 @pytest.mark.parametrize(
-    "salt,keyed", [(0, False), (5, False), (0, True)], ids=["unified", "salted", "keyed"],
+    "window,keyed", [(TUMBLING, False), (SLIDING, False), (TUMBLING, True)],
+    ids=["unified", "sliding", "keyed"],
 )
-def test_streaming_job_equals_batch_execute(spark, tmp_path, salt, keyed):
-    rng = random.Random(20 + salt)
+def test_streaming_job_equals_batch_execute(spark, tmp_path, window, keyed):
+    rng = random.Random(20)
     turns = generate_transcripts(spark, 60, late_fraction_pct=0)
     table = pa.Table.from_pandas(turns.toPandas(), preserve_index=False).cast(TURNS_SCHEMA)
     table = table.sort_by([("ts", "ascending"), ("conv_id", "ascending")])
@@ -144,7 +147,7 @@ def test_streaming_job_equals_batch_execute(spark, tmp_path, salt, keyed):
     d, out_root = str(tmp_path / "turns"), str(tmp_path / "out")
     os.makedirs(d)
     mtime0 = int(time.time()) - 3600
-    op = _op(salt, keyed)
+    op = _op(window, keyed)
 
     def drain():
         stream = read_transcript_stream(spark, d, max_files_per_trigger=1)

@@ -20,11 +20,10 @@ from graph_stream_zoomer_spark.streaming.sink import IdempotentParquetSink
 WINDOW_S = 60
 
 
-def _op(salt: int = 0):
+def _op():
     cfg = StreamGraphConfig(
         window=WindowConfig.tumbling(WINDOW_S, "SECONDS"),
         watermark_delay="10 seconds",
-        salt_buckets=salt,
     )
     return (
         GroupingBuilder()
@@ -143,19 +142,6 @@ def test_checkpoint_resume_exactly_once(spark, tmp_path):
         df.groupBy("window_start", "vertex_label").count().where("count > 1").count()
     )
     assert dupes == 0
-
-
-def test_streaming_salted_matches_batch(spark, tmp_path, turns_dir):
-    """Salted mode: both salted phases run inside the streaming query as
-    chained stateful aggregations — phase 1 emits each closed (window, key,
-    salt) partial once, phase 2 merges them in the same trigger — so the
-    sink commits merged rows, identical to the unsalted batch run."""
-    d, turns = turns_dir
-    stream = read_transcript_stream(spark, d)
-    result = run_grouping_job(spark, stream, _op(salt=5), str(tmp_path / "out_salted"))
-    exp_sv, _ = _batch_expected(spark, turns)
-    got_sv = _collect_sink(spark, result.vertex_sink, "vertex_label")
-    assert got_sv == exp_sv
 
 
 def test_sink_idempotent_redelivery(spark, tmp_path):
@@ -328,32 +314,30 @@ def test_stateless_text_ops_are_stream_transparent(spark, tmp_path):
 def test_streaming_set_aggregates_match_batch(spark, tmp_path):
     """CollectSetProperty/CountDistinctProperty in the streaming job: the
     collect_set form is streaming-legal (countDistinct is not), and the
-    salted variant's partial-set → union merge runs inside foreachBatch —
-    both must reproduce the batch engine's values per (label, window)."""
+    windowed aggregation inside the streaming query must reproduce the
+    batch engine's values per (label, window)."""
     from graph_stream_zoomer_spark import CollectSetProperty, CountDistinctProperty
 
     turns = generate_transcripts(spark, 50, late_fraction_pct=0, skew=False)
     d = str(tmp_path / "turns")
     turns.unionByName(_sentinel(spark)).repartition(4).write.parquet(d)
 
-    def op(salt):
-        cfg = StreamGraphConfig(
-            window=WindowConfig.tumbling(WINDOW_S, "SECONDS"),
-            watermark_delay="10 seconds",
-            salt_buckets=salt,
-        )
-        return (
-            GroupingBuilder()
-            .add_vertex_grouping_key(":label")
-            .add_vertex_aggregate_function(Count())
-            .add_vertex_aggregate_function(CollectSetProperty("text_len"))
-            .add_vertex_aggregate_function(CountDistinctProperty("text_len"))
-            .add_edge_grouping_key(":label")
-            .add_edge_aggregate_function(Count())
-            .set_window_config(cfg.window)
-            .set_config(cfg)
-            .build()
-        )
+    cfg = StreamGraphConfig(
+        window=WindowConfig.tumbling(WINDOW_S, "SECONDS"),
+        watermark_delay="10 seconds",
+    )
+    op = (
+        GroupingBuilder()
+        .add_vertex_grouping_key(":label")
+        .add_vertex_aggregate_function(Count())
+        .add_vertex_aggregate_function(CollectSetProperty("text_len"))
+        .add_vertex_aggregate_function(CountDistinctProperty("text_len"))
+        .add_edge_grouping_key(":label")
+        .add_edge_aggregate_function(Count())
+        .set_window_config(cfg.window)
+        .set_config(cfg)
+        .build()
+    )
 
     graph = transcript_graph(turns)
     want = {
@@ -363,24 +347,21 @@ def test_streaming_set_aggregates_match_batch(spark, tmp_path):
             r["vertex_properties"].get("set_text_len"),
             int(r["vertex_properties"]["nd_text_len"]),
         )
-        for r in graph.apply(op(0)).vertices.collect()
+        for r in graph.apply(op).vertices.collect()
     }
 
-    for i, salt in enumerate((0, 13)):
-        result = run_grouping_job(
-            spark, read_transcript_stream(spark, d), op(salt), str(tmp_path / f"out{i}")
+    result = run_grouping_job(spark, read_transcript_stream(spark, d), op, str(tmp_path / "out0"))
+    df = result.vertex_sink.read(spark).where(F.col("window_start") < "2029-01-01")
+    got = {
+        (
+            r["vertex_label"],
+            r["event_time"],
+            r["set_text_len"],
+            int(r["nd_text_len"]),
         )
-        df = result.vertex_sink.read(spark).where(F.col("window_start") < "2029-01-01")
-        got = {
-            (
-                r["vertex_label"],
-                r["event_time"],
-                r["set_text_len"],
-                int(r["nd_text_len"]),
-            )
-            for r in df.collect()
-        }
-        assert got == want, f"salt={salt}"
+        for r in df.collect()
+    }
+    assert got == want
 
 
 def test_lm_score_streams_against_pretrained_model(spark, tmp_path):

@@ -13,7 +13,6 @@ from graph_stream_zoomer_spark.operators.grouping import GroupingBuilder
 from graph_stream_zoomer_spark.sources.transcripts import generate_transcripts, transcript_graph
 from graph_stream_zoomer_spark.streaming.binding import streaming_vertex_observations
 from graph_stream_zoomer_spark.streaming.job import read_transcript_stream
-from graph_stream_zoomer_spark.streaming.pipeline import streaming_vertex_summaries
 from graph_stream_zoomer_spark.streaming.sink import IdempotentParquetSink
 
 
@@ -43,7 +42,8 @@ def _run_vertex_stream(spark, tmp_path, window):
     turns.unionByName(_sentinel(spark)).repartition(4).write.parquet(d)
     stream = read_transcript_stream(spark, d)
     vertices = streaming_vertex_observations(stream, watermark="10 seconds")
-    sv = streaming_vertex_summaries(_op(window), vertices)
+    op = _op(window)
+    sv = op.group_vertices(op.enhance_vertices(op.dedup_vertices(vertices)))
     sink = IdempotentParquetSink(str(tmp_path / "out"))
     q = (
         sv.writeStream.foreachBatch(sink)
@@ -99,7 +99,7 @@ def test_percentile_aggregate_streaming_matches_batch(spark, tmp_path):
     turns.unionByName(_sentinel(spark)).repartition(4).write.parquet(d)
     stream = read_transcript_stream(spark, d)
     vertices = streaming_vertex_observations(stream, watermark="10 seconds")
-    sv = streaming_vertex_summaries(op, vertices)
+    sv = op.group_vertices(op.enhance_vertices(op.dedup_vertices(vertices)))
     sink = IdempotentParquetSink(str(tmp_path / "out"))
     q = (
         sv.writeStream.foreachBatch(sink)

@@ -9,7 +9,13 @@ import os
 
 from pyspark.sql import functions as F
 
-from graph_stream_zoomer_spark import Count, StreamGraphConfig, WindowConfig
+from graph_stream_zoomer_spark import (
+    Count,
+    StreamGraph,
+    StreamGraphConfig,
+    WindowConfig,
+    split_triples,
+)
 from graph_stream_zoomer_spark.operators.grouping import GroupingBuilder
 from graph_stream_zoomer_spark.sources.transcripts import (
     generate_transcripts,
@@ -20,11 +26,7 @@ from graph_stream_zoomer_spark.streaming.binding import (
     streaming_vertex_observations,
 )
 from graph_stream_zoomer_spark.streaming.job import read_transcript_stream
-from graph_stream_zoomer_spark.streaming.pipeline import (
-    streaming_edge_summaries,
-    streaming_vertex_summaries,
-    summary_triples,
-)
+from graph_stream_zoomer_spark.streaming.pipeline import summary_triples
 
 WM = "10 seconds"
 
@@ -64,8 +66,14 @@ def test_streaming_summary_triples_match_batch(spark, tmp_path):
     stream = read_transcript_stream(spark, d)
     triples = streaming_transcript_triples(stream, watermark=WM)
     vertices = streaming_vertex_observations(stream, watermark=WM)
-    sv = streaming_vertex_summaries(op, vertices, observations_unique=True)
-    se = streaming_edge_summaries(op, triples)
+    graph = StreamGraph(
+        vertices=vertices,
+        edges=split_triples(triples)[1],
+        config=op.config,
+        triples=triples,
+        elements_unique=True,
+    )
+    sv, se = op.summaries(graph)
     joined = summary_triples(sv, se)
 
     out_dir = str(tmp_path / "triples_out")
