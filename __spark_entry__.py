@@ -1184,32 +1184,6 @@ tok AS (SELECT doc_id, len(toks) AS dl, unnest(toks) AS term FROM tw)
 """
 
 
-def q_dedup_first_occurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of the streaming first-occurrence dedup
-    (streaming/dedup.py): earliest row per normalized-text fingerprint
-    (doc_id tiebreak), one window exchange."""
-    from graph_stream_zoomer_spark.streaming.dedup import first_occurrence
-
-    return first_occurrence(_docs(spark, sf_dir), ts_col=None).select(
-        "doc_id", "lang", "source", "fingerprint"
-    )
-
-
-_FIRST_OCC_SQL = """
-SELECT doc_id, lang, source, fingerprint
-FROM (
-  SELECT doc_id, lang, source,
-         md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS fingerprint,
-         row_number() OVER (
-           PARTITION BY md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')))
-           ORDER BY doc_id
-         ) AS rn
-  FROM documents
-)
-WHERE rn = 1
-"""
-
-
 def q_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-pass per-column table profile (operators/profile.py) of the
     documents table — exact-distinct mode for the oracle (the deployment
@@ -2932,9 +2906,6 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lm_doc_scores": q_lm_doc_scores,
         # quality metrics family: quality_filter holds the gate slot
         "text_repetition": q_text_repetition,
-        # batch twin of the streaming first-occurrence dedup; exact-dup
-        # semantics proven by dedup_exact, ordering by streaming tests
-        "dedup_first_occurrence": q_dedup_first_occurrence,
         # = dedup_exact over a fingerprint column (text_fingerprint holds
         # a gate slot)
         "dedup_fingerprint": q_dedup_fingerprint,
@@ -3049,7 +3020,6 @@ def extra_oracle_sql() -> dict[str, str]:
         "ann_cosine_topk": _ANN_TOPK_SQL,
         "dedup_keep_best": _KEEP_BEST_SQL,
         "table_profile": _PROFILE_SQL,
-        "dedup_first_occurrence": _FIRST_OCC_SQL,
         "dedup_fingerprint": _DEDUP_FP_SQL,
         "ann_cosine_scores": _ANN_SCORES_SQL,
         "ann_lsh_topk": _ANN_LSH_SQL,

@@ -88,12 +88,8 @@ class StreamGraphConfig:
     - ``id_hash``: 'sha1' for reference parity (CreateSuperElementId,
       ``impl/functions/utils/CreateSuperElementId.java:27-47``) or
       'sha256' (used by the DuckDB-oracle harness, which lacks sha1).
-    - ``compat_super_edge_id``: reproduce the reference's buggy super-edge
-      hash that omits source/target super ids
-      (``impl/algorithm/TableGroupingBase.java:426-441``); default False.
     """
 
     watermark_delay: str = "10 seconds"
     id_hash: str = "sha1"
-    compat_super_edge_id: bool = False
     window: WindowConfig = field(default_factory=WindowConfig)

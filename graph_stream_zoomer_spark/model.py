@@ -89,13 +89,10 @@ TRIPLE_SCHEMA = StructType(
 NO_LABEL = ""
 
 
-def split_triples(triples: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Triple stream → (vertices, edges). Spark analog of Extractor.java.
-
-    One triple yields 1 edge + 2 vertex observations (duplicates allowed;
-    windowed dedup collapses them downstream, GraphStreamGrouping.java:146-173).
-    """
-    edges = triples.select(
+def triple_edges(triples: DataFrame) -> DataFrame:
+    """Triple stream → edge stream: one edge per triple, its endpoints
+    referenced by vertex id."""
+    return triples.select(
         "edge_id",
         "edge_label",
         "edge_properties",
@@ -103,6 +100,14 @@ def split_triples(triples: DataFrame) -> tuple[DataFrame, DataFrame]:
         F.col("target.vertex_id").alias("target_id"),
         "event_time",
     )
+
+
+def split_triples(triples: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Triple stream → (vertices, edges). Spark analog of Extractor.java.
+
+    One triple yields 1 edge + 2 vertex observations (duplicates allowed;
+    windowed dedup collapses them downstream, GraphStreamGrouping.java:146-173).
+    """
     vertices = triples.select(
         F.col("source.vertex_id").alias("vertex_id"),
         F.col("source.event_time").alias("event_time"),
@@ -116,7 +121,7 @@ def split_triples(triples: DataFrame) -> tuple[DataFrame, DataFrame]:
             F.col("target.vertex_properties").alias("vertex_properties"),
         )
     )
-    return vertices, edges
+    return vertices, triple_edges(triples)
 
 
 @dataclass
@@ -183,7 +188,7 @@ class StreamGraph:
             b.add_vertex_aggregate_function(a)
         for a in edge_agg_functions or []:
             b.add_edge_aggregate_function(a)
-        b.set_window_config(self.config.window)
+        b.set_config(self.config).set_window_config(self.config.window)
         return self.apply(b.build())
 
     # -- sinks (S7 print, S8 CSV; model/graph/StreamGraph.java:125-161) ----

@@ -187,13 +187,10 @@ class GraphStreamGrouping:
         return super_element_id([*fields, self._rowtime_ms(rowtime)], self.config.id_hash)
 
     def _edge_super_id(self) -> Column:
-        """Default: src + tgt + [label?] + grouping values + rowtime.
-        The reference omits src/tgt (TableGroupingBase.java:426-441) which
-        its own tests flag as buggy (LabelGroupSizeAggTest.java:25);
-        ``compat_super_edge_id`` reproduces that."""
-        fields: list[Column] = []
-        if not self.config.compat_super_edge_id:
-            fields += [F.col("source_id"), F.col("target_id")]
+        """src + tgt + [label?] + grouping values + rowtime. The reference
+        omits src/tgt (TableGroupingBase.java:426-441), which its own tests
+        flag as buggy (LabelGroupSizeAggTest.java:25)."""
+        fields = [F.col("source_id"), F.col("target_id")]
         if self.use_edge_labels:
             fields.append(F.col("edge_label"))
         fields += [F.col(self._egk(i)) for i in range(len(self.edge_grouping_keys))]

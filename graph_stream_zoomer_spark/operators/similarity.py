@@ -472,17 +472,6 @@ def ivf_topk(
     )
 
 
-def scaled_elements(vec: Column, scale: int, null_message: str) -> Column:
-    """Each element scaled to a long (half-up at 1/scale resolution); a NULL
-    element raises ``null_message`` instead of dropping out of the sum."""
-    return F.transform(
-        vec,
-        lambda e: F.when(
-            e.isNull(), F.raise_error(F.lit(null_message)).cast("long")
-        ).otherwise(F.floor(e.cast("double") * scale + F.lit(0.5)).cast("long")),
-    )
-
-
 def pool_embeddings(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -515,7 +504,13 @@ def pool_embeddings(
         raise ValueError("scale must be positive")
     g = list(group_cols or [])
     x = F.col(vec_col)
-    scaled = scaled_elements(x, scale, f"pool_embeddings: NULL element in {vec_col}")
+    null_message = f"pool_embeddings: NULL element in {vec_col}"
+    scaled = F.transform(
+        x,
+        lambda e: F.when(
+            e.isNull(), F.raise_error(F.lit(null_message)).cast("long")
+        ).otherwise(F.floor(e.cast("double") * scale + F.lit(0.5)).cast("long")),
+    )
     exploded = (
         df.where(x.isNotNull())
         .select(*g, F.posexplode(scaled).alias("pos", "_v"))

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..config import StreamGraphConfig
-from ..model import StreamGraph
+from ..model import StreamGraph, triple_edges
 
 
 def events_to_transcripts(events: DataFrame) -> DataFrame:
@@ -102,16 +102,12 @@ def events_graph(events: DataFrame, config: StreamGraphConfig | None = None) -> 
         )
     )
     triples = events_triples(events)
-    edges = triples.select(
-        "edge_id",
-        "edge_label",
-        "edge_properties",
-        F.col("source.vertex_id").alias("source_id"),
-        F.col("target.vertex_id").alias("target_id"),
-        "event_time",
-    )
     return StreamGraph(
-        vertices=vertices, edges=edges, config=config, triples=triples, elements_unique=True
+        vertices=vertices,
+        edges=triple_edges(triples),
+        config=config,
+        triples=triples,
+        elements_unique=True,
     )
 
 

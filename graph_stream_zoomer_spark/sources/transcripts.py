@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..config import StreamGraphConfig
-from ..model import VERTEX_SCHEMA, VERTEX_STRUCT, StreamGraph
+from ..model import VERTEX_SCHEMA, VERTEX_STRUCT, StreamGraph, triple_edges
 
 FILLER = "the quick brown fox jumps over the lazy dog and then it stops to think "
 BASE_EPOCH = 1735689600  # 2025-01-01 00:00:00 UTC
@@ -232,14 +232,10 @@ def transcript_graph(t: DataFrame, config: StreamGraphConfig | None = None) -> S
     config = config or StreamGraphConfig()
     triples = transcript_triples(t)
     vertices = transcript_graph_vertices(t)
-    edges = triples.select(
-        "edge_id",
-        "edge_label",
-        "edge_properties",
-        F.col("source.vertex_id").alias("source_id"),
-        F.col("target.vertex_id").alias("target_id"),
-        "event_time",
-    )
     return StreamGraph(
-        vertices=vertices, edges=edges, config=config, triples=triples, elements_unique=True
+        vertices=vertices,
+        edges=triple_edges(triples),
+        config=config,
+        triples=triples,
+        elements_unique=True,
     )

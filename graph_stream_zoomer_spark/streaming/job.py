@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import StreamGraphConfig
-from ..model import StreamGraph, split_triples
+from ..model import StreamGraph, triple_edges
 from ..operators.grouping import GraphStreamGrouping
 from .binding import streaming_transcript_triples, streaming_vertex_observations
 from .sink import IdempotentParquetSink, ProgressListener
@@ -110,7 +110,7 @@ def run_grouping_job(
     # once → no dedup state; the batch operator's stages build both streams
     graph = StreamGraph(
         vertices=vertices,
-        edges=split_triples(triples)[1],
+        edges=triple_edges(triples),
         config=cfg,
         triples=triples,
         elements_unique=True,

@@ -706,18 +706,13 @@ def test_pool_embeddings(spark):
     with pytest.raises(Exception, match="ragged"):
         pool_embeddings(ragged, group_cols=["grp"]).collect()
     # a NULL element inside a non-null vector raises (it would otherwise be
-    # counted in the mean's denominator but left out of its sum); the
-    # streaming twin's sums raise the same way
-    from graph_stream_zoomer_spark.streaming.sketches import windowed_embedding_sums
-
+    # counted in the mean's denominator but left out of its sum)
     holey = spark.createDataFrame(
         [("a", [1.0, 2.0], "2024-01-01 10:00:00"), ("a", [3.0, None], "2024-01-01 10:01:00")],
         "grp string, embedding array<double>, ts string",
     ).withColumn("ts", F.col("ts").cast("timestamp"))
     with pytest.raises(Exception, match="NULL element"):
         pool_embeddings(holey, group_cols=["grp"]).collect()
-    with pytest.raises(Exception, match="NULL element"):
-        windowed_embedding_sums(holey, "ts", "embedding").collect()
     with pytest.raises(ValueError, match="mode"):
         pool_embeddings(df, mode="median")
     # plan: both aggregates partial (map-side combined)

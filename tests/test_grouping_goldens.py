@@ -53,18 +53,16 @@ def _build_config_a():
     )
 
 
-def _build_config_b(config=None):
-    b = (
+def _build_config_b():
+    return (
         GroupingBuilder()
         .add_vertex_grouping_key(":label")
         .add_edge_grouping_key(":label")
         .add_vertex_aggregate_function(SumProperty("Size"))
         .add_edge_aggregate_function(SumProperty("Weight"))
         .set_window_size(10, "SECONDS")
+        .build()
     )
-    if config is not None:
-        b.set_config(config)
-    return b.build()
 
 
 def test_vertex_dedup_collapses_duplicates(graph):
@@ -147,21 +145,11 @@ def test_super_vertex_membership_map(graph):
 
 
 def test_super_edge_id_includes_endpoints_by_default(spark, graph):
-    """Default fixes the reference's super-edge-id collision (§2.8); compat
-    flag reproduces it: with label grouping, parallel super-edges between
-    different super-vertex pairs share label+window → same compat id."""
+    """The super-edge id hashes both endpoint super ids, fixing the
+    reference's super-edge-id collision (§2.8)."""
     result = graph.apply(_build_config_b())
     edges = result.edges.collect()
     assert len({e["edge_id"] for e in edges}) == len(edges)
-
-    compat = graph.apply(_build_config_b(StreamGraphConfig(compat_super_edge_id=True)))
-    cedges = compat.edges.collect()
-    # impacts@w2 exists between two distinct super-vertex pairs in config B?
-    # Here groups are by label only so each (label, window) is one group —
-    # ids still unique; just assert the flag runs and yields the same aggregates.
-    assert {(e["edge_label"], e["edge_properties"].get("sum_Weight")) for e in cedges} == {
-        (e["edge_label"], e["edge_properties"].get("sum_Weight")) for e in edges
-    }
 
 
 def test_property_grouping_with_nulls(graph):
@@ -190,6 +178,16 @@ def test_output_composes(graph):
     twice = once.group_by([":label"], [Count()], [":label"], [Count()])
     sv = {r["vertex_label"]: r["vertex_properties"]["count"] for r in twice.vertices.collect()}
     assert set(sv) == {"A", "B"}
+
+
+def test_group_by_uses_graph_config(spark):
+    """``StreamGraph.group_by`` builds its operator with the graph's config,
+    not only its window: sha256 ids are 64 hex characters (sha1: 40)."""
+    g = StreamGraph.from_triples(fixture_triples(spark), StreamGraphConfig(id_hash="sha256"))
+    result = g.group_by([":label"], [Count()], [":label"], [Count()])
+    v_ids = {len(r["vertex_id"]) for r in result.vertices.collect()}
+    e_ids = {len(r["edge_id"]) for r in result.edges.collect()}
+    assert v_ids == {64} and e_ids == {64}
 
 
 def test_to_triples_roundtrip(graph):

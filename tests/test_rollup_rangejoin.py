@@ -1,10 +1,8 @@
-"""Conversation rollup (batch + streaming session twin), bin-bucketized
-interval join (vs naive cross+filter oracle), PII redaction (Catalyst vs
-Arrow twin agreement), and rate-based stratified sampling."""
+"""Conversation rollup, bin-bucketized interval join (vs naive cross+filter
+oracle), PII redaction (Catalyst vs Arrow twin agreement), and rate-based
+stratified sampling."""
 
 from __future__ import annotations
-
-import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -16,10 +14,7 @@ from graph_stream_zoomer_spark.functions.text import (
 )
 from graph_stream_zoomer_spark.operators.packing import stratified_sample_rates
 from graph_stream_zoomer_spark.operators.rangejoin import interval_join
-from graph_stream_zoomer_spark.operators.rollup import (
-    conversation_stats,
-    streaming_conversation_stats,
-)
+from graph_stream_zoomer_spark.operators.rollup import conversation_stats
 
 T_DDL = "conv_id string, turn_idx int, role string, text string, tool string, ts string"
 
@@ -48,38 +43,6 @@ def test_conversation_stats_exact(spark):
     assert (c1["first_role"], c1["last_role"]) == ("user", "assistant")
     assert c1["duration_s"] == 12
     assert (c2["n_turns"], c2["duration_s"], c2["n_roles"]) == (2, 120, 2)
-
-
-def test_streaming_rollup_matches_batch(spark, tmp_path):
-    """Session-window streaming twin emits the same per-conversation rows
-    as the batch rollup when each conversation fits in one session."""
-    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
-    sentinel = [("zz", 0, "user", "x", "", "2030-01-01 00:00:00")]
-    _turns(spark).coalesce(1).write.mode("append").parquet(src)
-    time.sleep(1.1)
-    _turns(spark, sentinel).coalesce(1).write.mode("append").parquet(src)
-
-    st = spark.readStream.schema(
-        T_DDL.replace("ts string", "ts timestamp")
-    ).parquet(src)
-    q = (
-        streaming_conversation_stats(st, gap="30 minutes", watermark="5 seconds")
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = (
-        spark.read.parquet(out)
-        .where(F.col("conv_id") != "zz")
-        .drop("session_start", "session_end")
-    )
-    want = conversation_stats(_turns(spark))
-    assert sorted(map(tuple, got.select(*want.columns).collect())) == sorted(
-        map(tuple, want.collect())
-    )
 
 
 IV_DDL = "k string, start_ts string, end_ts string, tag string"
@@ -241,68 +204,6 @@ def test_stratified_sample_broadcasts_rates(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_streaming_sessionize_matches_batch(spark, tmp_path):
-    """Keyed-state sessionize twin: labels arrive exactly once when the
-    watermark closes each session, and match batch sessionize row-for-row
-    across micro-batches."""
-    from graph_stream_zoomer_spark.operators.rollup import (
-        sessionize,
-        streaming_sessionize,
-    )
-
-    S_DDL = "conv_id string, turn_idx int, ts timestamp"
-    chunks = [
-        [  # session c1#1 (gap 10 min within, 30-min rule)
-            ("c1", 0, "2024-01-01 10:00:00"),
-            ("c1", 1, "2024-01-01 10:10:00"),
-        ],
-        [  # c1 session 2 (80-min gap) + c2's only session
-            ("c1", 2, "2024-01-01 11:30:00"),
-            ("c1", 3, "2024-01-01 11:40:00"),
-            ("c2", 0, "2024-01-01 10:05:00"),
-        ],
-        [("zz", 0, "2030-01-01 00:00:00")],  # sentinel closes everything
-    ]
-
-    def frame(rows):
-        return spark.createDataFrame(
-            rows, S_DDL.replace("ts timestamp", "ts string")
-        ).withColumn("ts", F.col("ts").cast("timestamp"))
-
-    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
-    for i, chunk in enumerate(chunks):
-        frame(chunk).coalesce(1).write.mode("append").parquet(src)
-        if i < len(chunks) - 1:
-            time.sleep(1.1)
-
-    st = (
-        spark.readStream.schema(S_DDL)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .withWatermark("ts", "5 seconds")
-    )
-    q = (
-        streaming_sessionize(st, gap_s=1800)
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    got = sorted(
-        (r["conv_id"], r["turn_idx"], r["session_id"])
-        for r in spark.read.parquet(out).where(F.col("conv_id") != "zz").collect()
-    )
-    batch_in = frame([r for c in chunks[:-1] for r in c])
-    want = sorted(
-        (r["conv_id"], r["turn_idx"], r["session_id"])
-        for r in sessionize(batch_in, gap_s=1800).collect()
-    )
-    assert got == want and len(got) == 5
-
-
 def test_interval_join_reversed_interval_matches_nothing(spark):
     """A corrupt interval with end < start must match nothing AND must not
     reach the explode: end_bin < start_bin makes n_bins <= 0 (passing the
@@ -330,54 +231,3 @@ def test_interval_join_reversed_interval_matches_nothing(spark):
     # left join: reversed interval still contributes nothing
     left = interval_join(probe, iv, on=["k"], bin_width="1 minute", how="left")
     assert {r["tag"] for r in left.collect()} == {"ok"}
-
-
-def test_streaming_sessionize_timeout_close_keeps_ordinal(spark, tmp_path):
-    """When the final open session closes on the TIMEOUT path (watermark
-    wake with no data for the key), the ordinal counter must be retained
-    for the same one-extra-period horizon as data-batch closes — a
-    conversation resuming right after must get session #2, not restart at
-    #1 and reuse the session_id. Regression for the hasTimedOut branch."""
-    from graph_stream_zoomer_spark.operators.rollup import streaming_sessionize
-
-    S_DDL = "conv_id string, turn_idx int, ts timestamp"
-    chunks = [
-        [("c1", 0, "2024-01-01 10:00:00")],  # session #1 opens
-        [("zz", 0, "2024-01-01 11:00:00")],  # wm → 10:59:55 (close not due yet)
-        [("zz", 1, "2024-01-01 11:10:00")],  # TIMEOUT wake closes c1#1 (no c1 data)
-        [("c1", 1, "2024-01-01 11:35:00")],  # resumes within retention horizon
-        [("zz", 2, "2030-01-01 00:00:00")],  # sentinel closes everything
-    ]
-
-    def frame(rows):
-        return spark.createDataFrame(
-            rows, S_DDL.replace("ts timestamp", "ts string")
-        ).withColumn("ts", F.col("ts").cast("timestamp"))
-
-    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
-    for i, chunk in enumerate(chunks):
-        frame(chunk).coalesce(1).write.mode("append").parquet(src)
-        if i < len(chunks) - 1:
-            time.sleep(1.1)
-
-    st = (
-        spark.readStream.schema(S_DDL)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .withWatermark("ts", "5 seconds")
-    )
-    q = (
-        streaming_sessionize(st, gap_s=1800)
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    got = {
-        (r["conv_id"], r["turn_idx"]): r["session_id"]
-        for r in spark.read.parquet(out).where(F.col("conv_id") == "c1").collect()
-    }
-    assert got == {("c1", 0): "c1#1", ("c1", 1): "c1#2"}

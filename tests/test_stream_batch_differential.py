@@ -9,7 +9,7 @@ a random number of chunks and restarted on the same checkpoint. A
 far-future sentinel conversation closes every real window, and every
 closed window's super-vertices and super-edges (ids, rowtimes, labels,
 grouping values and aggregates) must equal the batch ``execute()`` output,
-for tumbling and sliding windows.
+for tumbling, sliding and session windows.
 """
 
 from __future__ import annotations
@@ -129,11 +129,12 @@ def _write_chunks(parts: list[pa.Table], d: str, first: int, mtime0: int) -> Non
 
 TUMBLING = WindowConfig.tumbling(10, "MINUTES")
 SLIDING = WindowConfig.sliding(10, 5, "MINUTES")
+SESSION = WindowConfig.session(10, "MINUTES")
 
 
 @pytest.mark.parametrize(
-    "window,keyed", [(TUMBLING, False), (SLIDING, False), (TUMBLING, True)],
-    ids=["unified", "sliding", "keyed"],
+    "window,keyed", [(TUMBLING, False), (SLIDING, False), (TUMBLING, True), (SESSION, False)],
+    ids=["unified", "sliding", "keyed", "session"],
 )
 def test_streaming_job_equals_batch_execute(spark, tmp_path, window, keyed):
     rng = random.Random(20)

@@ -14,8 +14,8 @@ from graph_stream_zoomer_spark import (
     StreamGraph,
     StreamGraphConfig,
     WindowConfig,
-    split_triples,
 )
+from graph_stream_zoomer_spark.model import triple_edges
 from graph_stream_zoomer_spark.operators.grouping import GroupingBuilder
 from graph_stream_zoomer_spark.sources.transcripts import (
     generate_transcripts,
@@ -68,7 +68,7 @@ def test_streaming_summary_triples_match_batch(spark, tmp_path):
     vertices = streaming_vertex_observations(stream, watermark=WM)
     graph = StreamGraph(
         vertices=vertices,
-        edges=split_triples(triples)[1],
+        edges=triple_edges(triples),
         config=op.config,
         triples=triples,
         elements_unique=True,
