@@ -2199,8 +2199,6 @@ SELECT lang_pred, COUNT(*) AS n_docs FROM scored GROUP BY 1
 
 
 def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from graph_stream_zoomer_spark.functions.text import expr_fingerprint
-
     # xxhash64 isn't portable; the oracle-checked output is the md5-based
     # normalized fingerprint, the engine-internal rolling variant is covered
     # by pytest.

@@ -27,7 +27,7 @@ from __future__ import annotations
 from dataclasses import dataclass, replace
 from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     MapType,
@@ -102,25 +102,21 @@ def triple_edges(triples: DataFrame) -> DataFrame:
     )
 
 
+def triple_vertices(triples: DataFrame, side: str) -> DataFrame:
+    """The ``side`` (``"source"``/``"target"``) endpoint of each triple as
+    a vertex observation (VERTEX_SCHEMA columns)."""
+    return triples.select(
+        *[F.col(f"{side}.{f}").alias(f) for f in VERTEX_SCHEMA.fieldNames()]
+    )
+
+
 def split_triples(triples: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Triple stream → (vertices, edges). Spark analog of Extractor.java.
 
     One triple yields 1 edge + 2 vertex observations (duplicates allowed;
     windowed dedup collapses them downstream, GraphStreamGrouping.java:146-173).
     """
-    vertices = triples.select(
-        F.col("source.vertex_id").alias("vertex_id"),
-        F.col("source.event_time").alias("event_time"),
-        F.col("source.vertex_label").alias("vertex_label"),
-        F.col("source.vertex_properties").alias("vertex_properties"),
-    ).unionByName(
-        triples.select(
-            F.col("target.vertex_id").alias("vertex_id"),
-            F.col("target.event_time").alias("event_time"),
-            F.col("target.vertex_label").alias("vertex_label"),
-            F.col("target.vertex_properties").alias("vertex_properties"),
-        )
-    )
+    vertices = triple_vertices(triples, "source").unionByName(triple_vertices(triples, "target"))
     return vertices, triple_edges(triples)
 
 
@@ -146,6 +142,13 @@ class StreamGraph:
     # for the transcript binding (one row per turn / per successor pair);
     # False for raw triple splits, where a vertex repeats per incident edge.
     elements_unique: bool = False
+    # Producer hint: a predicate over ``triples`` rows whose source endpoint
+    # is a vertex observation that ``vertices`` leaves out. The grouping
+    # takes those vertices from the triple rows it already reads, so a
+    # streaming binding need not join a second time to find them. The
+    # streaming transcript binding sets it (a turn 0 is a vertex when its
+    # successor edge exists); None for every batch binding.
+    source_vertices: Column | None = None
 
     @staticmethod
     def from_triples(triples: DataFrame, config: StreamGraphConfig | None = None) -> "StreamGraph":

@@ -3,18 +3,20 @@ re-planned Spark-first, and the one plan builder for batch and Structured
 Streaming.
 
 Reference parity: the 10 numbered stages of
-``impl/algorithm/GraphStreamGrouping.java:99-144`` (each stage method there
-maps 1:1 to a method here so stage-level golden tests port directly —
-SURVEY.md §3 entry point 3), with the grouping-key bookkeeping of
-``impl/algorithm/TableGroupingBase.java``.
+``impl/algorithm/GraphStreamGrouping.java:99-144`` (each stage maps to a
+method here, stages 4 and 9 to one aggregation, so stage-level golden tests
+port directly — SURVEY.md §3 entry point 3), with the grouping-key
+bookkeeping of ``impl/algorithm/TableGroupingBase.java``.
 
-Batch and streaming share every stage: ``summaries`` builds the grouped
-vertex and edge tables (stages 1-4, 6-9) over batch or streaming
-DataFrames alike, ``execute`` folds them into super elements (stages 5 and
-10), and ``streaming/job.py`` commits them through an exactly-once sink.
-Over a watermarked stream each groupBy is an append-mode stateful
-aggregation keyed by the carried window, whose column keeps the event-time
-watermark.
+Batch and streaming share every stage: ``summaries`` builds one tagged
+table of grouped vertices and edges (stages 1-4, 6-9), ``execute`` splits
+it by ``kind`` and folds the halves into super elements (stages 5, 10), and
+``streaming/job.py`` commits the halves through an exactly-once sink. On
+the triple fast path vertex and edge elements share one row shape and
+stages 4 and 9 are one ``groupBy(window, kind, …)``: over a watermarked
+stream, one append-mode stateful aggregation keyed by the carried window.
+In batch, the split's ``kind`` filter pushes through it into the union of
+the element streams and prunes the other kind's branch.
 
 Spark-first divergences (semantics preserved, plan improved):
   - The window struct produced by ``F.window``/``F.session_window`` is
@@ -47,11 +49,13 @@ from ..functions.properties import (
     fold_properties,
     super_element_id,
 )
-from ..model import NO_LABEL, StreamGraph
+from ..model import NO_LABEL, StreamGraph, triple_vertices
 from .aggregation import AggregateFunction
 
 GROUP_LABEL_SYMBOL = ":label"  # TableGroupingBase.java:767
 WINDOW_TYPE = "struct<start:timestamp,end:timestamp>"
+VERTEX, EDGE = "v", "e"  # the ``kind`` tags of elements and summary rows
+NAME = {VERTEX: "vertex", EDGE: "edge"}
 
 
 def window_expr(w: WindowConfig, ts: str | Column) -> Column:
@@ -95,9 +99,34 @@ class GraphStreamGrouping:
     def _egk(i: int) -> str:
         return f"_egk_{i}"
 
+    def _agg_in(self, kind: str, a: AggregateFunction) -> str:
+        return f"_agg_in_{kind}_{a.output_key}"
+
     @staticmethod
-    def _agg_in(a: AggregateFunction) -> str:
-        return f"_agg_in_{a.output_key}"
+    def _agg_out(kind: str, a: AggregateFunction) -> str:
+        return f"_{kind}_{a.output_key}"
+
+    def _aggs(self, kind: str) -> list[AggregateFunction]:
+        return self.vertex_aggs if kind == VERTEX else self.edge_aggs
+
+    def _use_label(self, kind: str) -> bool:
+        return self.use_vertex_labels if kind == VERTEX else self.use_edge_labels
+
+    def _keys(self, kind: str) -> list[str]:
+        """One kind's grouping values, label aside: the promoted vertex
+        keys; the super source/target ids and the promoted edge keys."""
+        if kind == VERTEX:
+            return [self._gk(i) for i in range(len(self.vertex_grouping_keys))]
+        return ["source_id", "target_id"] + [self._egk(i) for i in range(len(self.edge_grouping_keys))]
+
+    def _group_cols(self, kind: str) -> list[str]:
+        return self._keys(kind) + ([f"{NAME[kind]}_label"] if self._use_label(kind) else [])
+
+    def _element_cols(self, kind: str) -> list[str]:
+        """What the aggregation reads of one element kind: its grouping
+        columns and aggregate inputs."""
+        inputs = [self._agg_in(kind, a) for a in self._aggs(kind) if a.property_key is not None]
+        return self._group_cols(kind) + inputs
 
     # ------------------------------------------------------------------
     # Stages 1/2 — deduplicateVertices / deduplicateEdges
@@ -108,7 +137,7 @@ class GraphStreamGrouping:
         event_time = window rowtime (one row per window a sliding window
         covers). A row's session depends on other rows, so for session
         windows the window stays NULL and the raw event_time is kept;
-        ``_group`` assigns the session."""
+        ``_aggregate`` assigns the session."""
         if self.window.kind == WindowKind.SESSION:
             return df.select(F.lit(None).cast(WINDOW_TYPE).alias("window"), *cols, "event_time")
         windowed = df.select(window_expr(self.window, "event_time").alias("window"), *cols)
@@ -134,8 +163,9 @@ class GraphStreamGrouping:
     def assign_window_vertices(self, vertices: DataFrame) -> DataFrame:
         """Dedup-free variant of stage 1 for producers that guarantee
         distinct observations (StreamGraph.elements_unique): window
-        assignment only — no shuffle. Tumbling only."""
-        assert self.window.kind == WindowKind.TUMBLING
+        assignment only — no shuffle. A vertex with one row lies at most
+        once in each tumbling or sliding window; sessions still dedup."""
+        assert self.window.kind != WindowKind.SESSION
         return self._windowed(vertices, ["vertex_id", "vertex_label", "vertex_properties"])
 
     def dedup_edges(self, edges: DataFrame) -> DataFrame:
@@ -146,27 +176,23 @@ class GraphStreamGrouping:
     # Stage 3 — enhanceVerticesByPropertyColumns
     # (GraphStreamGrouping.java:175-178; P8 property-column promotion)
     # ------------------------------------------------------------------
-    def _promote(self, df: DataFrame, props_col: str, keys: list[str], aggs, gk_name) -> DataFrame:
-        cols = [F.col(c) for c in df.columns]
-        for i, k in enumerate(keys):
-            cols.append(extract_property(props_col, k).alias(gk_name(i)))
-        for a in aggs:
-            if a.property_key is not None:
-                cols.append(
-                    extract_property(props_col, a.property_key)
-                    .cast(a.input_type)
-                    .alias(self._agg_in(a))
-                )
-        return df.select(*cols)
+    def _promoted(self, props: Column, kind: str) -> list[Column]:
+        """One kind's grouping values and aggregate inputs, read from a
+        property bag."""
+        keys = self.vertex_grouping_keys if kind == VERTEX else self.edge_grouping_keys
+        gk = self._gk if kind == VERTEX else self._egk
+        return [extract_property(props, k).alias(gk(i)) for i, k in enumerate(keys)] + [
+            extract_property(props, a.property_key).cast(a.input_type).alias(self._agg_in(kind, a))
+            for a in self._aggs(kind)
+            if a.property_key is not None
+        ]
 
     def enhance_vertices(self, deduped: DataFrame) -> DataFrame:
-        return self._promote(
-            deduped, "vertex_properties", self.vertex_grouping_keys, self.vertex_aggs, self._gk
-        )
+        return deduped.select("*", *self._promoted(F.col("vertex_properties"), VERTEX))
 
     # ------------------------------------------------------------------
-    # Stage 4 — groupVertices (GraphStreamGrouping.java:180-185, A7); the
-    # windowed aggregation and super-id hashing are shared with stage 9
+    # Stages 4 and 9 — groupVertices / groupEdges (GraphStreamGrouping.java:
+    # 180-185, 267-272; A7, A8): one windowed aggregation of tagged elements
     # ------------------------------------------------------------------
     @staticmethod
     def _rowtime_ms(rowtime: Column) -> Column:
@@ -197,38 +223,51 @@ class GraphStreamGrouping:
         fields.append(self._rowtime_ms(F.col("event_time")))
         return super_element_id(fields, self.config.id_hash)
 
-    def _group(
-        self, df: DataFrame, kind: str, keys: list[str], use_label: bool, aggs, super_id
-    ) -> DataFrame:
-        """Windowed aggregation of one element kind ("vertex"/"edge") by
-        ``keys`` [+ label], projected to one row per super element: window,
-        keys, rowtime, label, aggregates and the ``super_<kind>_id`` hash."""
-        label = f"{kind}_label"
-        group_cols = [*keys, label] if use_label else keys
+    def _elements(self, df: DataFrame, kind: str) -> DataFrame:
+        """A stage-3/8 frame as element rows: window, ``kind``, what the
+        aggregation reads (sessions: plus the raw event time)."""
+        session = ["event_time"] if self.window.kind == WindowKind.SESSION else []
+        return df.select("window", F.lit(kind).alias("kind"), *self._element_cols(kind), *session)
+
+    def _aggregate(self, elements: DataFrame, kinds: tuple[str, ...]) -> DataFrame:
+        """Stages 4 and 9 as one windowed aggregation of element rows: one
+        row per (window, kind, group) with each kind's grouping columns and
+        aggregates (``_<kind>_<output key>``); other-kind columns are NULL."""
         if self.window.kind == WindowKind.SESSION:
             window = window_expr(self.window, "event_time").alias("window")
         else:
-            window = "window"
-        out = df.groupBy(window, *group_cols).agg(*self._agg_exprs(aggs))
-        return out.select(
-            "window",
-            *keys,
-            rowtime_expr().alias("event_time"),
-            (F.col(label) if use_label else F.lit(NO_LABEL)).alias(label),
-            *[a.output_key for a in aggs],
-        ).withColumn(f"super_{kind}_id", super_id)
+            window = F.col("window")
+        keys = [c for k in kinds for c in self._group_cols(k)]
+        ins = [(k, a) for k in kinds for a in self._aggs(k)]
+        aggs = [a.agg_expr(self._agg_in(k, a)).alias(self._agg_out(k, a)) for k, a in ins]
+        return elements.groupBy(window, "kind", *keys).agg(
+            *aggs or [F.count(F.lit(1)).alias("_group_size")]
+        )
 
-    def _agg_exprs(self, aggs) -> list[Column]:
-        return [a.agg_expr(self._agg_in(a)) for a in aggs] or [
-            F.count(F.lit(1)).alias("_group_size")
-        ]
+    def _summary(self, tagged: DataFrame, kind: str) -> DataFrame:
+        """One kind's rows of a tagged summary table, one per super
+        element: window, keys, rowtime, label, aggregates and the
+        ``super_<vertex|edge>_id`` hash."""
+        label = f"{NAME[kind]}_label"
+        out = tagged.where(F.col("kind") == kind).select(
+            "window",
+            *self._keys(kind),
+            rowtime_expr().alias("event_time"),
+            (F.col(label) if self._use_label(kind) else F.lit(NO_LABEL)).alias(label),
+            *[F.col(self._agg_out(kind, a)).alias(a.output_key) for a in self._aggs(kind)],
+        )
+        super_id = self._vertex_super_id() if kind == VERTEX else self._edge_super_id()
+        return out.withColumn(f"super_{NAME[kind]}_id", super_id)
+
+    def split_summaries(self, tagged: DataFrame) -> tuple[DataFrame, DataFrame]:
+        """A ``summaries`` table (or a micro-batch of it) as the grouped
+        vertex and edge tables."""
+        return self._summary(tagged, VERTEX), self._summary(tagged, EDGE)
 
     def group_vertices(self, enhanced: DataFrame) -> DataFrame:
-        gk = [self._gk(i) for i in range(len(self.vertex_grouping_keys))]
-        return self._group(
-            enhanced, "vertex", gk, self.use_vertex_labels, self.vertex_aggs,
-            self._vertex_super_id(),
-        )
+        """Stage 4 alone: the grouped vertex table of stage-3 vertices."""
+        grouped = self._aggregate(self._elements(enhanced, VERTEX), (VERTEX,))
+        return self._summary(grouped, VERTEX)
 
     # ------------------------------------------------------------------
     # Stage 5 — createSuperVertices (GraphStreamGrouping.java:187-190;
@@ -309,24 +348,21 @@ class GraphStreamGrouping:
             )
         return e
 
-    def edges_with_super_vertices_from_triples(
-        self, triples: DataFrame, edges_unique: bool = False
-    ) -> DataFrame:
-        """Joinless fast path when the input is a triple stream: each edge
-        carries both endpoint vertices inline (StreamTriple), so super
-        source/target ids are *recomputed* per edge — no shuffle at all on
-        the edge-expansion path. Tumbling/sliding only.
+    def triple_elements(self, graph: StreamGraph) -> DataFrame:
+        """Stages 2 and 6-8 on the joinless fast path: ``graph.triples`` as
+        element rows. Each edge carries both endpoint vertices inline
+        (StreamTriple), so super source/target ids are *recomputed* per edge
+        — no shuffle at all on the edge-expansion path. Tumbling/sliding only.
 
-        Each endpoint's label and grouping values are extracted in the
-        same projection as the window assignment. The
-        next projection references the window several times, so Catalyst
-        does not inline the binding into it; extracting beside the window
-        lets the endpoint structs and their property bags fold away to the
-        fields the keys read instead of being built per edge.
+        The edge's keys and aggregate inputs and each endpoint's label and
+        grouping values are read from the triple in one projection, below
+        the window assignment, so the endpoint structs and property bags
+        fold away to the fields read instead of being built per edge.
 
-        ``edges_unique`` skips the windowed dedup (one fewer shuffle, and
-        no dedup state in Structured Streaming) when the producer
-        guarantees distinct edge observations.
+        ``elements_unique`` skips the windowed dedup (one fewer shuffle, and
+        no dedup state in Structured Streaming). ``source_vertices`` also
+        makes the source of each matching triple a vertex element (stages
+        1, 3) by one ``explode``, windowed after it from its own event time.
 
         Divergence from the join path (``edges_with_super_vertices``):
         both endpoints are hashed with the edge's window, i.e. the target
@@ -338,6 +374,7 @@ class GraphStreamGrouping:
         ``tests/test_invariants.py``). ``perfbench/check.py`` pins the
         fast path's hashing, so changing it starts with the checker."""
         assert self.window.kind != WindowKind.SESSION
+        triples, unique = graph.triples, graph.elements_unique
 
         def endpoint(side: str) -> list[Column]:
             props = F.col(f"{side}.vertex_properties")
@@ -346,43 +383,74 @@ class GraphStreamGrouping:
                 for i, k in enumerate(self.vertex_grouping_keys)
             ]
 
-        windowed = triples.select(
-            window_expr(self.window, "event_time").alias("window"),
-            "edge_id",
-            "edge_label",
-            "edge_properties",
+        edge = [
+            F.lit(EDGE).alias("kind"),
+            F.col("event_time"),
+            F.col("edge_label"),
+            *self._promoted(F.col("edge_properties"), EDGE),  # 8
             *endpoint("source"),
             *endpoint("target"),
+        ]
+        if not unique:  # the observation the windowed dedup compares
+            edge += [F.col("edge_id"), F.col("edge_properties")]
+        kinds: tuple[str, ...] = (EDGE,)
+        if graph.source_vertices is None:
+            rows = triples.select(*edge)
+        else:
+            if not unique:
+                raise ValueError("source_vertices needs distinct triples (elements_unique)")
+            kinds = (EDGE, VERTEX)
+            vertex = [
+                F.lit(VERTEX).alias("kind"),
+                F.col("source.event_time").alias("event_time"),
+                F.col("source.vertex_label").alias("vertex_label"),
+                *self._promoted(F.col("source.vertex_properties"), VERTEX),  # 3
+            ]
+            e, v = (dict(zip(triples.select(*cols).columns, cols)) for cols in (edge, vertex))
+
+            def element(own: dict, other: dict) -> Column:
+                # one struct type for both kinds: the other kind's fields
+                # are NULLs of their type
+                return F.struct(*[
+                    (own[n] if n in own else F.when(F.lit(False), other[n])).alias(n)
+                    for n in {**e, **v}
+                ])
+
+            # built in a projection of their own, which Catalyst merges into
+            # the binding's, so the explode reads the few fields the keys
+            # need rather than the endpoint structs and property bags
+            pair = triples.select(
+                element(e, v).alias("e"),
+                element(v, e).alias("v"),
+                graph.source_vertices.alias("has_v"),
+            )
+            both = F.when(F.col("has_v"), F.array("e", "v")).otherwise(F.array("e"))
+            rows = pair.select(F.explode(both).alias("el")).select("el.*")
+
+        windowed = rows.select(  # 6 + 7: super endpoint ids per edge
+            window_expr(self.window, "event_time").alias("window"),
+            *[c for c in rows.columns if c != "event_time"],
+        ).select(
+            "*",
+            *[
+                F.when(F.col("kind") == EDGE, self._vertex_super_id(f"{side}_")).alias(f"{side}_id")
+                for side in ("source", "target")
+            ],
         )
-        expanded = windowed.select(
-            "window",
-            "edge_id",
-            "edge_label",
-            "edge_properties",
-            self._vertex_super_id("source_").alias("source_id"),
-            self._vertex_super_id("target_").alias("target_id"),
-            rowtime_expr().alias("event_time"),
+        if not unique:  # stage 2, after expansion
+            observed = dict.fromkeys([*self._element_cols(EDGE), "edge_id", "edge_label"])
+            windowed = self._distinct(
+                windowed.select("window", "kind", *observed, "edge_properties"), "edge_properties"
+            )
+        return windowed.select(
+            "window", "kind", *[c for k in kinds for c in self._element_cols(k)]
         )
-        if edges_unique and self.window.kind == WindowKind.TUMBLING:
-            return expanded
-        return self._distinct(expanded, "edge_properties")  # stage 2, after expansion
 
     # ------------------------------------------------------------------
     # Stage 8 — enrichEdgesWithSuperVertices (GraphStreamGrouping.java:262-265)
     # ------------------------------------------------------------------
     def enrich_edges(self, edges: DataFrame) -> DataFrame:
-        return self._promote(
-            edges, "edge_properties", self.edge_grouping_keys, self.edge_aggs, self._egk
-        )
-
-    # ------------------------------------------------------------------
-    # Stage 9 — groupEdges (GraphStreamGrouping.java:267-272, A8)
-    # ------------------------------------------------------------------
-    def group_edges(self, enriched: DataFrame) -> DataFrame:
-        egk = ["source_id", "target_id"] + [self._egk(i) for i in range(len(self.edge_grouping_keys))]
-        return self._group(
-            enriched, "edge", egk, self.use_edge_labels, self.edge_aggs, self._edge_super_id()
-        )
+        return edges.select("*", *self._promoted(F.col("edge_properties"), EDGE))
 
     # ------------------------------------------------------------------
     # Stage 10 — createSuperEdges (GraphStreamGrouping.java:274-277;
@@ -404,39 +472,43 @@ class GraphStreamGrouping:
     # ------------------------------------------------------------------
     # performGrouping (GraphStreamGrouping.java:99-144)
     # ------------------------------------------------------------------
-    def summaries(self, graph: StreamGraph) -> tuple[DataFrame, DataFrame]:
-        """Stages 1-4 and 6-9 over a batch or streaming graph: the grouped
-        vertex and edge tables, one row per super element with its window,
-        grouping values, aggregates and super id. The streaming job commits
-        these rows; ``execute`` folds them into super elements."""
-        unique = graph.elements_unique and self.window.kind == WindowKind.TUMBLING
-        if unique:
-            deduped_v = self.assign_window_vertices(graph.vertices)  # 1 (shuffle-free)
+    def summaries(self, graph: StreamGraph) -> DataFrame:
+        """Stages 1-4 and 6-9 over a batch or streaming graph: one tagged
+        table, one row per super element with its ``kind`` (``"v"`` or
+        ``"e"``), window, grouping values and aggregates
+        (``split_summaries`` reads it as the grouped vertex and edge
+        tables). Triple fast path: one aggregation of the vertex and edge
+        elements. Session windows take the join path, whose edges need the
+        grouped vertex sessions first: two aggregations, tagged and unioned."""
+        fast = graph.triples is not None and self.window.kind != WindowKind.SESSION
+        vertices = graph.vertices
+        if graph.source_vertices is not None and not fast:
+            sources = graph.triples.where(graph.source_vertices)
+            vertices = vertices.unionByName(triple_vertices(sources, "source"))
+        if graph.elements_unique and self.window.kind != WindowKind.SESSION:
+            deduped_v = self.assign_window_vertices(vertices)  # 1 (shuffle-free)
         else:
-            deduped_v = self.dedup_vertices(graph.vertices)  # 1
+            deduped_v = self.dedup_vertices(vertices)  # 1
         enhanced_v = self.enhance_vertices(deduped_v)  # 3
-        grouped_v = self.group_vertices(enhanced_v)  # 4
-
-        if graph.triples is not None and self.window.kind != WindowKind.SESSION:
-            # joinless fast path: stages 2+6+7 collapse into one projection
-            edges_expanded = self.edges_with_super_vertices_from_triples(
-                graph.triples, edges_unique=unique
-            )
-        else:
-            deduped_e = self.dedup_edges(graph.edges)  # 2
-            expanded = self.expand_vertices(enhanced_v, grouped_v)  # 6
-            edges_expanded = self.edges_with_super_vertices(deduped_e, expanded)  # 7
-
-        enriched_e = self.enrich_edges(edges_expanded)  # 8
-        return grouped_v, self.group_edges(enriched_e)  # 9
+        vertex_elements = self._elements(enhanced_v, VERTEX)
+        if fast:  # 2, 6-8, then 4 + 9 as one aggregation
+            edges = self.triple_elements(graph)
+            elements = vertex_elements.unionByName(edges, allowMissingColumns=True)
+            return self._aggregate(elements, (VERTEX, EDGE))
+        grouped_v = self._aggregate(vertex_elements, (VERTEX,))  # 4
+        expanded = self.expand_vertices(enhanced_v, self._summary(grouped_v, VERTEX))  # 6
+        edges = self.edges_with_super_vertices(self.dedup_edges(graph.edges), expanded)  # 2, 7
+        grouped_e = self._aggregate(self._elements(self.enrich_edges(edges), EDGE), (EDGE,))  # 8, 9
+        return grouped_v.unionByName(grouped_e, allowMissingColumns=True)
 
     def execute(self, graph: StreamGraph) -> StreamGraph:
-        grouped_v, grouped_e = self.summaries(graph)
+        grouped_v, grouped_e = self.split_summaries(self.summaries(graph))
         return replace(
             graph,
             vertices=self.create_super_vertices(grouped_v),  # 5
             edges=self.create_super_edges(grouped_e),  # 10
             triples=None,
+            source_vertices=None,
         )
 
 

@@ -85,7 +85,7 @@ def read_transcript_kafka_stream(
     """``readStream.format("kafka")`` → transcript turns. Requires the
     spark-sql-kafka connector jar (production clusters; absent in this
     sandbox). The returned stream plugs directly into
-    ``streaming.binding.streaming_transcript_triples``."""
+    ``streaming.binding.streaming_transcript_graph``."""
     reader = (
         spark.readStream.format("kafka")
         .option("kafka.bootstrap.servers", bootstrap_servers)

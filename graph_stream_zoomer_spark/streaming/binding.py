@@ -1,4 +1,4 @@
-"""Streaming transcript → triple binding.
+"""Streaming transcript → property-graph binding.
 
 The batch binding uses ``lead()`` over (conv_id, turn_idx) — an analytic
 window, which Structured Streaming forbids. The streaming form derives the
@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..config import StreamGraphConfig
+from ..model import StreamGraph, triple_edges
 from ..sources.transcripts import slim_turns, triple_columns, vertex_columns
 
 
@@ -47,59 +49,41 @@ def _joined_successors(turns: DataFrame, watermark: str, max_turn_gap: str) -> D
     )
 
 
-def streaming_transcript_triples(
+def streaming_transcript_graph(
     turns: DataFrame,
-    watermark: str = "10 seconds",
+    config: StreamGraphConfig | None = None,
     max_turn_gap: str = "1 hour",
-) -> DataFrame:
-    joined = _joined_successors(slim_turns(turns), watermark, max_turn_gap)
-    return joined.select(*triple_columns("a.", "b."))
+) -> StreamGraph:
+    """Streaming twin of ``transcript_graph``: one successor join, read
+    once by the grouping.
 
+    The graph's vertices are every triple endpoint exactly once: all turns
+    with turn_idx ≥ 1 (each is some edge's target), plus each turn 0 that
+    has a successor edge (the first edge's source). The first set is a
+    STATELESS filter of the turns, ~8/9 of the volume, with no join state;
+    the second is named by the ``source_vertices`` hint (``a.turn_idx =
+    0``) over the successor join's own rows, so the grouping explodes those
+    sources out of the join it already reads for the edges. Spark plans
+    trees, not DAGs: a separate vertex projection of the join would run the
+    whole stream-stream join a second time. The stateless branch and the
+    join rows are disjoint and each turn appears exactly once, so no dedup
+    state is needed (``elements_unique``).
 
-def streaming_vertex_observations(
-    turns: DataFrame,
-    watermark: str = "10 seconds",
-    max_turn_gap: str = "1 hour",
-) -> DataFrame:
-    """Vertex observation stream: every triple endpoint exactly once,
-    WITHOUT replaying the full successor join.
-
-    The endpoint set of the successor-edge stream is: all turns with
-    turn_idx ≥ 1 (each is some edge's target) plus turn-0 rows of
-    conversations that have a turn 1 (each is the first edge's source).
-    So the stream is a union of
-      (a) a completely STATELESS branch — turns with turn_idx ≥ 1 — which
-          is ~8/9 of the volume and holds no join state at all, and
-      (b) a narrow join of turn-0 rows against turn-1 rows only
-          (two ~1/9-size inputs) that validates the conversation has ≥2
-          turns.
-    A naive split_triples-style union of the join's two endpoint
-    projections would instead instantiate the FULL stream-stream join once
-    per branch (Spark plans trees, not DAGs) — 2× full join state and 2×
-    the shuffle, and each interior turn arrives twice, forcing a dedup
-    state store downstream. This shape needs no dedup: the branches are
-    disjoint and each turn appears exactly once.
-
-    Watermark/event-time columns are direct attribute references
-    throughout (never repacked through structs, which strips the
-    event-time marker), and the watermark is defined once per source
-    branch — never redefined downstream of a stateful operator."""
+    Watermark/event-time columns are direct attribute references or struct
+    fields of them, which keep the event-time marker, and the watermark is
+    defined once per source branch — never redefined downstream of a
+    stateful operator."""
+    config = config or StreamGraphConfig()
+    wm = config.watermark_delay
     slim = slim_turns(turns)
-    rest = (
-        slim.withWatermark("ts", watermark).where(F.col("turn_idx") >= 1).select(*vertex_columns())
+    joined = _joined_successors(slim, wm, max_turn_gap)
+    triples = joined.select(*triple_columns("a.", "b."), "a.turn_idx")
+    targets = slim.withWatermark("ts", wm).where(F.col("turn_idx") >= 1)
+    return StreamGraph(
+        vertices=targets.select(*vertex_columns()),
+        edges=triple_edges(triples),
+        config=config,
+        triples=triples,
+        elements_unique=True,
+        source_vertices=F.col("a.turn_idx") == 0,
     )
-    t0 = slim.withWatermark("ts", watermark).where(F.col("turn_idx") == 0).alias("a")
-    t1 = (
-        slim.withWatermark("ts", watermark)
-        .where(F.col("turn_idx") == 1)
-        .select(F.col("conv_id").alias("_c1"), F.col("ts").alias("_ts1"))
-        .alias("b")
-    )
-    first = t0.join(
-        t1,
-        (F.col("a.conv_id") == F.col("_c1"))
-        & (F.col("_ts1") >= F.col("a.ts"))
-        & (F.col("_ts1") <= F.col("a.ts") + F.expr(f"INTERVAL {max_turn_gap}")),
-        "inner",
-    )
-    return rest.unionByName(first.select(*vertex_columns("a.")))

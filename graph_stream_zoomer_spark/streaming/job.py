@@ -1,15 +1,16 @@
 """Top-level streaming job: transcript stream → grouped summary streams →
 idempotent sinks, resumable from checkpoint.
 
-The summary streams are ``GraphStreamGrouping.summaries`` — the same stages
-the batch ``execute`` runs — over the streaming transcript binding wrapped
-in a ``StreamGraph``; only the exactly-once sink is streaming-specific.
+The summary stream is ``GraphStreamGrouping.summaries`` — the same stages
+the batch ``execute`` runs — over ``streaming_transcript_graph``; only the
+exactly-once sink is streaming-specific.
 
 This is the deployable unit (spark-submit --py-files entry point, see
-scripts/run_streaming_job.py). The vertex and edge summary pipelines run as
-two branches of one discriminated-union structured-streaming query: one
-trigger/commit/offset log, one checkpoint tree, one no-data drain sequence,
-split into the two sinks per micro-batch.
+scripts/run_streaming_job.py). One structured-streaming query groups the
+vertex and edge elements as one tagged stream: per trigger one successor
+join and (tumbling/sliding windows) one windowed aggregation, one
+trigger/commit/offset log, one checkpoint tree, one no-data drain sequence;
+each micro-batch is split by ``kind`` into the two sinks.
 """
 
 from __future__ import annotations
@@ -18,12 +19,9 @@ import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..config import StreamGraphConfig
-from ..model import StreamGraph, triple_edges
 from ..operators.grouping import GraphStreamGrouping
-from .binding import streaming_transcript_triples, streaming_vertex_observations
+from .binding import streaming_transcript_graph
 from .sink import IdempotentParquetSink, ProgressListener
 
 TRANSCRIPT_DDL = (
@@ -64,7 +62,6 @@ def run_grouping_job(
     available_now: bool = True,
     max_turn_gap: str = "1 hour",
     unified: bool = True,
-    state_store: str | None = None,
 ) -> StreamingJobResult:
     """Launch the grouping job; with available_now=True blocks until the
     current input is drained (the test/backfill mode — production uses
@@ -74,48 +71,16 @@ def run_grouping_job(
     two-query mode (separate vertex and edge queries) was removed after the
     one-query form won at 2 and 8 pinned cores (BENCH.md appendix).
 
-    ``state_store``: ``"rocksdb"`` switches the state backend to Spark's
-    bundled RocksDBStateStoreProvider — off-heap, spill-to-disk, changelog
-    checkpointing; the production choice once join/agg state outgrows
-    executor heap (the 10^12-turn regime — the default HDFS-backed store
-    keeps every state row as JVM objects on-heap). ``"hdfs"`` forces the
-    default; None leaves the session setting untouched. Applied via
-    session conf, so it must be set before the FIRST start against a
-    checkpoint; the provider class is recorded in the checkpoint and
-    cannot change across restarts.
+    The state store is the session's
+    (``spark.sql.streaming.stateStore.providerClass``); it is recorded in
+    the checkpoint and cannot change across restarts.
     """
     if not unified:
         raise ValueError(
             "the two-query streaming mode (unified=False) was removed; "
             "run_grouping_job always runs one unified query"
         )
-    cfg: StreamGraphConfig = op.config
-    wm = cfg.watermark_delay
-    if state_store is not None:
-        providers = {
-            "rocksdb": "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-            "hdfs": "org.apache.spark.sql.execution.streaming.state."
-            "HDFSBackedStateStoreProvider",
-        }
-        if state_store not in providers:
-            raise ValueError(f"state_store must be one of {sorted(providers)} or None")
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", providers[state_store]
-        )
-
-    triples = streaming_transcript_triples(turns, watermark=wm, max_turn_gap=max_turn_gap)
-    vertices = streaming_vertex_observations(turns, watermark=wm, max_turn_gap=max_turn_gap)
-    # the transcript binding emits each turn and each successor pair exactly
-    # once → no dedup state; the batch operator's stages build both streams
-    graph = StreamGraph(
-        vertices=vertices,
-        edges=triple_edges(triples),
-        config=cfg,
-        triples=triples,
-        elements_unique=True,
-    )
-    sv, se = op.summaries(graph)
+    summaries = op.summaries(streaming_transcript_graph(turns, op.config, max_turn_gap))
 
     listener = ProgressListener()
     listener.attach(spark)
@@ -128,18 +93,17 @@ def run_grouping_job(
     _refuse_stale_sink(e_sink.root, ckpt)
 
     def split_sink(batch: DataFrame, batch_id: int) -> None:
-        # one persist serves both splits; each sink then caches only its
-        # own (tiny) summary slice for the lineage count + write
+        # one persist serves both splits
         batch.persist()
         try:
-            v_sink(batch.where(F.col("kind") == "v").select("v.*"), batch_id)
-            e_sink(batch.where(F.col("kind") == "e").select("e.*"), batch_id)
+            sv, se = op.split_summaries(batch)
+            v_sink(sv, batch_id)
+            e_sink(se, batch_id)
         finally:
             batch.unpersist()
 
     w = (
-        _tagged_union(sv, se)
-        .writeStream.foreachBatch(split_sink)
+        summaries.writeStream.foreachBatch(split_sink)
         .outputMode("append")
         .queryName("summaries")
         .option("checkpointLocation", ckpt)
@@ -165,25 +129,3 @@ def _refuse_stale_sink(sink_root: str, checkpoint_dir: str) -> None:
             "resuming would restart batch ids at 0 and skip new batches as replays. "
             "Restore the checkpoint or use a fresh out_root."
         )
-
-
-def _tagged_union(sv: DataFrame, se: DataFrame) -> DataFrame:
-    """Discriminated union of the two summary streams: (kind, v struct,
-    e struct) with the inactive side null — schemas stay independent while
-    both branches share one micro-batch/checkpoint lifecycle."""
-
-    def struct_ddl(df: DataFrame) -> str:
-        inner = ",".join(f"{f.name}:{f.dataType.simpleString()}" for f in df.schema.fields)
-        return f"struct<{inner}>"
-
-    return sv.select(
-        F.lit("v").alias("kind"),
-        F.struct(*sv.columns).alias("v"),
-        F.lit(None).cast(struct_ddl(se)).alias("e"),
-    ).unionByName(
-        se.select(
-            F.lit("e").alias("kind"),
-            F.lit(None).cast(struct_ddl(sv)).alias("v"),
-            F.struct(*se.columns).alias("e"),
-        )
-    )

@@ -7,21 +7,19 @@ Spark mapping: ``withWatermark`` + windowed aggregation in append mode —
 windows emit once the watermark passes window end; late rows are dropped
 identically.
 
-There is no streaming-specific plan: the summary streams are
+There is no streaming-specific plan: the summary stream is
 ``GraphStreamGrouping.summaries`` (``operators/grouping.py``) applied to
-watermarked streaming DataFrames (per stream — vertices and edges):
+watermarked streaming DataFrames:
 
   readStream → withWatermark(event_time, delay)
     → window assignment [+ windowed DISTINCT]             [stage 1/2]
-    → aggregate by (window, label, group-prop cols)       [stage 4/9 agg]
+    → aggregate by (window, kind, label, group-prop cols) [stages 4 + 9]
     → foreachBatch: exactly-once commit keyed (window, group key)
 
-The windowed DISTINCT is a stateful deduplication keyed by the window (the
-raw event time for session windows), so its state is evicted by the
-watermark; producers that emit each element once (the transcript binding)
-skip it (``StreamGraph.elements_unique``). Each element kind is one
-stateful aggregation; Spark's partial aggregation combines rows before
-the state store.
+The windowed DISTINCT is a stateful deduplication, skipped for producers
+that emit each element once (``StreamGraph.elements_unique``). The vertex
+and edge elements are one stateful aggregation (session windows: two);
+Spark's partial aggregation combines rows before the state store.
 """
 
 from __future__ import annotations

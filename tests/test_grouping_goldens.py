@@ -17,7 +17,6 @@ same instants rendered in Europe/Berlin).
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from graph_stream_zoomer_spark import (
     Count,

@@ -160,7 +160,7 @@ def test_join_path_super_edge_endpoints_are_super_vertices(graph, window):
     """Referential integrity on the join path (``triples=None``): every
     super-edge source and target names a super-vertex of the same
     event_time. The triple fast path does not hold this (see
-    ``edges_with_super_vertices_from_triples``)."""
+    ``triple_elements``)."""
     from dataclasses import replace
 
     g, _ = graph

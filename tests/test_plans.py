@@ -86,6 +86,13 @@ def test_binding_builds_only_what_the_grouping_reads(spark, tmp_path):
         return out
 
     out = grouped([":label"])
+    # the split's ``kind`` filter prunes the other element kind from the one
+    # tagged aggregation: each output keeps its own plan, with one binding
+    # shuffle and no union of the two element streams
+    for df in (out.vertices, out.edges):
+        final = _plan(df).split("== Initial Plan ==")[0]
+        assert final.count("Exchange hashpartitioning(conv_id") == 1, final
+        assert "Union" not in final, final
     edge_reads = plan_stats(out.edges).read_schemas
     assert edge_reads, edge_reads
     assert all("text" not in re.findall(r"(\w+):", rs) for rs in edge_reads), edge_reads
@@ -339,11 +346,12 @@ def test_tpch_q3_broadcasts_dim_and_takeordered(spark):
 
 
 def test_streaming_job_plan_shape(spark, tmp_path, monkeypatch):
-    """The unified streaming query runs exactly four state operators per
-    data trigger (the successor join, the turn-0 ⋈ turn-1 join and the two
-    windowed aggregations) with the same state keys, no Python evaluation,
-    and reads each chunk at most five times (both successor-join sides and
-    the vertex stream's three branches scan the source)."""
+    """The unified streaming query runs exactly two state operators per
+    data trigger (the successor join and one windowed aggregation of the
+    tagged vertex and edge elements) with the expected state key, no
+    Python evaluation, and reads each chunk at most three times (both
+    successor-join sides and the stateless vertex branch scan the
+    source)."""
     import os
     import re
 
@@ -379,15 +387,12 @@ def test_streaming_job_plan_shape(spark, tmp_path, monkeypatch):
     assert len(data) == len(chunks), result.listener.progress
     for p, chunk in zip(data, chunks):
         ops = sorted(so["operator"] for so in p["state_detail"])
-        assert ops == ["stateStoreSave"] * 2 + ["symmetricHashJoin"] * 2, ops
-        assert p["num_input_rows"] <= 5 * chunk.num_rows, (p["num_input_rows"], chunk.num_rows)
+        assert ops == ["stateStoreSave", "symmetricHashJoin"], ops
+        assert p["num_input_rows"] <= 3 * chunk.num_rows, (p["num_input_rows"], chunk.num_rows)
     (q,) = queries
     plan = q._jsq.explainInternal(True)
     assert "EvalPython" not in plan, plan[:3000]
-    # the aggregation state is keyed by the watermarked window and the
-    # grouping columns only
-    keys = sorted(re.sub(r"#\d+", "", k) for k in re.findall(r"StateStoreSave \[([^\]]*)\]", plan))
-    assert keys == [
-        "window-T10000ms, source_id, target_id, edge_label",
-        "window-T10000ms, vertex_label",
-    ], keys
+    # the aggregation state is keyed by the watermarked window, the element
+    # kind and the two kinds' grouping columns only
+    keys = [re.sub(r"#\d+", "", k) for k in re.findall(r"StateStoreSave \[([^\]]*)\]", plan)]
+    assert keys == ["window-T10000ms, kind, vertex_label, source_id, target_id, edge_label"], keys

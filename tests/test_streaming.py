@@ -190,6 +190,38 @@ def test_late_rows_dropped(spark, tmp_path):
     assert labels == {"user", "assistant"}
 
 
+def test_turn0_vertex_needs_its_successor_edge(spark, tmp_path):
+    """The streaming binding's turn-0 rule: a turn 0 is a vertex exactly
+    when its successor edge exists, i.e. its turn 1 follows it within
+    ``max_turn_gap`` (conversation a). A turn 1 more than ``max_turn_gap``
+    after turn 0 (b) or before it (c) makes no edge and no turn-0 vertex,
+    while every turn 1 is still a vertex. Each turn has its own role, so
+    the label counts name the turns that were grouped."""
+    rows = [
+        ("a", 0, "a0", "t", "", "2025-01-01 00:00:00"),
+        ("a", 1, "a1", "t", "", "2025-01-01 00:00:30"),
+        ("b", 0, "b0", "t", "", "2025-01-01 00:00:00"),
+        ("b", 1, "b1", "t", "", "2025-01-01 02:00:00"),
+        ("c", 0, "c0", "t", "", "2025-01-01 00:05:00"),
+        ("c", 1, "c1", "t", "", "2025-01-01 00:04:00"),
+    ]
+    turns = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, tool string, ts string"
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    d = str(tmp_path / "turns")
+    turns.unionByName(_sentinel(spark)).coalesce(1).write.parquet(d)
+    result = run_grouping_job(
+        spark, read_transcript_stream(spark, d), _op(), str(tmp_path / "out"),
+        max_turn_gap="1 hour",
+    )
+    vertices = _collect_sink(spark, result.vertex_sink, "vertex_label")
+    edges = _collect_sink(spark, result.edge_sink, "edge_label")
+    assert sorted((label, n) for (label, _), n in vertices.items()) == [
+        ("a0", 1), ("a1", 1), ("b1", 1), ("c1", 1),
+    ], vertices
+    assert [(label, n) for (label, _), n in edges.items()] == [("a0->a1", 1)], edges
+
+
 def test_unified_query_matches_batch(spark, tmp_path, turns_dir):
     """An explicit unified=True (the keyword the benchmark's stream workload
     passes) runs the same single discriminated-union query and must emit
@@ -202,30 +234,6 @@ def test_unified_query_matches_batch(spark, tmp_path, turns_dir):
     exp_sv, exp_se = _batch_expected(spark, turns)
     assert _collect_sink(spark, result.vertex_sink, "vertex_label") == exp_sv
     assert _collect_sink(spark, result.edge_sink, "edge_label") == exp_se
-
-
-def test_rocksdb_state_store_matches_batch(spark, tmp_path, turns_dir):
-    """state_store='rocksdb' (Spark's bundled RocksDBStateStoreProvider —
-    the off-heap production backend for state that outgrows executor heap)
-    emits exactly the batch rows; conf is restored afterwards so the shared
-    session's other tests keep the default provider."""
-    d, turns = turns_dir
-    key = "spark.sql.streaming.stateStore.providerClass"
-    before = spark.conf.get(key, None)
-    try:
-        stream = read_transcript_stream(spark, d)
-        result = run_grouping_job(
-            spark, stream, _op(), str(tmp_path / "out_rocks"), state_store="rocksdb"
-        )
-        assert "RocksDB" in spark.conf.get(key)
-        exp_sv, exp_se = _batch_expected(spark, turns)
-        assert _collect_sink(spark, result.vertex_sink, "vertex_label") == exp_sv
-        assert _collect_sink(spark, result.edge_sink, "edge_label") == exp_se
-    finally:
-        if before is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, before)
 
 
 def test_stateless_text_ops_are_stream_transparent(spark, tmp_path):

@@ -9,9 +9,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from graph_stream_zoomer_spark import Count, StreamGraphConfig, WindowConfig
+from graph_stream_zoomer_spark.model import triple_vertices
 from graph_stream_zoomer_spark.operators.grouping import GroupingBuilder
 from graph_stream_zoomer_spark.sources.transcripts import generate_transcripts, transcript_graph
-from graph_stream_zoomer_spark.streaming.binding import streaming_vertex_observations
+from graph_stream_zoomer_spark.streaming.binding import streaming_transcript_graph
 from graph_stream_zoomer_spark.streaming.job import read_transcript_stream
 from graph_stream_zoomer_spark.streaming.sink import IdempotentParquetSink
 
@@ -41,8 +42,12 @@ def _run_vertex_stream(spark, tmp_path, window):
     d = str(tmp_path / "turns")
     turns.unionByName(_sentinel(spark)).repartition(4).write.parquet(d)
     stream = read_transcript_stream(spark, d)
-    vertices = streaming_vertex_observations(stream, watermark="10 seconds")
     op = _op(window)
+    # stages 1, 3 and 4 over the graph's vertex observations: the stateless
+    # targets plus the turn-0 sources its hint names in the successor join
+    graph = streaming_transcript_graph(stream, op.config)
+    sources = triple_vertices(graph.triples.where(graph.source_vertices), "source")
+    vertices = graph.vertices.unionByName(sources)
     sv = op.group_vertices(op.enhance_vertices(op.dedup_vertices(vertices)))
     sink = IdempotentParquetSink(str(tmp_path / "out"))
     q = (
@@ -98,8 +103,7 @@ def test_percentile_aggregate_streaming_matches_batch(spark, tmp_path):
     d = str(tmp_path / "turns")
     turns.unionByName(_sentinel(spark)).repartition(4).write.parquet(d)
     stream = read_transcript_stream(spark, d)
-    vertices = streaming_vertex_observations(stream, watermark="10 seconds")
-    sv = op.group_vertices(op.enhance_vertices(op.dedup_vertices(vertices)))
+    sv, _ = op.split_summaries(op.summaries(streaming_transcript_graph(stream, op.config)))
     sink = IdempotentParquetSink(str(tmp_path / "out"))
     q = (
         sv.writeStream.foreachBatch(sink)

@@ -5,26 +5,15 @@ streams"). Ground truth: the batch engine's to_triples() on the same input
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
-from graph_stream_zoomer_spark import (
-    Count,
-    StreamGraph,
-    StreamGraphConfig,
-    WindowConfig,
-)
-from graph_stream_zoomer_spark.model import triple_edges
+from graph_stream_zoomer_spark import Count, StreamGraphConfig, WindowConfig
 from graph_stream_zoomer_spark.operators.grouping import GroupingBuilder
 from graph_stream_zoomer_spark.sources.transcripts import (
     generate_transcripts,
     transcript_graph,
 )
-from graph_stream_zoomer_spark.streaming.binding import (
-    streaming_transcript_triples,
-    streaming_vertex_observations,
-)
+from graph_stream_zoomer_spark.streaming.binding import streaming_transcript_graph
 from graph_stream_zoomer_spark.streaming.job import read_transcript_stream
 from graph_stream_zoomer_spark.streaming.pipeline import summary_triples
 
@@ -64,16 +53,7 @@ def test_streaming_summary_triples_match_batch(spark, tmp_path):
 
     # --- streaming: summary streams → watermarked stream-stream join ----
     stream = read_transcript_stream(spark, d)
-    triples = streaming_transcript_triples(stream, watermark=WM)
-    vertices = streaming_vertex_observations(stream, watermark=WM)
-    graph = StreamGraph(
-        vertices=vertices,
-        edges=triple_edges(triples),
-        config=op.config,
-        triples=triples,
-        elements_unique=True,
-    )
-    sv, se = op.summaries(graph)
+    sv, se = op.split_summaries(op.summaries(streaming_transcript_graph(stream, op.config)))
     joined = summary_triples(sv, se)
 
     out_dir = str(tmp_path / "triples_out")

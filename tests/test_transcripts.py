@@ -171,7 +171,7 @@ def test_absent_property_key_groups_as_null(transcripts):
         .set_config(cfg)
         .build()
     )
-    grouped_v, grouped_e = op.summaries(graph)
+    grouped_v, grouped_e = op.split_summaries(op.summaries(graph))
     v, e = grouped_v.collect(), grouped_e.collect()
     assert v and all(r["_gk_0"] is None for r in v)
     assert e and all(r["_egk_0"] is None for r in e)
@@ -189,7 +189,7 @@ def test_absent_property_key_groups_as_null(transcripts):
         .set_config(cfg)
         .build()
     )
-    lv, le = label_only.summaries(graph)
+    lv, le = label_only.split_summaries(label_only.summaries(graph))
     assert {r["super_vertex_id"] for r in v} == {r["super_vertex_id"] for r in lv.collect()}
     assert {r["source_id"] for r in e} == {r["source_id"] for r in le.collect()}
     out = graph.apply(op)
