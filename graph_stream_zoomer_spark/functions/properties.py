@@ -1,5 +1,6 @@
 """Scalar property / id helpers — the reference's UDF surface (P1-P6)
-re-expressed as native Catalyst expressions.
+re-expressed as native Catalyst expressions, written as SQL expression
+templates.
 
 Reference parity (paths relative to
 ``/root/reference/src/main/java/edu/dbsleipzig/stream/grouping/``):
@@ -12,65 +13,75 @@ Reference parity (paths relative to
 The reference routes these through opaque RAW(Properties) UDFs, defeating
 Flink's codegen; the Spark rewrite keeps them as built-in expressions so the
 whole pipeline stays inside WholeStageCodegen (SURVEY.md §4).
+
+Why templates: a plan is built from Python through py4j, where every
+``Column`` method is several round trips (``F.col`` ~13 commands, a
+3-entry ``create_map`` ~60), while a SQL expression string is parsed by the
+JVM in one call. The grouping and the transcript binding therefore pass
+strings to ``selectExpr``/``where``/``F.expr``. User-supplied text (property
+keys, aggregate output keys) enters a template only through ``quote``
+(as an identifier) or ``text`` (as a string value); everything else in a
+template is a constant of this package.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+
+def quote(name: str) -> str:
+    """``name`` as a back-quoted SQL identifier, whatever it contains."""
+    return "`" + name.replace("`", "``") + "`"
 
 
-def extract_property(props_col: Column | str, key: str) -> Column:
-    """P1: pull one key out of the property bag; NULL when the bag lacks
-    it. Pure Catalyst: a ``GetMapValue`` (``col[key]``), which
+def text(value: str) -> str:
+    """``value`` as a SQL string expression. Spelled as UTF-8 hex, so no
+    character of it, and no string-escaping setting of the session, can
+    change how it parses; Catalyst folds it to a plain literal."""
+    return f"CAST(X'{value.encode().hex()}' AS STRING)"
+
+
+def extract_property(bag: str, key: str) -> str:
+    """P1: the ``key`` entry of the property bag expression ``bag``; NULL
+    when the bag lacks it. A map field access (``GetMapValue``), which
     SimplifyExtractValueOps folds to the one value read when the bag is a
-    ``create_map``, so a bag entry that nothing reads is never computed."""
-    c = F.col(props_col) if isinstance(props_col, str) else props_col
-    return c[key]
+    ``map(...)``, so a bag entry that nothing reads is never computed."""
+    return f"{bag}.{quote(key)}"
 
 
-def super_element_id(fields: Sequence[Column], algo: str = "sha1") -> Column:
+def super_element_id(fields: Sequence[str], algo: str = "sha1") -> str:
     """P5: deterministic group id = hex hash of grouping values joined by '.'.
 
     ``concat_ws`` skips NULLs exactly like the reference's StringJoiner loop
     (CreateSuperElementId.java:38-44 skips null fields entirely).
     ``algo``: 'sha1' (reference parity) or 'sha256' (DuckDB-oracle friendly).
     """
-    joined = F.concat_ws(".", *fields)
+    joined = f"concat_ws('.', {', '.join(fields)})"
     if algo == "sha1":
-        return F.sha1(joined)
+        return f"sha1({joined})"
     if algo == "sha256":
-        return F.sha2(joined, 256)
+        return f"sha2({joined}, 256)"
     raise ValueError(f"unknown id hash {algo!r}")
 
 
-def fold_properties(pairs: Sequence[tuple[str, Column]]) -> Column:
-    """P6: fold (key, value) pairs back into a map<string,string> bag,
-    dropping null-valued entries (ToProperties.java:60-78 skips nulls).
+def fold_properties(pairs: Sequence[tuple[str, str]]) -> str:
+    """P6: fold (key, value expression) pairs back into a map<string,string>
+    bag, dropping null-valued entries (ToProperties.java:60-78 skips nulls).
 
     Values are cast to string — the canonical external property encoding;
     typed access happens by casting at use sites, mirroring how the
     reference's PropertyValue carries a type tag.
     """
     if not pairs:
-        return F.create_map().cast("map<string,string>")
-    entries = F.array(
-        *[
-            F.struct(F.lit(k).alias("key"), v.cast("string").alias("value"))
-            for k, v in pairs
-        ]
-    )
-    kept = F.filter(entries, lambda e: e["value"].isNotNull())
-    return F.map_from_entries(kept)
+        return "CAST(map() AS map<string,string>)"
+    entries = ", ".join(f"struct({text(k)} AS key, CAST({v} AS STRING) AS value)" for k, v in pairs)
+    return f"map_from_entries(filter(array({entries}), e -> e.value IS NOT NULL))"
 
 
-def canonical_props(props_col: Column | str) -> Column:
+def canonical_props(bag: str) -> str:
     """Order-insensitive, group-by-able encoding of a map column.
 
     Spark cannot GROUP BY MapType (not orderable); sorted entries are.
     Used by the windowed dedup (A6) and anywhere a property bag is a key.
     """
-    c = F.col(props_col) if isinstance(props_col, str) else props_col
-    return F.sort_array(F.map_entries(c))
+    return f"sort_array(map_entries({bag}))"

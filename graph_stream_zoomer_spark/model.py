@@ -27,7 +27,7 @@ from __future__ import annotations
 from dataclasses import dataclass, replace
 from typing import TYPE_CHECKING
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     MapType,
@@ -92,12 +92,12 @@ NO_LABEL = ""
 def triple_edges(triples: DataFrame) -> DataFrame:
     """Triple stream → edge stream: one edge per triple, its endpoints
     referenced by vertex id."""
-    return triples.select(
+    return triples.selectExpr(
         "edge_id",
         "edge_label",
         "edge_properties",
-        F.col("source.vertex_id").alias("source_id"),
-        F.col("target.vertex_id").alias("target_id"),
+        "source.vertex_id AS source_id",
+        "target.vertex_id AS target_id",
         "event_time",
     )
 
@@ -105,9 +105,7 @@ def triple_edges(triples: DataFrame) -> DataFrame:
 def triple_vertices(triples: DataFrame, side: str) -> DataFrame:
     """The ``side`` (``"source"``/``"target"``) endpoint of each triple as
     a vertex observation (VERTEX_SCHEMA columns)."""
-    return triples.select(
-        *[F.col(f"{side}.{f}").alias(f) for f in VERTEX_SCHEMA.fieldNames()]
-    )
+    return triples.selectExpr(*[f"{side}.{f} AS {f}" for f in VERTEX_SCHEMA.fieldNames()])
 
 
 def split_triples(triples: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -142,13 +140,13 @@ class StreamGraph:
     # for the transcript binding (one row per turn / per successor pair);
     # False for raw triple splits, where a vertex repeats per incident edge.
     elements_unique: bool = False
-    # Producer hint: a predicate over ``triples`` rows whose source endpoint
+    # Producer hint: a SQL predicate over ``triples`` rows whose source endpoint
     # is a vertex observation that ``vertices`` leaves out. The grouping
     # takes those vertices from the triple rows it already reads, so a
     # streaming binding need not join a second time to find them. The
     # streaming transcript binding sets it (a turn 0 is a vertex when its
     # successor edge exists); None for every batch binding.
-    source_vertices: Column | None = None
+    source_vertices: str | None = None
 
     @staticmethod
     def from_triples(triples: DataFrame, config: StreamGraphConfig | None = None) -> "StreamGraph":

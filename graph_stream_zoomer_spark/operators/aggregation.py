@@ -23,6 +23,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..functions.properties import quote
+
 
 @dataclass(frozen=True)
 class AggregateFunction:
@@ -63,38 +65,38 @@ class AggregateFunction:
         return "string" if self.kind in ("collect_set", "count_distinct") else "double"
 
     # -- direct (single-phase) form -------------------------------------
-    def agg_expr(self, input_col: str) -> Column:
-        """Aggregate over the promoted property column (already double)."""
+    def agg_sql(self, x: str) -> str:
+        """The aggregate as a SQL expression over the input expression
+        ``x`` (the promoted property column, already cast)."""
         if self.kind == "count":
-            return F.count(F.lit(1)).alias(self.output_key)
+            return "count(1)"
         if self.kind == "stddev":
-            return F.stddev_samp(F.col(input_col)).alias(self.output_key)
+            return f"stddev_samp({x})"
         if self.kind == "percentile":
-            return F.percentile(F.col(input_col), F.lit(self.param)).alias(self.output_key)
+            return f"percentile({x}, {float(self.param)!r}D)"
         if self.kind == "approx_percentile":
             # fixed high accuracy: the mergeable-sketch (KLL-style) form for
             # 100 TB — bounded state per group vs percentile's full buffer
-            return F.approx_percentile(
-                F.col(input_col), F.lit(self.param), F.lit(10000)
-            ).alias(self.output_key)
+            return f"approx_percentile({x}, {float(self.param)!r}D, 10000)"
         if self.kind == "collect_set":
             # sorted comma-joined rendering (engine-portable; deterministic
             # regardless of accumulation order); all-null group → NULL so the
             # null-dropping property fold and SQL string_agg agree
-            return F.nullif(
-                F.array_join(F.array_sort(F.collect_set(F.col(input_col))), ","),
-                F.lit(""),
-            ).alias(self.output_key)
+            return f"nullif(array_join(array_sort(collect_set({x})), ','), '')"
         if self.kind == "count_distinct":
             # size(collect_set) rather than countDistinct: same value, but
             # legal in streaming aggregations (countDistinct is not), so the
             # batch and streaming twins share one expression; state per group
             # is bounded by the value cardinality
-            return (
-                F.size(F.collect_set(F.col(input_col))).cast("bigint").alias(self.output_key)
-            )
-        fn = getattr(F, self.kind)
-        return fn(F.col(input_col)).alias(self.output_key)
+            return f"CAST(size(collect_set({x})) AS BIGINT)"
+        if self.kind not in ("min", "max", "sum", "avg"):
+            raise ValueError(f"unknown aggregate {self.kind!r}")
+        return f"{self.kind}({x})"
+
+    def agg_expr(self, input_col: str) -> Column:
+        """Aggregate over the promoted property column (already double),
+        named by ``output_key``."""
+        return F.expr(f"{self.agg_sql(quote(input_col))} AS {quote(self.output_key)}")
 
 
 def Count() -> AggregateFunction:

@@ -18,6 +18,24 @@ stream, one append-mode stateful aggregation keyed by the carried window.
 In batch, the split's ``kind`` filter pushes through it into the union of
 the element streams and prunes the other kind's branch.
 
+Super ids are hashed once per group, as the reference's
+``CreateSuperElementId`` is called once per group (SURVEY §2.3 A7). On the
+fast path an edge element is keyed by the label and grouping values of its
+endpoints' vertex groups (``source_vertex_label``, ``source__gk_<i>``,
+``target_…``), not by per-edge endpoint hashes, and the split computes
+``source_id``, ``target_id`` and ``super_edge_id`` once per super-edge
+(flagship: ~700 super-edges instead of ~405k edges per run). Edge groups
+thus follow vertex groups: two vertex groups that hash alike (``concat_ws``
+skips NULLs) stay apart, as their super-vertices already do. The session
+join path keeps its J2 id keys (``source_id``, ``target_id``): a vertex
+session's rowtime is not the edge's.
+
+Build cost: the plan is built from SQL expression templates (see
+functions/properties.py), a few ``selectExpr`` hops per stage. A warm
+flagship build, ``transcript_graph(t, cfg).apply(op)``, sends ~200 py4j
+commands and takes ~0.15 s on a 4-core host, against ~2,900 commands and
+~0.45 s when every expression was built from ``Column`` methods.
+
 Spark-first divergences (semantics preserved, plan improved):
   - The window struct produced by ``F.window``/``F.session_window`` is
     *carried through* all stages instead of being re-derived from rowtime,
@@ -39,7 +57,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field, replace
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import StreamGraphConfig, WindowConfig, WindowKind
@@ -47,6 +65,7 @@ from ..functions.properties import (
     canonical_props,
     extract_property,
     fold_properties,
+    quote,
     super_element_id,
 )
 from ..model import NO_LABEL, StreamGraph, triple_vertices
@@ -56,22 +75,28 @@ GROUP_LABEL_SYMBOL = ":label"  # TableGroupingBase.java:767
 WINDOW_TYPE = "struct<start:timestamp,end:timestamp>"
 VERTEX, EDGE = "v", "e"  # the ``kind`` tags of elements and summary rows
 NAME = {VERTEX: "vertex", EDGE: "edge"}
+ENDS = ("source", "target")
 
 
-def window_expr(w: WindowConfig, ts: str | Column) -> Column:
-    ts_col = F.col(ts) if isinstance(ts, str) else ts
+def window_expr(w: WindowConfig, ts: str = "event_time") -> str:
+    """The window assignment of the timestamp expression ``ts`` (SQL)."""
     if w.kind == WindowKind.TUMBLING:
-        return F.window(ts_col, w.size_interval)
+        return f"window({ts}, '{w.size_interval}')"
     if w.kind == WindowKind.SLIDING:
-        return F.window(ts_col, w.size_interval, w.slide_interval)
+        return f"window({ts}, '{w.size_interval}', '{w.slide_interval}')"
     if w.kind == WindowKind.SESSION:
-        return F.session_window(ts_col, w.gap_interval)
+        return f"session_window({ts}, '{w.gap_interval}')"
     raise ValueError(w.kind)
 
 
-def rowtime_expr(window_col: str = "window") -> Column:
+def rowtime_expr(window_col: str = "window") -> str:
     """Window rowtime = window_end − 1 ms (reference emission timestamp)."""
-    return F.col(f"{window_col}.end") - F.expr("INTERVAL 1 MILLISECOND")
+    return f"{window_col}.end - INTERVAL 1 MILLISECOND"
+
+
+def _exprs(cols: dict[str, str]) -> list[str]:
+    """``selectExpr`` arguments of named SQL expressions."""
+    return [f"{sql} AS {quote(name)}" for name, sql in cols.items()]
 
 
 @dataclass
@@ -112,21 +137,33 @@ class GraphStreamGrouping:
     def _use_label(self, kind: str) -> bool:
         return self.use_vertex_labels if kind == VERTEX else self.use_edge_labels
 
-    def _keys(self, kind: str) -> list[str]:
+    def _vertex_values(self) -> list[str]:
+        """What a vertex group is keyed by: the label, if grouped by, and
+        the promoted vertex keys."""
+        label = ["vertex_label"] if self.use_vertex_labels else []
+        return label + [self._gk(i) for i in range(len(self.vertex_grouping_keys))]
+
+    def _keys(self, kind: str, ids: bool = True) -> list[str]:
         """One kind's grouping values, label aside: the promoted vertex
-        keys; the super source/target ids and the promoted edge keys."""
+        keys; an edge's endpoints and its promoted edge keys. The join path
+        names the endpoints by their super ids (``ids``); the triple fast
+        path by the values that key their vertex groups, so the ids are
+        hashed once per super-edge instead of once per edge."""
         if kind == VERTEX:
             return [self._gk(i) for i in range(len(self.vertex_grouping_keys))]
-        return ["source_id", "target_id"] + [self._egk(i) for i in range(len(self.edge_grouping_keys))]
+        ends = ["source_id", "target_id"] if ids else [
+            f"{side}_{c}" for side in ENDS for c in self._vertex_values()
+        ]
+        return ends + [self._egk(i) for i in range(len(self.edge_grouping_keys))]
 
-    def _group_cols(self, kind: str) -> list[str]:
-        return self._keys(kind) + ([f"{NAME[kind]}_label"] if self._use_label(kind) else [])
+    def _group_cols(self, kind: str, ids: bool = True) -> list[str]:
+        return self._keys(kind, ids) + ([f"{NAME[kind]}_label"] if self._use_label(kind) else [])
 
-    def _element_cols(self, kind: str) -> list[str]:
+    def _element_cols(self, kind: str, ids: bool = True) -> list[str]:
         """What the aggregation reads of one element kind: its grouping
         columns and aggregate inputs."""
         inputs = [self._agg_in(kind, a) for a in self._aggs(kind) if a.property_key is not None]
-        return self._group_cols(kind) + inputs
+        return self._group_cols(kind, ids) + inputs
 
     # ------------------------------------------------------------------
     # Stages 1/2 — deduplicateVertices / deduplicateEdges
@@ -139,9 +176,9 @@ class GraphStreamGrouping:
         windows the window stays NULL and the raw event_time is kept;
         ``_aggregate`` assigns the session."""
         if self.window.kind == WindowKind.SESSION:
-            return df.select(F.lit(None).cast(WINDOW_TYPE).alias("window"), *cols, "event_time")
-        windowed = df.select(window_expr(self.window, "event_time").alias("window"), *cols)
-        return windowed.withColumn("event_time", rowtime_expr())
+            return df.selectExpr(f"CAST(NULL AS {WINDOW_TYPE}) AS window", *cols, "event_time")
+        windowed = df.selectExpr(f"{window_expr(self.window)} AS window", *cols)
+        return windowed.selectExpr("*", f"{rowtime_expr()} AS event_time")
 
     @staticmethod
     def _distinct(df: DataFrame, props_col: str) -> DataFrame:
@@ -149,9 +186,9 @@ class GraphStreamGrouping:
         cannot GROUP BY MapType, so the property bag takes part via its
         canonical sorted-entries encoding."""
         return (
-            df.withColumn(props_col, canonical_props(props_col))
+            df.withColumn(props_col, F.expr(canonical_props(props_col)))
             .dropDuplicates()
-            .withColumn(props_col, F.map_from_entries(props_col))
+            .withColumn(props_col, F.expr(f"map_from_entries({props_col})"))
         )
 
     def dedup_vertices(self, vertices: DataFrame) -> DataFrame:
@@ -176,88 +213,121 @@ class GraphStreamGrouping:
     # Stage 3 — enhanceVerticesByPropertyColumns
     # (GraphStreamGrouping.java:175-178; P8 property-column promotion)
     # ------------------------------------------------------------------
-    def _promoted(self, props: Column, kind: str) -> list[Column]:
-        """One kind's grouping values and aggregate inputs, read from a
-        property bag."""
+    def _promoted(self, bag: str, kind: str) -> dict[str, str]:
+        """One kind's grouping values and aggregate inputs, read from the
+        property bag expression ``bag``."""
         keys = self.vertex_grouping_keys if kind == VERTEX else self.edge_grouping_keys
         gk = self._gk if kind == VERTEX else self._egk
-        return [extract_property(props, k).alias(gk(i)) for i, k in enumerate(keys)] + [
-            extract_property(props, a.property_key).cast(a.input_type).alias(self._agg_in(kind, a))
-            for a in self._aggs(kind)
-            if a.property_key is not None
-        ]
+        cols = {gk(i): extract_property(bag, k) for i, k in enumerate(keys)}
+        for a in self._aggs(kind):
+            if a.property_key is not None:
+                cols[self._agg_in(kind, a)] = (
+                    f"CAST({extract_property(bag, a.property_key)} AS {a.input_type})"
+                )
+        return cols
 
     def enhance_vertices(self, deduped: DataFrame) -> DataFrame:
-        return deduped.select("*", *self._promoted(F.col("vertex_properties"), VERTEX))
+        return deduped.selectExpr("*", *_exprs(self._promoted("vertex_properties", VERTEX)))
+
+    def _vertex_rows(self, p: str = "") -> dict[str, str]:
+        """Stages 1 and 3 of a vertex observation whose columns are named
+        ``{p}<column>`` (a VERTEX_SCHEMA row, or a triple's endpoint
+        struct): a vertex element before window assignment."""
+        label = {"vertex_label": f"{p}vertex_label"} if self.use_vertex_labels else {}
+        return {
+            "kind": f"'{VERTEX}'",
+            "event_time": f"{p}event_time",
+            **label,
+            **self._promoted(f"{p}vertex_properties", VERTEX),
+        }
 
     # ------------------------------------------------------------------
     # Stages 4 and 9 — groupVertices / groupEdges (GraphStreamGrouping.java:
     # 180-185, 267-272; A7, A8): one windowed aggregation of tagged elements
     # ------------------------------------------------------------------
     @staticmethod
-    def _rowtime_ms(rowtime: Column) -> Column:
+    def _rowtime_ms(rowtime: str) -> str:
         # cast handles TIMESTAMP_NTZ inputs (parquet default); rendered as
         # epoch millis so the id is timezone-name independent
-        return F.unix_millis(rowtime.cast("timestamp")).cast("string")
+        return f"CAST(unix_millis(CAST({rowtime} AS TIMESTAMP)) AS STRING)"
 
-    def _vertex_super_id(self, prefix: str = "") -> Column:
+    def _vertex_super_id(self, rowtime: str, prefix: str = "") -> str:
         """CreateSuperElementId over [label?] + grouping values + rowtime
         (TableGroupingBase.java buildVertexProjectExpressions; rowtime is
-        always the last hash field): of the promoted vertex columns with the
-        rowtime in ``event_time``, or of the StreamTriple endpoint columns
-        that the triple fast path extracts under ``prefix`` with the rowtime
-        of the carried window."""
-        fields = [F.col(f"{prefix}vertex_label")] if self.use_vertex_labels else []
-        fields += [F.col(prefix + self._gk(i)) for i in range(len(self.vertex_grouping_keys))]
-        rowtime = rowtime_expr() if prefix else F.col("event_time")
+        always the last hash field), of the vertex group values named
+        ``{prefix}<column>``: a vertex row's, or on the triple fast path a
+        super-edge's endpoint values (``source_``/``target_``), hashed with
+        the rowtime of the edge's window."""
+        fields = [f"{prefix}{c}" for c in self._vertex_values()]
         return super_element_id([*fields, self._rowtime_ms(rowtime)], self.config.id_hash)
 
-    def _edge_super_id(self) -> Column:
+    def _edge_super_id(self, source: str, target: str, rowtime: str) -> str:
         """src + tgt + [label?] + grouping values + rowtime. The reference
         omits src/tgt (TableGroupingBase.java:426-441), which its own tests
         flag as buggy (LabelGroupSizeAggTest.java:25)."""
-        fields = [F.col("source_id"), F.col("target_id")]
-        if self.use_edge_labels:
-            fields.append(F.col("edge_label"))
-        fields += [F.col(self._egk(i)) for i in range(len(self.edge_grouping_keys))]
-        fields.append(self._rowtime_ms(F.col("event_time")))
-        return super_element_id(fields, self.config.id_hash)
+        fields = [source, target] + (["edge_label"] if self.use_edge_labels else [])
+        fields += [self._egk(i) for i in range(len(self.edge_grouping_keys))]
+        return super_element_id([*fields, self._rowtime_ms(rowtime)], self.config.id_hash)
+
+    def _assign_window(self, rows: DataFrame, cols) -> DataFrame:
+        """Element rows (``kind``, ``event_time`` and ``cols``) as windowed
+        element rows: tumbling and sliding windows only. A sliding window's
+        ``Expand`` copies exactly these columns."""
+        return rows.selectExpr(f"{window_expr(self.window)} AS window", "kind", *map(quote, cols))
 
     def _elements(self, df: DataFrame, kind: str) -> DataFrame:
         """A stage-3/8 frame as element rows: window, ``kind``, what the
         aggregation reads (sessions: plus the raw event time)."""
         session = ["event_time"] if self.window.kind == WindowKind.SESSION else []
-        return df.select("window", F.lit(kind).alias("kind"), *self._element_cols(kind), *session)
+        cols = map(quote, self._element_cols(kind))
+        return df.selectExpr("window", f"'{kind}' AS kind", *cols, *session)
 
-    def _aggregate(self, elements: DataFrame, kinds: tuple[str, ...]) -> DataFrame:
+    def _aggregate(self, elements: DataFrame, kinds: tuple[str, ...], ids: bool = True) -> DataFrame:
         """Stages 4 and 9 as one windowed aggregation of element rows: one
         row per (window, kind, group) with each kind's grouping columns and
         aggregates (``_<kind>_<output key>``); other-kind columns are NULL."""
         if self.window.kind == WindowKind.SESSION:
-            window = window_expr(self.window, "event_time").alias("window")
+            window = f"{window_expr(self.window)} AS window"
         else:
-            window = F.col("window")
-        keys = [c for k in kinds for c in self._group_cols(k)]
-        ins = [(k, a) for k in kinds for a in self._aggs(k)]
-        aggs = [a.agg_expr(self._agg_in(k, a)).alias(self._agg_out(k, a)) for k, a in ins]
-        return elements.groupBy(window, "kind", *keys).agg(
-            *aggs or [F.count(F.lit(1)).alias("_group_size")]
+            window = "window"
+        keys = [window, "kind", *[quote(c) for k in kinds for c in self._group_cols(k, ids)]]
+        aggs = [
+            f"{a.agg_sql(quote(self._agg_in(k, a)))} AS {quote(self._agg_out(k, a))}"
+            for k in kinds
+            for a in self._aggs(k)
+        ]
+        return elements.groupBy(*map(F.expr, keys)).agg(
+            *map(F.expr, aggs or ["count(1) AS _group_size"])
         )
 
     def _summary(self, tagged: DataFrame, kind: str) -> DataFrame:
         """One kind's rows of a tagged summary table, one per super
         element: window, keys, rowtime, label, aggregates and the
-        ``super_<vertex|edge>_id`` hash."""
+        ``super_<vertex|edge>_id`` hash. Fast-path super-edges carry their
+        endpoints' group values, which are hashed here into ``source_id``
+        and ``target_id``: once per super-edge."""
         label = f"{NAME[kind]}_label"
-        out = tagged.where(F.col("kind") == kind).select(
-            "window",
-            *self._keys(kind),
-            rowtime_expr().alias("event_time"),
-            (F.col(label) if self._use_label(kind) else F.lit(NO_LABEL)).alias(label),
-            *[F.col(self._agg_out(kind, a)).alias(a.output_key) for a in self._aggs(kind)],
-        )
-        super_id = self._vertex_super_id() if kind == VERTEX else self._edge_super_id()
-        return out.withColumn(f"super_{NAME[kind]}_id", super_id)
+        rowtime = rowtime_expr()
+        cols = {"window": "window"}
+        if kind == VERTEX:
+            cols |= {c: c for c in self._keys(VERTEX)}
+            super_id = self._vertex_super_id(rowtime)
+        else:
+            # join-path tables are grouped by the J2 ids already
+            ids = "source_id" in tagged.columns
+            cols |= {
+                f"{side}_id": f"{side}_id" if ids else self._vertex_super_id(rowtime, f"{side}_")
+                for side in ENDS
+            }
+            super_id = self._edge_super_id(cols["source_id"], cols["target_id"], rowtime)
+            cols |= {k: k for k in map(self._egk, range(len(self.edge_grouping_keys)))}
+        cols |= {
+            "event_time": rowtime,
+            label: label if self._use_label(kind) else f"'{NO_LABEL}'",
+            **{a.output_key: quote(self._agg_out(kind, a)) for a in self._aggs(kind)},
+            f"super_{NAME[kind]}_id": super_id,
+        }
+        return tagged.where(f"kind = '{kind}'").selectExpr(*_exprs(cols))
 
     def split_summaries(self, tagged: DataFrame) -> tuple[DataFrame, DataFrame]:
         """A ``summaries`` table (or a micro-batch of it) as the grouped
@@ -274,14 +344,13 @@ class GraphStreamGrouping:
     # project exprs TableGroupingBase.java:667-697)
     # ------------------------------------------------------------------
     def create_super_vertices(self, grouped: DataFrame) -> DataFrame:
-        pairs = [
-            (k, F.col(self._gk(i))) for i, k in enumerate(self.vertex_grouping_keys)
-        ] + [(a.output_key, F.col(a.output_key)) for a in self.vertex_aggs]
-        return grouped.select(
-            F.col("super_vertex_id").alias("vertex_id"),
-            F.col("event_time"),
-            F.col("vertex_label"),
-            fold_properties(pairs).alias("vertex_properties"),
+        pairs = [(k, self._gk(i)) for i, k in enumerate(self.vertex_grouping_keys)]
+        pairs += [(a.output_key, quote(a.output_key)) for a in self.vertex_aggs]
+        return grouped.selectExpr(
+            "super_vertex_id AS vertex_id",
+            "event_time",
+            "vertex_label",
+            f"{fold_properties(pairs)} AS vertex_properties",
         )
 
     # ------------------------------------------------------------------
@@ -297,8 +366,8 @@ class GraphStreamGrouping:
         (the reference's J1 condition, TableGroupingBase.java:587-614).
         """
         if self.window.kind != WindowKind.SESSION:
-            super_id = self._vertex_super_id().alias("super_vertex_id")
-            return enhanced.select("vertex_id", "window", super_id)
+            super_id = self._vertex_super_id("event_time")
+            return enhanced.selectExpr("vertex_id", "window", f"{super_id} AS super_vertex_id")
         assert grouped is not None, "session-window expansion needs the grouped table"
         g = grouped.select(
             "window",
@@ -351,13 +420,17 @@ class GraphStreamGrouping:
     def triple_elements(self, graph: StreamGraph) -> DataFrame:
         """Stages 2 and 6-8 on the joinless fast path: ``graph.triples`` as
         element rows. Each edge carries both endpoint vertices inline
-        (StreamTriple), so super source/target ids are *recomputed* per edge
-        — no shuffle at all on the edge-expansion path. Tumbling/sliding only.
+        (StreamTriple), so an edge element is keyed by the label and
+        grouping values of its endpoints' vertex groups: the super
+        source/target ids are a function of those values and the window,
+        and ``_summary`` hashes them once per super-edge. No join and no
+        shuffle on the edge-expansion path. Tumbling/sliding only.
 
-        The edge's keys and aggregate inputs and each endpoint's label and
-        grouping values are read from the triple in one projection, below
-        the window assignment, so the endpoint structs and property bags
-        fold away to the fields read instead of being built per edge.
+        The edge's keys and aggregate inputs and each endpoint's values are
+        read from the triple in one projection, below the window
+        assignment, so the endpoint structs and property bags fold away to
+        the fields read instead of being built per edge, and a sliding
+        window's ``Expand`` copies only those fields.
 
         ``elements_unique`` skips the windowed dedup (one fewer shuffle, and
         no dedup state in Structured Streaming). ``source_vertices`` also
@@ -375,98 +448,67 @@ class GraphStreamGrouping:
         fast path's hashing, so changing it starts with the checker."""
         assert self.window.kind != WindowKind.SESSION
         triples, unique = graph.triples, graph.elements_unique
-
-        def endpoint(side: str) -> list[Column]:
-            props = F.col(f"{side}.vertex_properties")
-            return [F.col(f"{side}.vertex_label").alias(f"{side}_vertex_label")] + [
-                extract_property(props, k).alias(f"{side}_{self._gk(i)}")
-                for i, k in enumerate(self.vertex_grouping_keys)
-            ]
-
-        edge = [
-            F.lit(EDGE).alias("kind"),
-            F.col("event_time"),
-            F.col("edge_label"),
-            *self._promoted(F.col("edge_properties"), EDGE),  # 8
-            *endpoint("source"),
-            *endpoint("target"),
-        ]
+        edge = {"kind": f"'{EDGE}'", "event_time": "event_time", "edge_label": "edge_label"}
+        edge |= self._promoted("edge_properties", EDGE)  # 8
+        for side in ENDS:  # 6 + 7: the endpoints' vertex-group values
+            values = self._vertex_rows(f"{side}.")
+            edge |= {f"{side}_{c}": values[c] for c in self._vertex_values()}
         if not unique:  # the observation the windowed dedup compares
-            edge += [F.col("edge_id"), F.col("edge_properties")]
+            edge |= {"edge_id": "edge_id", "edge_properties": "edge_properties"}
         kinds: tuple[str, ...] = (EDGE,)
         if graph.source_vertices is None:
-            rows = triples.select(*edge)
+            rows = triples.selectExpr(*_exprs(edge))
         else:
             if not unique:
                 raise ValueError("source_vertices needs distinct triples (elements_unique)")
             kinds = (EDGE, VERTEX)
-            vertex = [
-                F.lit(VERTEX).alias("kind"),
-                F.col("source.event_time").alias("event_time"),
-                F.col("source.vertex_label").alias("vertex_label"),
-                *self._promoted(F.col("source.vertex_properties"), VERTEX),  # 3
-            ]
-            e, v = (dict(zip(triples.select(*cols).columns, cols)) for cols in (edge, vertex))
+            vertex = self._vertex_rows("source.")  # 1, 3
+            names = dict.fromkeys([*edge, *vertex])
 
-            def element(own: dict, other: dict) -> Column:
+            def element(own: dict, other: dict) -> str:
                 # one struct type for both kinds: the other kind's fields
                 # are NULLs of their type
-                return F.struct(*[
-                    (own[n] if n in own else F.when(F.lit(False), other[n])).alias(n)
-                    for n in {**e, **v}
-                ])
+                fields = [own.get(n) or f"CASE WHEN false THEN {other[n]} END" for n in names]
+                return "struct(" + ", ".join(_exprs(dict(zip(names, fields)))) + ")"
 
             # built in a projection of their own, which Catalyst merges into
             # the binding's, so the explode reads the few fields the keys
             # need rather than the endpoint structs and property bags
-            pair = triples.select(
-                element(e, v).alias("e"),
-                element(v, e).alias("v"),
-                graph.source_vertices.alias("has_v"),
+            pair = triples.selectExpr(
+                f"{element(edge, vertex)} AS e",
+                f"{element(vertex, edge)} AS v",
+                f"{graph.source_vertices} AS has_v",
             )
-            both = F.when(F.col("has_v"), F.array("e", "v")).otherwise(F.array("e"))
-            rows = pair.select(F.explode(both).alias("el")).select("el.*")
+            both = "CASE WHEN has_v THEN array(e, v) ELSE array(e) END"
+            rows = pair.selectExpr(f"explode({both}) AS el").selectExpr("el.*")
 
-        windowed = rows.select(  # 6 + 7: super endpoint ids per edge
-            window_expr(self.window, "event_time").alias("window"),
-            *[c for c in rows.columns if c != "event_time"],
-        ).select(
-            "*",
-            *[
-                F.when(F.col("kind") == EDGE, self._vertex_super_id(f"{side}_")).alias(f"{side}_id")
-                for side in ("source", "target")
-            ],
-        )
+        elements = [c for k in kinds for c in self._element_cols(k, ids=False)]
         if not unique:  # stage 2, after expansion
-            observed = dict.fromkeys([*self._element_cols(EDGE), "edge_id", "edge_label"])
-            windowed = self._distinct(
-                windowed.select("window", "kind", *observed, "edge_properties"), "edge_properties"
-            )
-        return windowed.select(
-            "window", "kind", *[c for k in kinds for c in self._element_cols(k)]
-        )
+            observed = dict.fromkeys([*elements, "edge_id", "edge_label", "edge_properties"])
+            deduped = self._distinct(self._assign_window(rows, observed), "edge_properties")
+            return deduped.selectExpr("window", "kind", *map(quote, elements))
+        return self._assign_window(rows, elements)
 
     # ------------------------------------------------------------------
     # Stage 8 — enrichEdgesWithSuperVertices (GraphStreamGrouping.java:262-265)
     # ------------------------------------------------------------------
     def enrich_edges(self, edges: DataFrame) -> DataFrame:
-        return edges.select("*", *self._promoted(F.col("edge_properties"), EDGE))
+        return edges.selectExpr("*", *_exprs(self._promoted("edge_properties", EDGE)))
 
     # ------------------------------------------------------------------
     # Stage 10 — createSuperEdges (GraphStreamGrouping.java:274-277;
     # exprs TableGroupingBase.java:707-741)
     # ------------------------------------------------------------------
     def create_super_edges(self, grouped: DataFrame) -> DataFrame:
-        pairs = [
-            (k, F.col(self._egk(i))) for i, k in enumerate(self.edge_grouping_keys)
-        ] + [(a.output_key, F.col(a.output_key)) for a in self.edge_aggs]
-        return grouped.select(
-            F.col("super_edge_id").alias("edge_id"),
-            F.col("edge_label"),
-            fold_properties(pairs).alias("edge_properties"),
-            F.col("source_id"),
-            F.col("target_id"),
-            F.col("event_time"),
+        pairs = [(k, self._egk(i)) for i, k in enumerate(self.edge_grouping_keys)]
+        pairs += [(a.output_key, quote(a.output_key)) for a in self.edge_aggs]
+        return grouped.selectExpr(
+            "super_edge_id AS edge_id",
+            "edge_label",
+            f"{fold_properties(pairs)} AS edge_properties",
+            "source_id",
+            "target_id",
+            "event_time",
         )
 
     # ------------------------------------------------------------------
@@ -485,17 +527,22 @@ class GraphStreamGrouping:
         if graph.source_vertices is not None and not fast:
             sources = graph.triples.where(graph.source_vertices)
             vertices = vertices.unionByName(triple_vertices(sources, "source"))
+        if fast:  # 2, 6-8, then 4 + 9 as one aggregation
+            if graph.elements_unique:  # 1 (shuffle-free) + 3
+                rows = vertices.selectExpr(*_exprs(self._vertex_rows()))
+                vertex_elements = self._assign_window(rows, self._element_cols(VERTEX))
+            else:  # 1 + 3
+                deduped_v = self.dedup_vertices(vertices)
+                vertex_elements = self._elements(self.enhance_vertices(deduped_v), VERTEX)
+            edges = self.triple_elements(graph)
+            elements = vertex_elements.unionByName(edges, allowMissingColumns=True)
+            return self._aggregate(elements, (VERTEX, EDGE), ids=False)
         if graph.elements_unique and self.window.kind != WindowKind.SESSION:
             deduped_v = self.assign_window_vertices(vertices)  # 1 (shuffle-free)
         else:
             deduped_v = self.dedup_vertices(vertices)  # 1
         enhanced_v = self.enhance_vertices(deduped_v)  # 3
-        vertex_elements = self._elements(enhanced_v, VERTEX)
-        if fast:  # 2, 6-8, then 4 + 9 as one aggregation
-            edges = self.triple_elements(graph)
-            elements = vertex_elements.unionByName(edges, allowMissingColumns=True)
-            return self._aggregate(elements, (VERTEX, EDGE))
-        grouped_v = self._aggregate(vertex_elements, (VERTEX,))  # 4
+        grouped_v = self._aggregate(self._elements(enhanced_v, VERTEX), (VERTEX,))  # 4
         expanded = self.expand_vertices(enhanced_v, self._summary(grouped_v, VERTEX))  # 6
         edges = self.edges_with_super_vertices(self.dedup_edges(graph.edges), expanded)  # 2, 7
         grouped_e = self._aggregate(self._elements(self.enrich_edges(edges), EDGE), (EDGE,))  # 8, 9

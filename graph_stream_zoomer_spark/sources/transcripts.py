@@ -21,7 +21,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..config import StreamGraphConfig
 from ..model import VERTEX_SCHEMA, VERTEX_STRUCT, StreamGraph, triple_edges
@@ -125,68 +124,69 @@ def slim_turns(t: DataFrame) -> DataFrame:
     a stream-stream join, so without this projection the batch ``count()``
     and ``lead()`` windows shuffle every turn's text, and the streaming
     successor join serializes it into its state store per micro-batch."""
-    return t.select("conv_id", "turn_idx", "role", "tool", "ts", F.length("text").alias("text_len"))
+    return t.selectExpr("conv_id", "turn_idx", "role", "tool", "ts", "length(text) AS text_len")
 
 
-def _prop_entries(p: str) -> list[Column]:
+# The binding is written as SQL expression templates over the slim turn
+# columns named ``{p}<column>``: ``""``/``"n_"`` over the batch ``lead()``,
+# ``"a."``/``"b."`` over the streaming join. One ``selectExpr`` of them is a
+# handful of py4j calls, where the same columns built with ``Column``
+# methods took hundreds (see functions/properties.py).
+
+
+def _props(p: str) -> str:
     """Key/value entries of a turn's property bag: tool, text_len and the
     hour bucket of its time."""
-    return [
-        F.lit("tool"), F.col(f"{p}tool"),
-        F.lit("text_len"), F.col(f"{p}text_len").cast("string"),
-        F.lit("hour_bucket"), F.date_format(F.col(f"{p}ts"), "yyyy-MM-dd HH"),
-    ]
+    return (
+        f"'tool', {p}tool, 'text_len', CAST({p}text_len AS STRING), "
+        f"'hour_bucket', date_format({p}ts, 'yyyy-MM-dd HH')"
+    )
 
 
-def _turn_vertex(p: str, conv_id: str | None = None) -> dict[str, Column]:
-    """The vertex of the turn whose slim columns are named ``{p}<column>``
-    (``""``/``"n_"`` over the batch ``lead()``, ``"a."``/``"b."`` over the
-    streaming join); ``conv_id`` names its conversation column when the
-    prefix has none. vertex_id = conv_id:turn_idx, label = role
-    (SURVEY.md §1.4). The bag is a ``create_map``: a key lookup of it folds
-    to the one entry read (SimplifyExtractValueOps), so entries that no
-    key or aggregate reads are never computed."""
+def _turn_vertex(p: str, conv_id: str | None = None) -> dict[str, str]:
+    """The vertex of the turn whose slim columns are named ``{p}<column>``;
+    ``conv_id`` names its conversation column when the prefix has none.
+    vertex_id = conv_id:turn_idx, label = role (SURVEY.md §1.4). The bag is
+    a ``map(...)``: a key lookup of it folds to the one entry read
+    (SimplifyExtractValueOps), so entries that no key or aggregate reads
+    are never computed."""
     return {
-        "vertex_id": F.concat_ws(
-            ":", F.col(conv_id or f"{p}conv_id"), F.col(f"{p}turn_idx").cast("string")
-        ),
-        "event_time": F.col(f"{p}ts"),
-        "vertex_label": F.col(f"{p}role"),
-        "vertex_properties": F.create_map(*_prop_entries(p)),
+        "vertex_id": f"concat_ws(':', {conv_id or p + 'conv_id'}, CAST({p}turn_idx AS STRING))",
+        "event_time": f"{p}ts",
+        "vertex_label": f"{p}role",
+        "vertex_properties": f"map({_props(p)})",
     }
 
 
-def vertex_columns(p: str = "") -> list[Column]:
+def vertex_columns(p: str = "") -> list[str]:
     """The turn's vertex as VERTEX_SCHEMA columns (see ``_turn_vertex``)."""
     v = _turn_vertex(p)
-    return [v[f].alias(f) for f in VERTEX_SCHEMA.fieldNames()]
+    return [f"{v[f]} AS {f}" for f in VERTEX_SCHEMA.fieldNames()]
 
 
-def triple_columns(a: str, b: str, conv_id: str | None = None) -> list[Column]:
+def triple_columns(a: str, b: str, conv_id: str | None = None) -> list[str]:
     """The successor edge a → b with both endpoint vertices as
     TRIPLE_SCHEMA columns. The edge takes b's time, its label is the role
     transition, and its bag is b's bag plus ``transition``."""
     src, tgt = _turn_vertex(a), _turn_vertex(b, conv_id)
-    label = F.concat_ws("->", F.col(f"{a}role"), F.col(f"{b}role"))
+    label = f"concat_ws('->', {a}role, {b}role)"
 
-    def vstruct(v: dict[str, Column]) -> Column:
-        return F.struct(*[v[f].alias(f) for f in VERTEX_STRUCT.fieldNames()])
+    def vstruct(v: dict[str, str]) -> str:
+        return "struct(" + ", ".join(f"{v[f]} AS {f}" for f in VERTEX_STRUCT.fieldNames()) + ")"
 
     return [
-        F.concat(src["vertex_id"], F.lit("->"), F.col(f"{b}turn_idx").cast("string")).alias(
-            "edge_id"
-        ),
-        tgt["event_time"].alias("event_time"),
-        label.alias("edge_label"),
-        F.create_map(*_prop_entries(b), F.lit("transition"), label).alias("edge_properties"),
-        vstruct(src).alias("source"),
-        vstruct(tgt).alias("target"),
+        f"concat({src['vertex_id']}, '->', CAST({b}turn_idx AS STRING)) AS edge_id",
+        f"{tgt['event_time']} AS event_time",
+        f"{label} AS edge_label",
+        f"map({_props(b)}, 'transition', {label}) AS edge_properties",
+        f"{vstruct(src)} AS source",
+        f"{vstruct(tgt)} AS target",
     ]
 
 
 def transcript_vertices(t: DataFrame) -> DataFrame:
     """Every turn as a vertex (raw turns in, VERTEX_SCHEMA out)."""
-    return slim_turns(t).select(*vertex_columns())
+    return slim_turns(t).selectExpr(*vertex_columns())
 
 
 def transcript_triples(t: DataFrame) -> DataFrame:
@@ -199,11 +199,10 @@ def transcript_triples(t: DataFrame) -> DataFrame:
     Catalyst prunes the rest (unread ``lead()`` columns included). Batch
     form — the streaming form uses a watermarked self-join
     (streaming/binding.py)."""
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    cols = ("turn_idx", "role", "tool", "ts", "text_len")
-    leads = [F.lead(c).over(w).alias(f"n_{c}") for c in cols]
-    nxt = slim_turns(t).select("*", *leads).where(F.col("n_turn_idx").isNotNull())
-    return nxt.select(*triple_columns("", "n_", conv_id="conv_id"))
+    w = "OVER (PARTITION BY conv_id ORDER BY turn_idx)"
+    leads = [f"lead({c}) {w} AS n_{c}" for c in ("turn_idx", "role", "tool", "ts", "text_len")]
+    nxt = slim_turns(t).selectExpr("*", *leads).where("n_turn_idx IS NOT NULL")
+    return nxt.selectExpr(*triple_columns("", "n_", conv_id="conv_id"))
 
 
 def transcript_graph_vertices(t: DataFrame) -> DataFrame:
@@ -216,12 +215,11 @@ def transcript_graph_vertices(t: DataFrame) -> DataFrame:
     queries, so each scans the turns and has its own
     ``Exchange hashpartitioning(conv_id)``, which carries ``text_len``
     rather than ``text``."""
-    w = Window.partitionBy("conv_id")
     return (
         slim_turns(t)
-        .withColumn("_conv_turns", F.count(F.lit(1)).over(w))
-        .where(F.col("_conv_turns") >= 2)
-        .select(*vertex_columns())
+        .selectExpr("*", "count(1) OVER (PARTITION BY conv_id) AS _conv_turns")
+        .where("_conv_turns >= 2")
+        .selectExpr(*vertex_columns())
     )
 
 

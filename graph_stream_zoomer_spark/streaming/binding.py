@@ -41,10 +41,10 @@ def _joined_successors(turns: DataFrame, watermark: str, max_turn_gap: str) -> D
     b = turns.withWatermark("ts", watermark).alias("b")
     return a.join(
         b,
-        (F.col("a.conv_id") == F.col("b.conv_id"))
-        & (F.col("b.turn_idx") == F.col("a.turn_idx") + 1)
-        & (F.col("b.ts") >= F.col("a.ts"))
-        & (F.col("b.ts") <= F.col("a.ts") + F.expr(f"INTERVAL {max_turn_gap}")),
+        F.expr(
+            "a.conv_id = b.conv_id AND b.turn_idx = a.turn_idx + 1"
+            f" AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL {max_turn_gap}"
+        ),
         "inner",
     )
 
@@ -77,13 +77,13 @@ def streaming_transcript_graph(
     wm = config.watermark_delay
     slim = slim_turns(turns)
     joined = _joined_successors(slim, wm, max_turn_gap)
-    triples = joined.select(*triple_columns("a.", "b."), "a.turn_idx")
-    targets = slim.withWatermark("ts", wm).where(F.col("turn_idx") >= 1)
+    triples = joined.selectExpr(*triple_columns("a.", "b."), "a.turn_idx")
+    targets = slim.withWatermark("ts", wm).where("turn_idx >= 1")
     return StreamGraph(
-        vertices=targets.select(*vertex_columns()),
+        vertices=targets.selectExpr(*vertex_columns()),
         edges=triple_edges(triples),
         config=config,
         triples=triples,
         elements_unique=True,
-        source_vertices=F.col("a.turn_idx") == 0,
+        source_vertices="a.turn_idx = 0",
     )

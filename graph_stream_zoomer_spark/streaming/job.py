@@ -27,6 +27,12 @@ from .sink import IdempotentParquetSink, ProgressListener
 TRANSCRIPT_DDL = (
     "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
 )
+# The query's checkpoint under ``out_root``, named by the layout of its
+# aggregation state. ``_checkpoints/summaries`` keyed fast-path edge
+# elements by per-edge super ids; Spark compares a resumed state key by
+# field types, not names, so it would resume one of a label-only grouping
+# (six string fields in both layouts) and misread its open windows.
+CHECKPOINT, EARLIER_CHECKPOINT = "_checkpoints/summaries-v2", "_checkpoints/summaries"
 
 
 @dataclass
@@ -80,6 +86,12 @@ def run_grouping_job(
             "the two-query streaming mode (unified=False) was removed; "
             "run_grouping_job always runs one unified query"
         )
+    if os.path.exists(os.path.join(out_root, EARLIER_CHECKPOINT)):
+        raise ValueError(
+            f"{out_root} holds a checkpoint in an earlier state layout ({EARLIER_CHECKPOINT}: "
+            "edge elements keyed by per-edge super ids), which this version does not resume. "
+            "Finish it with the version that wrote it, or use a fresh out_root."
+        )
     summaries = op.summaries(streaming_transcript_graph(turns, op.config, max_turn_gap))
 
     listener = ProgressListener()
@@ -88,7 +100,7 @@ def run_grouping_job(
     v_sink = IdempotentParquetSink(os.path.join(out_root, "vertices"))
     e_sink = IdempotentParquetSink(os.path.join(out_root, "edges"))
 
-    ckpt = os.path.join(out_root, "_checkpoints/summaries")
+    ckpt = os.path.join(out_root, CHECKPOINT)
     _refuse_stale_sink(v_sink.root, ckpt)
     _refuse_stale_sink(e_sink.root, ckpt)
 

@@ -219,6 +219,83 @@ def test_operator_is_closed_groupings_compose(graph):
     assert re_rows == di_rows and re_rows
 
 
+# property keys that a SQL template would misparse if it spliced them in
+# unquoted: a quote, a back-quote, a dot, a bracket, a keyword
+ODD_KEYS = {"tool": "it's]", "text_len": "text`len.v", "hour_bucket": "select"}
+
+
+@pytest.mark.parametrize("path", ["fast", "fast_dedup", "join"])
+def test_key_names_are_quoted_not_spliced(graph, path):
+    """Vertex, edge and aggregate keys whose names hold ``'``, `` ` ``,
+    ``.`` or ``]``, or are a SQL keyword, group exactly like plain names on
+    every path: the same rows, with the odd names as property keys."""
+    from dataclasses import replace
+
+    from graph_stream_zoomer_spark import StreamGraph
+    from graph_stream_zoomer_spark.model import triple_edges
+    from graph_stream_zoomer_spark.operators.aggregation import AggregateFunction
+
+    g, cfg = graph
+    pairs = [F.lit(x) for kv in ODD_KEYS.items() for x in kv]
+    plain_of = {k: k for k in ODD_KEYS} | {v: k for k, v in ODD_KEYS.items()}
+
+    def renamed(bag):
+        return F.transform_keys(bag, lambda k, _: F.coalesce(F.create_map(*pairs)[k], k))
+
+    def odd_graph():
+        triples = g.triples.select(
+            "edge_id", "event_time", "edge_label",
+            renamed(F.col("edge_properties")).alias("edge_properties"),
+            *[
+                F.col(side).withField("vertex_properties", renamed(F.col(f"{side}.vertex_properties")))
+                .alias(side)
+                for side in ("source", "target")
+            ],
+        )
+        vertices = g.vertices.withColumn("vertex_properties", renamed(F.col("vertex_properties")))
+        return StreamGraph(vertices, triple_edges(triples), cfg, triples, elements_unique=True)
+
+    def grouped(graph, names):
+        tool, text_len, hour = (names[k] for k in ("tool", "text_len", "hour_bucket"))
+        op = (
+            GroupingBuilder()
+            .add_vertex_grouping_keys([":label", tool, hour])
+            .add_vertex_aggregate_function(Count())
+            .add_vertex_aggregate_function(AvgProperty(text_len))
+            .add_vertex_aggregate_function(AggregateFunction("max", text_len, f"top {hour}`]"))
+            .add_edge_grouping_keys([":label", tool])
+            .add_edge_aggregate_function(SumProperty(text_len))
+            .set_window_config(cfg.window)
+            .set_config(cfg)
+            .build()
+        )
+        if path == "fast_dedup":
+            graph = StreamGraph.from_triples(graph.triples, cfg)
+        elif path == "join":
+            graph = replace(graph, triples=None)
+        out = graph.apply(op)
+        # the property keys each side emits, mapped to one naming
+        plain = {v: k for k, v in names.items()} | {
+            a.output_key: f"{a.kind}:{a.property_key and plain_of[a.property_key]}"
+            for a in op.vertex_aggs + op.edge_aggs
+        }
+        vertices = sorted(
+            (r.vertex_id, r.event_time, r.vertex_label,
+             sorted((plain[k], v) for k, v in r.vertex_properties.items()))
+            for r in out.vertices.collect()
+        )
+        edges = sorted(
+            (r.edge_id, r.edge_label, r.source_id, r.target_id, r.event_time,
+             sorted((plain[k], v) for k, v in r.edge_properties.items()))
+            for r in out.edges.collect()
+        )
+        return vertices, edges
+
+    expected = grouped(g, {k: k for k in ODD_KEYS})
+    assert expected[0] and expected[1]
+    assert grouped(odd_graph(), ODD_KEYS) == expected
+
+
 def test_driver_registry_contract():
     """The driver gates the first 50 queries() keys (r03 proved the window
     empirically). Contract: exactly 50 keys, oracle for every key, same

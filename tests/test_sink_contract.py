@@ -1,6 +1,7 @@
 """Contract tests that need no running stream (and no Iceberg jars):
-the generated MERGE statement, the lost-checkpoint sink guard, the removed
-two-query job mode, and the shared CEP interval grammar."""
+the generated MERGE statement, the lost-checkpoint sink guard, the
+earlier-state-layout guard, the removed two-query job mode, and the shared
+CEP interval grammar."""
 
 from __future__ import annotations
 
@@ -56,6 +57,16 @@ def test_stale_sink_guard(tmp_path):
     # committed sink + MISSING checkpoint (lost or moved) on an existing out_root
     with pytest.raises(ValueError, match="commit log"):
         _refuse_stale_sink(root, str(tmp_path / "_checkpoints/summaries"))
+
+
+def test_earlier_state_layout_is_refused(tmp_path):
+    """An out_root whose checkpoint keyed edge elements by per-edge super
+    ids is refused before any Spark object is touched: Spark checks only
+    the key's field types, which a label-only grouping leaves unchanged."""
+    out = tmp_path / "out"
+    os.makedirs(out / "_checkpoints" / "summaries")
+    with pytest.raises(ValueError, match="earlier state layout"):
+        run_grouping_job(None, None, None, str(out))
 
 
 def test_two_query_mode_is_refused(tmp_path):
