@@ -28,11 +28,18 @@ TRANSCRIPT_DDL = (
     "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
 )
 # The query's checkpoint under ``out_root``, named by the layout of its
-# aggregation state. ``_checkpoints/summaries`` keyed fast-path edge
-# elements by per-edge super ids; Spark compares a resumed state key by
-# field types, not names, so it would resume one of a label-only grouping
-# (six string fields in both layouts) and misread its open windows.
-CHECKPOINT, EARLIER_CHECKPOINT = "_checkpoints/summaries-v2", "_checkpoints/summaries"
+# state. ``_checkpoints/summaries`` keyed fast-path edge elements by
+# per-edge super ids: Spark compares a resumed state key by field types,
+# not names, so it would resume one of a label-only grouping and misread
+# it. ``_checkpoints/summaries-v2`` keyed the successor join by (conv_id,
+# turn_idx) where this version keys it by (conv_id, turn bucket); Spark
+# fails that resume mid-query (int key field vs bigint), later and vaguer
+# than the refusal in ``run_grouping_job``.
+CHECKPOINT = "_checkpoints/summaries-v3"
+EARLIER_CHECKPOINTS = {
+    "_checkpoints/summaries-v2": "a successor join keyed by (conv_id, turn_idx)",
+    "_checkpoints/summaries": "edge elements keyed by per-edge super ids",
+}
 
 
 @dataclass
@@ -86,12 +93,13 @@ def run_grouping_job(
             "the two-query streaming mode (unified=False) was removed; "
             "run_grouping_job always runs one unified query"
         )
-    if os.path.exists(os.path.join(out_root, EARLIER_CHECKPOINT)):
-        raise ValueError(
-            f"{out_root} holds a checkpoint in an earlier state layout ({EARLIER_CHECKPOINT}: "
-            "edge elements keyed by per-edge super ids), which this version does not resume. "
-            "Finish it with the version that wrote it, or use a fresh out_root."
-        )
+    for earlier, layout in EARLIER_CHECKPOINTS.items():
+        if os.path.exists(os.path.join(out_root, earlier)):
+            raise ValueError(
+                f"{out_root} holds a checkpoint in an earlier state layout ({earlier}: "
+                f"{layout}), which this version does not resume. "
+                "Finish it with the version that wrote it, or use a fresh out_root."
+            )
     summaries = op.summaries(streaming_transcript_graph(turns, op.config, max_turn_gap))
 
     listener = ProgressListener()
@@ -125,7 +133,9 @@ def run_grouping_job(
     q = w.start()
     if available_now:
         q.awaitTermination()
-    listener.detach(spark)
+        listener.wait_terminated(str(q.runId))
+        # only an ended query's listener is detached; a running one keeps it
+        listener.detach(spark)
     return StreamingJobResult(vertex_sink=v_sink, edge_sink=e_sink, listener=listener)
 
 

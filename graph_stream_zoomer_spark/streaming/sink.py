@@ -33,6 +33,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import time
 from dataclasses import dataclass, field
 
@@ -225,6 +226,8 @@ class ProgressListener:
 
     def __init__(self) -> None:
         self.progress: list[dict] = []
+        self._terminated: set[str] = set()
+        self._cv = threading.Condition()
 
     def attach(self, spark: SparkSession) -> None:
         from pyspark.sql.streaming import StreamingQueryListener
@@ -259,6 +262,18 @@ class ProgressListener:
                                 "memory_bytes": getattr(
                                     so, "memoryUsedBytes", None
                                 ),
+                                # what saving the state cost this batch
+                                # (task time summed over store instances)
+                                # and what the watermark dropped
+                                **{
+                                    f: getattr(so, f, None)
+                                    for f in (
+                                        "commitTimeMs",
+                                        "allUpdatesTimeMs",
+                                        "allRemovalsTimeMs",
+                                        "numRowsDroppedByWatermark",
+                                    )
+                                },
                             }
                             for so in p.stateOperators
                         ],
@@ -282,7 +297,9 @@ class ProgressListener:
                 )
 
             def onQueryTerminated(self, event):
-                pass
+                with outer._cv:
+                    outer._terminated.add(str(event.runId))
+                    outer._cv.notify_all()
 
             def onQueryIdle(self, event):
                 pass
@@ -290,24 +307,45 @@ class ProgressListener:
         self._listener = _L()
         spark.streams.addListener(self._listener)
 
+    def wait_terminated(self, run_id: str, timeout_s: float = 60.0) -> None:
+        """Block until query ``run_id``'s end has been delivered. Listener
+        events arrive asynchronously, after ``awaitTermination`` returns;
+        detaching before the end event drops the last progress events."""
+        with self._cv:
+            if not self._cv.wait_for(lambda: run_id in self._terminated, timeout_s):
+                raise TimeoutError(f"the end of streaming query {run_id} was not reported")
+
     def detach(self, spark: SparkSession) -> None:
         spark.streams.removeListener(self._listener)
 
     def state_summary(self) -> dict[str, dict]:
-        """Peak per-operator state footprint across the run: {operator:
-        {peak_rows, peak_bytes, batches}} — the number you watch when
-        deciding state-store backend (heap vs RocksDB) and validating
-        that state carries only the columns it should."""
+        """Peak per-operator state footprint and cost across the run:
+        {operator: {peak_rows, peak_bytes, peak_commit_ms,
+        rows_dropped_by_watermark, batches}} — the numbers you watch when
+        deciding state-store backend (heap vs RocksDB), validating that
+        state carries only the columns it should, and counting what the
+        watermark dropped."""
         out: dict[str, dict] = {}
         for batch in self.progress:
             for so in batch.get("state_detail", []):
                 name = so["operator"] or "unknown"
                 cur = out.setdefault(
-                    name, {"peak_rows": 0, "peak_bytes": 0, "batches": 0}
+                    name,
+                    {
+                        "peak_rows": 0,
+                        "peak_bytes": 0,
+                        "peak_commit_ms": 0,
+                        "rows_dropped_by_watermark": 0,
+                        "batches": 0,
+                    },
                 )
                 cur["batches"] += 1
-                if so["rows_total"] is not None:
-                    cur["peak_rows"] = max(cur["peak_rows"], so["rows_total"])
-                if so["memory_bytes"] is not None:
-                    cur["peak_bytes"] = max(cur["peak_bytes"], so["memory_bytes"])
+                for peak, key in (
+                    ("peak_rows", "rows_total"),
+                    ("peak_bytes", "memory_bytes"),
+                    ("peak_commit_ms", "commitTimeMs"),
+                ):
+                    if so.get(key) is not None:
+                        cur[peak] = max(cur[peak], so[key])
+                cur["rows_dropped_by_watermark"] += so.get("numRowsDroppedByWatermark") or 0
         return out

@@ -451,3 +451,14 @@ def test_streaming_job_plan_shape(spark, tmp_path, monkeypatch):
     keys = [re.sub(r"#\d+", "", k) for k in re.findall(r"StateStoreSave \[([^\]]*)\]", plan)]
     expected = "window-T10000ms, kind, vertex_label, source_vertex_label, target_vertex_label, edge_label"
     assert keys == [expected], keys
+    # the successor join is keyed by conversation and 16-turn bucket, never
+    # by turn: adjacency stays a residual condition, so each buffered turn
+    # costs one value, not one more key
+    (join,) = re.findall(r"StreamingSymmetricHashJoin \[([^\]]*)\], \[([^\]]*)\]", plan)
+    left, right = (re.sub(r"#\d+", "", k) for k in join)
+    assert left == "conv_id, (cast((turn_idx + 1) as bigint) div 16)", left
+    assert right == "conv_id, (cast(turn_idx as bigint) div 16)", right
+    assert re.search(r"\(\(turn_idx#\d+ - turn_idx#\d+\) = 1\)", plan), plan[:5000]
+    # the successor side reads turns 1.. only (a turn 0 is nobody's successor)
+    b_turn = re.search(r"turn_idx#\d+", join[1]).group(0)
+    assert re.search(rf"Filter .*\({b_turn} >= 1\)", plan), (b_turn, plan[:5000])

@@ -59,12 +59,15 @@ def test_stale_sink_guard(tmp_path):
         _refuse_stale_sink(root, str(tmp_path / "_checkpoints/summaries"))
 
 
-def test_earlier_state_layout_is_refused(tmp_path):
-    """An out_root whose checkpoint keyed edge elements by per-edge super
-    ids is refused before any Spark object is touched: Spark checks only
-    the key's field types, which a label-only grouping leaves unchanged."""
+@pytest.mark.parametrize("earlier", ["summaries-v2", "summaries"])
+def test_earlier_state_layout_is_refused(tmp_path, earlier):
+    """An out_root whose checkpoint holds an earlier state layout (v2: the
+    successor join keyed by turn; the first: edge elements keyed by per-edge
+    super ids) is refused before any Spark object is touched. Spark alone
+    would resume the first silently (it compares key field types only) and
+    fail the second mid-query."""
     out = tmp_path / "out"
-    os.makedirs(out / "_checkpoints" / "summaries")
+    os.makedirs(out / "_checkpoints" / earlier)
     with pytest.raises(ValueError, match="earlier state layout"):
         run_grouping_job(None, None, None, str(out))
 

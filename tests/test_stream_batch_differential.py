@@ -28,7 +28,10 @@ from graph_stream_zoomer_spark import (
     AvgProperty, Count, MaxProperty, MinProperty, StreamGraphConfig, WindowConfig,
 )
 from graph_stream_zoomer_spark.operators.grouping import GroupingBuilder
-from graph_stream_zoomer_spark.sources.transcripts import generate_transcripts, transcript_graph
+from graph_stream_zoomer_spark.sources.transcripts import (
+    BASE_EPOCH, generate_transcripts, transcript_graph,
+)
+from graph_stream_zoomer_spark.streaming.binding import TURN_BUCKET
 from graph_stream_zoomer_spark.streaming.job import read_transcript_stream, run_grouping_job
 
 N_CHUNKS = 3
@@ -165,3 +168,55 @@ def test_streaming_job_equals_batch_execute(spark, tmp_path, window, keyed):
     assert sorted(got_v) == sorted(exp_v)
     assert sorted(got_e) == sorted(exp_e)
     assert len(exp_v) > 10 and len(exp_e) > 10
+
+
+def test_long_conversation_crosses_join_buckets(spark, tmp_path):
+    """The successor join is keyed by (conv_id, turn bucket of 16): a turn
+    t pairs with t + 1 through the bucket of t + 1, so the pairs 15→16,
+    31→32, … cross into the next bucket. One conversation of 420 turns 8 s
+    apart (56 minutes, inside the join's one-hour bound) sits among
+    generated conversations; its roles name the turn's place in its bucket,
+    so the edge label ``b15->b0`` counts exactly the bucket-crossing pairs.
+    The chunks are cut inside that conversation and the job restarts on
+    its checkpoint between them; the committed rows equal batch
+    ``execute()``."""
+    n_long, start = 420, BASE_EPOCH + 43_200
+    long_conv = pa.Table.from_pylist(
+        [
+            {"conv_id": "long", "turn_idx": i, "role": f"b{i % TURN_BUCKET}", "text": "x" * (1 + i % 37),
+             "tool": "", "ts": datetime.fromtimestamp(start + 8 * i, timezone.utc)}
+            for i in range(n_long)
+        ],
+        schema=TURNS_SCHEMA,
+    )
+    generated = generate_transcripts(spark, 30, late_fraction_pct=0)
+    table = pa.concat_tables([
+        pa.Table.from_pandas(generated.toPandas(), preserve_index=False).cast(TURNS_SCHEMA), long_conv,
+    ]).sort_by([("ts", "ascending"), ("conv_id", "ascending")])
+    turns = spark.createDataFrame(table.to_pandas(), generated.schema)
+    # cut at the long conversation's turns 100 and 250
+    ts = table.column("ts").to_pylist()
+    cuts = [0, *(ts.index(long_conv.column("ts")[i].as_py()) for i in (100, 250)), table.num_rows]
+    chunks = [table.slice(a, b - a) for a, b in zip(cuts, cuts[1:])] + [SENTINEL]
+
+    d, out_root = str(tmp_path / "turns"), str(tmp_path / "out")
+    os.makedirs(d)
+    mtime0 = int(time.time()) - 3600
+    op = _op(TUMBLING)
+
+    def drain():
+        stream = read_transcript_stream(spark, d, max_files_per_trigger=1)
+        return run_grouping_job(spark, stream, op, out_root)
+
+    _write_chunks(chunks[:1], d, 0, mtime0)
+    drain()
+    _write_chunks(chunks[1:], d, 1, mtime0)
+    result = drain()
+
+    exp_v, exp_e = _batch_rows(turns, op)
+    got_v, got_e = _sink_rows(spark, result, op)
+    assert len(got_v) == len(set(got_v)) and len(got_e) == len(set(got_e))  # exactly once
+    assert sorted(got_v) == sorted(exp_v)
+    assert sorted(got_e) == sorted(exp_e)
+    crossings = sum(dict(e[2])["count"] for e in got_e if e[1] == f"b{TURN_BUCKET - 1}->b0")
+    assert crossings == (n_long - 1) // TURN_BUCKET, got_e

@@ -102,6 +102,18 @@ def test_streaming_matches_batch(spark, tmp_path, turns_dir):
     assert summary, result.listener.progress[:2]
     assert all(v["batches"] >= 1 for v in summary.values())
     assert any(v["peak_rows"] > 0 for v in summary.values()), summary
+    # what saving the state cost and what the watermark dropped, per batch
+    # and operator; the fixture has no late rows, so nothing is dropped
+    cost = ("commitTimeMs", "allUpdatesTimeMs", "allRemovalsTimeMs", "numRowsDroppedByWatermark")
+    details = [so for p in result.listener.progress for so in p["state_detail"]]
+    assert details and all(
+        isinstance(so[f], int) and so[f] >= 0 for so in details for f in cost
+    ), details[:2]
+    assert all(
+        v["peak_commit_ms"] == max(so["commitTimeMs"] for so in details if so["operator"] == op)
+        and v["rows_dropped_by_watermark"] == 0
+        for op, v in summary.items()
+    ), summary
     # per-partition source lineage: each progress event records its
     # sources' committed offset ranges (the resume-evidence trail)
     assert any(
@@ -188,6 +200,9 @@ def test_late_rows_dropped(spark, tmp_path):
     assert all(v == 1 for v in got.values())
     labels = {k[0] for k in got}
     assert labels == {"user", "assistant"}
+    # and the drop is counted, not silent
+    dropped = r2.listener.state_summary()
+    assert sum(v["rows_dropped_by_watermark"] for v in dropped.values()) >= 1, dropped
 
 
 def test_turn0_vertex_needs_its_successor_edge(spark, tmp_path):
