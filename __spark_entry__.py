@@ -27,7 +27,8 @@ from graph_stream_zoomer_spark import (
     WindowConfig,
 )
 from graph_stream_zoomer_spark.operators.grouping import GroupingBuilder
-from graph_stream_zoomer_spark.sources.events_binding import events_graph, load_events
+from graph_stream_zoomer_spark.sources.events_binding import events_to_transcripts, load_events
+from graph_stream_zoomer_spark.sources.transcripts import transcript_graph
 
 # ---------------------------------------------------------------------------
 # shared SQL fragments (events → transcripts → deduped vertex stream)
@@ -64,14 +65,17 @@ def _win_end_s(ts_expr: str) -> str:
 
 
 def _cfg(**kw) -> StreamGraphConfig:
-    kw.setdefault("id_hash", "sha256")
     kw.setdefault("window", WindowConfig.tumbling(_WIN_S, "SECONDS"))
     return StreamGraphConfig(**kw)
 
 
+def events_to_transcripts_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return events_to_transcripts(load_events(spark, sf_dir))
+
+
 def _grouped_vertices(spark: SparkSession, sf_dir: str, cfg: StreamGraphConfig,
                       keys: list[str], aggs: list) -> DataFrame:
-    g = events_graph(load_events(spark, sf_dir), cfg)
+    g = transcript_graph(events_to_transcripts_df(spark, sf_dir), cfg)
     op = (
         GroupingBuilder()
         .add_vertex_grouping_keys(keys)
@@ -224,7 +228,7 @@ FROM v GROUP BY 1, 2
 
 def q_graph_group_edge_transition(spark: SparkSession, sf_dir: str) -> DataFrame:
     cfg = _cfg()
-    g = events_graph(load_events(spark, sf_dir), cfg)
+    g = transcript_graph(events_to_transcripts_df(spark, sf_dir), cfg)
     op = (
         GroupingBuilder()
         .add_edge_grouping_key(":label")
@@ -264,9 +268,8 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     from graph_stream_zoomer_spark.operators.pagerank import pagerank_exact
-    from graph_stream_zoomer_spark.sources.events_binding import events_to_transcripts
 
-    t = events_to_transcripts(load_events(spark, sf_dir))
+    t = events_to_transcripts_df(spark, sf_dir)
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
     pairs = t.select(
         "role", F.lead("role").over(w).alias("n_role")
@@ -325,9 +328,8 @@ def q_graph_structure(spark: SparkSession, sf_dir: str) -> DataFrame:
         degree_stats,
         triangle_counts,
     )
-    from graph_stream_zoomer_spark.sources.events_binding import events_to_transcripts
 
-    t = events_to_transcripts(load_events(spark, sf_dir))
+    t = events_to_transcripts_df(spark, sf_dir)
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
     pairs = t.select("role", F.lead("role").over(w).alias("n_role")).where(
         F.col("n_role").isNotNull()
@@ -437,12 +439,6 @@ def q_graph_group_window_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_to_transcripts_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from graph_stream_zoomer_spark.sources.events_binding import events_to_transcripts
-
-    return events_to_transcripts(load_events(spark, sf_dir))
-
-
 _WINDOW_USERS_SQL = f"""
 WITH t AS (
   SELECT CAST(user_id AS VARCHAR) AS conv_id, ts FROM events
@@ -510,7 +506,7 @@ FROM a GROUP BY 1, 2
 
 def q_graph_group_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     cfg = _cfg(window=WindowConfig.session(600, "SECONDS"))
-    g = events_graph(load_events(spark, sf_dir), cfg)
+    g = transcript_graph(events_to_transcripts_df(spark, sf_dir), cfg)
     op = (
         GroupingBuilder()
         .add_vertex_grouping_key(":label")
@@ -566,7 +562,7 @@ def q_graph_triples_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (model/graph/StreamGraph.java:170-226) — validates the stream-stream
     summary join shape against a plain SQL reconstruction."""
     cfg = _cfg()
-    g = events_graph(load_events(spark, sf_dir), cfg)
+    g = transcript_graph(events_to_transcripts_df(spark, sf_dir), cfg)
     op = (
         GroupingBuilder()
         .add_vertex_grouping_key(":label")
@@ -614,9 +610,8 @@ def q_cep_sequence_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CEP: consecutive click->purchase runs per user timeline (sequence
     pattern over the events-as-transcripts binding; operators/cep.py)."""
     from graph_stream_zoomer_spark.operators.cep import match_sequence
-    from graph_stream_zoomer_spark.sources.events_binding import events_to_transcripts
 
-    t = events_to_transcripts(load_events(spark, sf_dir))
+    t = events_to_transcripts_df(spark, sf_dir)
     return match_sequence(t, ["click", "purchase"], within="30 days")
 
 
@@ -644,9 +639,8 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-sequence packing (operators/packing.py): token-offset
     chunking of each user timeline into 64-token packs, one window pass."""
     from graph_stream_zoomer_spark.operators.packing import pack_sequences
-    from graph_stream_zoomer_spark.sources.events_binding import events_to_transcripts
 
-    t = events_to_transcripts(load_events(spark, sf_dir))
+    t = events_to_transcripts_df(spark, sf_dir)
     return pack_sequences(t, 64).select(
         "conv_id", "turn_idx", "n_tokens", "tok_offset", "pack_idx"
     )
@@ -856,9 +850,8 @@ def q_cep_followed_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     NEXT purchase in the same user timeline (any gap) within 30 days, with
     no error event strictly between (operators/cep.py match_followed_by)."""
     from graph_stream_zoomer_spark.operators.cep import match_followed_by
-    from graph_stream_zoomer_spark.sources.events_binding import events_to_transcripts
 
-    t = events_to_transcripts(load_events(spark, sf_dir))
+    t = events_to_transcripts_df(spark, sf_dir)
     return match_followed_by(t, "click", "purchase", within="30 days", not_between="error")
 
 
@@ -1082,9 +1075,8 @@ def q_asof_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT JOIN. The right side is pre-aggregated to one row per
     (conv_id, ts) so tie semantics are engine-independent."""
     from graph_stream_zoomer_spark.operators.asof import asof_join
-    from graph_stream_zoomer_spark.sources.events_binding import events_to_transcripts
 
-    t = events_to_transcripts(load_events(spark, sf_dir))
+    t = events_to_transcripts_df(spark, sf_dir)
     left = t.where(F.col("role") == "purchase").select("conv_id", "turn_idx", "ts")
     right = (
         t.where(F.col("role") == "click")

@@ -85,11 +85,11 @@ class StreamGraphConfig:
 
     - ``watermark_delay``: bounded out-of-orderness; reference hard-wires
       10 s in the table schemas (``model/table/TableSet.java:151,168``).
-    - ``id_hash``: 'sha1' for reference parity (CreateSuperElementId,
-      ``impl/functions/utils/CreateSuperElementId.java:27-47``) or
-      'sha256' (used by the DuckDB-oracle harness, which lacks sha1).
+    - ``window``: the grouping window ``StreamGraph.group_by`` uses.
+
+    Super ids are always sha1, as the reference's CreateSuperElementId
+    (``impl/functions/utils/CreateSuperElementId.java:27-47``) hashes them.
     """
 
     watermark_delay: str = "10 seconds"
-    id_hash: str = "sha1"
     window: WindowConfig = field(default_factory=WindowConfig)

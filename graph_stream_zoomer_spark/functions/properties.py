@@ -49,19 +49,14 @@ def extract_property(bag: str, key: str) -> str:
     return f"{bag}.{quote(key)}"
 
 
-def super_element_id(fields: Sequence[str], algo: str = "sha1") -> str:
-    """P5: deterministic group id = hex hash of grouping values joined by '.'.
+def super_element_id(fields: Sequence[str]) -> str:
+    """P5: deterministic group id = sha1 hex of grouping values joined by
+    '.', as the reference hashes them.
 
     ``concat_ws`` skips NULLs exactly like the reference's StringJoiner loop
     (CreateSuperElementId.java:38-44 skips null fields entirely).
-    ``algo``: 'sha1' (reference parity) or 'sha256' (DuckDB-oracle friendly).
     """
-    joined = f"concat_ws('.', {', '.join(fields)})"
-    if algo == "sha1":
-        return f"sha1({joined})"
-    if algo == "sha256":
-        return f"sha2({joined}, 256)"
-    raise ValueError(f"unknown id hash {algo!r}")
+    return f"sha1(concat_ws('.', {', '.join(fields)}))"
 
 
 def fold_properties(pairs: Sequence[tuple[str, str]]) -> str:

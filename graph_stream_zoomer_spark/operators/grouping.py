@@ -259,7 +259,7 @@ class GraphStreamGrouping:
         super-edge's endpoint values (``source_``/``target_``), hashed with
         the rowtime of the edge's window."""
         fields = [f"{prefix}{c}" for c in self._vertex_values()]
-        return super_element_id([*fields, self._rowtime_ms(rowtime)], self.config.id_hash)
+        return super_element_id([*fields, self._rowtime_ms(rowtime)])
 
     def _edge_super_id(self, source: str, target: str, rowtime: str) -> str:
         """src + tgt + [label?] + grouping values + rowtime. The reference
@@ -267,7 +267,7 @@ class GraphStreamGrouping:
         flag as buggy (LabelGroupSizeAggTest.java:25)."""
         fields = [source, target] + (["edge_label"] if self.use_edge_labels else [])
         fields += [self._egk(i) for i in range(len(self.edge_grouping_keys))]
-        return super_element_id([*fields, self._rowtime_ms(rowtime)], self.config.id_hash)
+        return super_element_id([*fields, self._rowtime_ms(rowtime)])
 
     def _assign_window(self, rows: DataFrame, cols) -> DataFrame:
         """Element rows (``kind``, ``event_time`` and ``cols``) as windowed
@@ -386,8 +386,8 @@ class GraphStreamGrouping:
         # (session window, group); broadcast it so the session path never
         # shuffles the raw vertex stream against a tiny summary (the
         # null-safe+containment condition would otherwise fall back to a
-        # shuffled BNLJ). Batch-only path: over a stream, session windows
-        # are grouped (stages 1, 3 and 4) but not expanded.
+        # shuffled BNLJ). Over a stream, ``run_grouping_job`` expands
+        # session windows with this same join, as a stream-stream join.
         return enhanced.join(F.broadcast(g), cond, "inner").select(
             enhanced["vertex_id"], g["window"], g["super_vertex_id"]
         )

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..streaming.job import TRANSCRIPT_DDL
+from .transcripts import TRANSCRIPT_DDL
 
 _MAP_AS_JSON = "to_json(%s) as %s"
 

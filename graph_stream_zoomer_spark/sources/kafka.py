@@ -22,9 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-TRANSCRIPT_DDL = (
-    "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-)
+from .transcripts import TRANSCRIPT_DDL
 
 #: Kafka's fixed source schema (what ``format("kafka").load()`` yields).
 KAFKA_RECORD_DDL = (

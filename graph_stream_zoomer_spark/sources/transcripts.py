@@ -1,9 +1,9 @@
 """Transcript input binding (BASELINE.json input_hint) + deterministic
 synthetic transcript generator.
 
-Input table shape: ``(conv_id:string, turn_idx:int, role:string,
-text:string, tool:string, ts:timestamp)`` — an Iceberg table in production,
-parquet in this sandbox (see sources/iceberg.py for the gated adapter).
+Input table shape (``TRANSCRIPT_DDL``): ``(conv_id:string, turn_idx:int,
+role:string, text:string, tool:string, ts:timestamp)`` — an Iceberg table or
+a parquet directory (``streaming/job.py:read_transcript_stream``).
 
 Graph binding (SURVEY.md §1.4): vertex = turn, edge = successor edge between
 consecutive turns of one conversation; each successor edge plus its two
@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import StreamGraphConfig
+from ..functions.properties import quote, text as sql_text
 from ..model import VERTEX_SCHEMA, VERTEX_STRUCT, StreamGraph, triple_edges
 
 FILLER = "the quick brown fox jumps over the lazy dog and then it stops to think "
@@ -116,6 +117,17 @@ def generate_transcripts(
 # transcript → property-graph binding: one spec for batch and streaming
 # ---------------------------------------------------------------------------
 
+#: The transcript input table (BASELINE.json input_hint): what the streaming
+#: job's file source, the CSV source and the Kafka value parser read.
+TRANSCRIPT_DDL = (
+    "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+)
+
+# Turn columns the graph reads structurally: the vertex id, label and time
+# (``text`` only through its length). Every other turn column is a property.
+_STRUCTURAL = ("conv_id", "turn_idx", "role", "ts")
+
+
 def slim_turns(t: DataFrame) -> DataFrame:
     """The turn columns the graph is built from, projected BEFORE any
     ``conv_id`` exchange, analytic window or state store: the raw ``text``
@@ -123,27 +135,34 @@ def slim_turns(t: DataFrame) -> DataFrame:
     properties. Catalyst does not push ``length(text)`` below a window or
     a stream-stream join, so without this projection the batch ``count()``
     and ``lead()`` windows shuffle every turn's text, and the streaming
-    successor join serializes it into its state store per micro-batch."""
-    return t.selectExpr("conv_id", "turn_idx", "role", "tool", "ts", "length(text) AS text_len")
+    successor join serializes it into its state store per micro-batch.
+    Turn columns beyond the transcript's own (say ``value_c`` of the
+    ``events`` table, sources/events_binding.py) ride along as properties."""
+    rest = [quote(c) for c in t.columns if c not in (*_STRUCTURAL, "text")]
+    return t.selectExpr("conv_id", "turn_idx", "role", *rest, "ts", "length(text) AS text_len")
 
 
 # The binding is written as SQL expression templates over the slim turn
-# columns named ``{p}<column>``: ``""``/``"n_"`` over the batch ``lead()``,
-# ``"a."``/``"b."`` over the streaming join. One ``selectExpr`` of them is a
-# handful of py4j calls, where the same columns built with ``Column``
-# methods took hundreds (see functions/properties.py).
+# columns (``cols``, the slim frame's) named ``{p}<column>``: ``""``/``"n_"``
+# over the batch ``lead()``, ``"a."``/``"b."`` over the streaming join. One
+# ``selectExpr`` of them is a handful of py4j calls, where the same columns
+# built with ``Column`` methods took hundreds (see functions/properties.py).
 
 
-def _props(p: str) -> str:
-    """Key/value entries of a turn's property bag: tool, text_len and the
-    hour bucket of its time."""
-    return (
-        f"'tool', {p}tool, 'text_len', CAST({p}text_len AS STRING), "
-        f"'hour_bucket', date_format({p}ts, 'yyyy-MM-dd HH')"
-    )
+def _col(p: str, c: str) -> str:
+    """Slim column ``c`` of the turn named ``{p}<column>``, quoted."""
+    return p + quote(c) if p.endswith(".") else quote(p + c)
 
 
-def _turn_vertex(p: str, conv_id: str | None = None) -> dict[str, str]:
+def _props(p: str, cols: list[str]) -> str:
+    """Key/value entries of a turn's property bag: each slim column outside
+    ``_STRUCTURAL`` as a string under its own name (``tool`` and
+    ``text_len`` of a transcript), and the hour bucket of its time."""
+    entries = [f"{sql_text(c)}, CAST({_col(p, c)} AS STRING)" for c in cols if c not in _STRUCTURAL]
+    return ", ".join([*entries, f"'hour_bucket', date_format({p}ts, 'yyyy-MM-dd HH')"])
+
+
+def _turn_vertex(p: str, cols: list[str], conv_id: str | None = None) -> dict[str, str]:
     """The vertex of the turn whose slim columns are named ``{p}<column>``;
     ``conv_id`` names its conversation column when the prefix has none.
     vertex_id = conv_id:turn_idx, label = role (SURVEY.md §1.4). The bag is
@@ -154,21 +173,21 @@ def _turn_vertex(p: str, conv_id: str | None = None) -> dict[str, str]:
         "vertex_id": f"concat_ws(':', {conv_id or p + 'conv_id'}, CAST({p}turn_idx AS STRING))",
         "event_time": f"{p}ts",
         "vertex_label": f"{p}role",
-        "vertex_properties": f"map({_props(p)})",
+        "vertex_properties": f"map({_props(p, cols)})",
     }
 
 
-def vertex_columns(p: str = "") -> list[str]:
+def vertex_columns(cols: list[str], p: str = "") -> list[str]:
     """The turn's vertex as VERTEX_SCHEMA columns (see ``_turn_vertex``)."""
-    v = _turn_vertex(p)
+    v = _turn_vertex(p, cols)
     return [f"{v[f]} AS {f}" for f in VERTEX_SCHEMA.fieldNames()]
 
 
-def triple_columns(a: str, b: str, conv_id: str | None = None) -> list[str]:
+def triple_columns(cols: list[str], a: str, b: str, conv_id: str | None = None) -> list[str]:
     """The successor edge a → b with both endpoint vertices as
     TRIPLE_SCHEMA columns. The edge takes b's time, its label is the role
     transition, and its bag is b's bag plus ``transition``."""
-    src, tgt = _turn_vertex(a), _turn_vertex(b, conv_id)
+    src, tgt = _turn_vertex(a, cols), _turn_vertex(b, cols, conv_id)
     label = f"concat_ws('->', {a}role, {b}role)"
 
     def vstruct(v: dict[str, str]) -> str:
@@ -178,7 +197,7 @@ def triple_columns(a: str, b: str, conv_id: str | None = None) -> list[str]:
         f"concat({src['vertex_id']}, '->', CAST({b}turn_idx AS STRING)) AS edge_id",
         f"{tgt['event_time']} AS event_time",
         f"{label} AS edge_label",
-        f"map({_props(b)}, 'transition', {label}) AS edge_properties",
+        f"map({_props(b, cols)}, 'transition', {label}) AS edge_properties",
         f"{vstruct(src)} AS source",
         f"{vstruct(tgt)} AS target",
     ]
@@ -186,7 +205,8 @@ def triple_columns(a: str, b: str, conv_id: str | None = None) -> list[str]:
 
 def transcript_vertices(t: DataFrame) -> DataFrame:
     """Every turn as a vertex (raw turns in, VERTEX_SCHEMA out)."""
-    return slim_turns(t).selectExpr(*vertex_columns())
+    slim = slim_turns(t)
+    return slim.selectExpr(*vertex_columns(slim.columns))
 
 
 def transcript_triples(t: DataFrame) -> DataFrame:
@@ -199,10 +219,11 @@ def transcript_triples(t: DataFrame) -> DataFrame:
     Catalyst prunes the rest (unread ``lead()`` columns included). Batch
     form — the streaming form uses a watermarked self-join
     (streaming/binding.py)."""
+    slim = slim_turns(t)
     w = "OVER (PARTITION BY conv_id ORDER BY turn_idx)"
-    leads = [f"lead({c}) {w} AS n_{c}" for c in ("turn_idx", "role", "tool", "ts", "text_len")]
-    nxt = slim_turns(t).selectExpr("*", *leads).where("n_turn_idx IS NOT NULL")
-    return nxt.selectExpr(*triple_columns("", "n_", conv_id="conv_id"))
+    leads = [f"lead({quote(c)}) {w} AS {quote('n_' + c)}" for c in slim.columns if c != "conv_id"]
+    nxt = slim.selectExpr("*", *leads).where("n_turn_idx IS NOT NULL")
+    return nxt.selectExpr(*triple_columns(slim.columns, "", "n_", conv_id="conv_id"))
 
 
 def transcript_graph_vertices(t: DataFrame) -> DataFrame:
@@ -215,11 +236,11 @@ def transcript_graph_vertices(t: DataFrame) -> DataFrame:
     queries, so each scans the turns and has its own
     ``Exchange hashpartitioning(conv_id)``, which carries ``text_len``
     rather than ``text``."""
+    slim = slim_turns(t)
     return (
-        slim_turns(t)
-        .selectExpr("*", "count(1) OVER (PARTITION BY conv_id) AS _conv_turns")
+        slim.selectExpr("*", "count(1) OVER (PARTITION BY conv_id) AS _conv_turns")
         .where("_conv_turns >= 2")
-        .selectExpr(*vertex_columns())
+        .selectExpr(*vertex_columns(slim.columns))
     )
 
 

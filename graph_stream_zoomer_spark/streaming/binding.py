@@ -108,10 +108,10 @@ def streaming_transcript_graph(
     wm = config.watermark_delay
     slim = slim_turns(turns)
     joined = _joined_successors(slim, wm, max_turn_gap)
-    triples = joined.selectExpr(*triple_columns("a.", "b."), "a.turn_idx")
+    triples = joined.selectExpr(*triple_columns(slim.columns, "a.", "b."), "a.turn_idx")
     targets = slim.withWatermark("ts", wm).where("turn_idx >= 1")
     return StreamGraph(
-        vertices=targets.selectExpr(*vertex_columns()),
+        vertices=targets.selectExpr(*vertex_columns(slim.columns)),
         edges=triple_edges(triples),
         config=config,
         triples=triples,

@@ -21,12 +21,10 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.grouping import GraphStreamGrouping
+from ..sources.transcripts import TRANSCRIPT_DDL
 from .binding import streaming_transcript_graph
 from .sink import IdempotentParquetSink, ProgressListener
 
-TRANSCRIPT_DDL = (
-    "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-)
 # The query's checkpoint under ``out_root``, named by the layout of its
 # state. ``_checkpoints/summaries`` keyed fast-path edge elements by
 # per-edge super ids: Spark compares a resumed state key by field types,

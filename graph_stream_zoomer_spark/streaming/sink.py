@@ -57,7 +57,7 @@ class IdempotentParquetSink:
     path; identical exactly-once contract). A non-local root raises
     immediately rather than failing mid-stream."""
 
-    def __init__(self, root: str, key_cols: list[str] | None = None) -> None:
+    def __init__(self, root: str) -> None:
         scheme = root.split("://", 1)[0] if "://" in root else ""
         if scheme not in ("", "file"):
             raise ValueError(
@@ -73,7 +73,6 @@ class IdempotentParquetSink:
         self.lineage_dir = os.path.join(self.root, "_lineage")
         self.commits_path = os.path.join(self.lineage_dir, "commits.json")
         self.lineage_path = os.path.join(self.lineage_dir, "lineage.jsonl")
-        self.key_cols = key_cols
         os.makedirs(self.data_dir, exist_ok=True)
         os.makedirs(self.lineage_dir, exist_ok=True)
         self.metrics = SinkMetrics()

@@ -179,14 +179,16 @@ def test_output_composes(graph):
     assert set(sv) == {"A", "B"}
 
 
-def test_group_by_uses_graph_config(spark):
+def test_group_by_uses_graph_config(spark, monkeypatch):
     """``StreamGraph.group_by`` builds its operator with the graph's config,
-    not only its window: sha256 ids are 64 hex characters (sha1: 40)."""
-    g = StreamGraph.from_triples(fixture_triples(spark), StreamGraphConfig(id_hash="sha256"))
-    result = g.group_by([":label"], [Count()], [":label"], [Count()])
-    v_ids = {len(r["vertex_id"]) for r in result.vertices.collect()}
-    e_ids = {len(r["edge_id"]) for r in result.edges.collect()}
-    assert v_ids == {64} and e_ids == {64}
+    not only its window."""
+    cfg = StreamGraphConfig(watermark_delay="3 seconds", window=WindowConfig.tumbling(5, "SECONDS"))
+    g = StreamGraph.from_triples(fixture_triples(spark), cfg)
+    built = []
+    monkeypatch.setattr(StreamGraph, "apply", lambda self, op: built.append(op))
+    g.group_by([":label"], [Count()], [":label"], [Count()])
+    (op,) = built
+    assert op.config is g.config and op.window == cfg.window
 
 
 def test_to_triples_roundtrip(graph):

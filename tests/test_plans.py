@@ -328,6 +328,34 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _lead_window_input(plan) -> set[str]:
+    """Column names entering the one ``lead()`` window of a logical plan."""
+    nodes, windows = [plan], []
+    while nodes:
+        n = nodes.pop()
+        kids = n.children()
+        nodes += [kids.apply(i) for i in range(kids.size())]
+        if n.nodeName() == "Window" and "lead(" in n.toString():
+            windows.append(n)
+    assert len(windows) == 1, plan.toString()
+    out = windows[0].child().output()
+    return {out.apply(i).name() for i in range(out.size())}
+
+
+def test_gate_edge_row_binds_slim_turns(spark):
+    """The gate's edge row (``graph_group_edge_transition``) binds the
+    ``events`` table with the benchmark's transcript binding: its successor
+    ``lead()`` window is built over the slim turns, ``text_len`` in place
+    of the raw ``text`` (the events' ``props`` JSON), and what runs carries
+    neither."""
+    import __spark_entry__ as entry
+
+    qe = entry.q_graph_group_edge_transition(spark, SF_DIR)._jdf.queryExecution()
+    built = _lead_window_input(qe.analyzed())
+    assert built == {"conv_id", "turn_idx", "role", "tool", "value_c", "ts", "text_len"}, built
+    assert not {"text", "props"} & _lead_window_input(qe.optimizedPlan())
+
+
 def test_conversation_stats_two_exchange_combinable(spark):
     """Rollup = partial-agg → ONE conv_id exchange (+ one for the distinct
     pre-agg on (conv_id, role), itself map-side partial) — and zero Python."""

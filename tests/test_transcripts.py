@@ -4,13 +4,14 @@ input_hint: per-turn text equality under stable turn ordering)."""
 from __future__ import annotations
 
 from collections import defaultdict
-from datetime import timezone
+from datetime import datetime, timezone
 
 import pytest
 from pyspark.sql import functions as F
 
 from graph_stream_zoomer_spark import Count, AvgProperty, StreamGraphConfig, WindowConfig
 from graph_stream_zoomer_spark.operators.grouping import GroupingBuilder
+from graph_stream_zoomer_spark.sources.events_binding import events_to_transcripts
 from graph_stream_zoomer_spark.sources.transcripts import (
     generate_transcripts,
     transcript_graph,
@@ -153,6 +154,39 @@ def test_binding_values_match_python(transcripts):
     for got_rows, expected in zip(got, (vertices, edges, triples)):
         assert len(got_rows) == len(expected)
         assert _by_id(got_rows) == _by_id(expected)
+
+
+def test_property_bag_holds_every_extra_turn_column(spark, transcripts):
+    """The bag rule: a turn's bag holds ``text_len``, ``hour_bucket`` and
+    every turn column outside (conv_id, turn_idx, role, text, ts), as a
+    string under its own name. Six-column transcripts give exactly
+    {tool, text_len, hour_bucket} (edges add ``transition``); the
+    ``events`` table adds ``value_c``, on a vertex from its own turn and on an edge
+    from its target turn."""
+    keys = {"tool", "text_len", "hour_bucket"}
+    g = transcript_graph(transcripts)
+    assert {frozenset(r["vertex_properties"]) for r in g.vertices.collect()} == {frozenset(keys)}
+    assert {frozenset(r["edge_properties"]) for r in g.edges.collect()} == {
+        frozenset(keys | {"transition"})
+    }
+
+    events = spark.createDataFrame(
+        [
+            (0, datetime(2024, 1, 1, 0, 0, 0), 7, "view", 1.25, '{"k": 1}'),
+            (1, datetime(2024, 1, 1, 0, 1, 0), 7, "click", 2.5, '{"k": 22}'),
+            (2, datetime(2024, 1, 1, 0, 2, 0), 7, "purchase", 10.0, "{}"),
+            (3, datetime(2024, 1, 1, 0, 0, 30), 9, "view", 0.01, '{"k": 3}'),
+        ],
+        "event_id bigint, ts timestamp, user_id bigint, event_type string, value double, props string",
+    )
+    eg = transcript_graph(events_to_transcripts(events))
+    vertices = {r["vertex_id"]: r["vertex_properties"] for r in eg.vertices.collect()}
+    # user 9 has one event: no successor edge, so no vertex
+    assert {v: p["value_c"] for v, p in vertices.items()} == {"7:0": "125", "7:1": "250", "7:2": "1000"}
+    assert all(set(p) == keys | {"value_c"} for p in vertices.values())
+    edges = {r["edge_id"]: r["edge_properties"] for r in eg.edges.collect()}
+    assert {e: p["value_c"] for e, p in edges.items()} == {"7:0->1": "250", "7:1->2": "1000"}
+    assert all(set(p) == keys | {"value_c", "transition"} for p in edges.values())
 
 
 def test_absent_property_key_groups_as_null(transcripts):
